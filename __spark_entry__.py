@@ -11,71 +11,27 @@ the plans.REGISTRY maps names → (Spark builder, DuckDB oracle SQL).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 import financial_arbitrage_data_pipeline_spark.operators  # noqa: F401  (populates REGISTRY)
 from financial_arbitrage_data_pipeline_spark.plans import REGISTRY
+from financial_arbitrage_data_pipeline_spark.session import POSTURE
 
 SF0001 = "/root/testdata/sf0.001"
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply session-level settings the engine relies on (the driver may
-    hand us a vanilla session)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Apply the engine's session posture (the driver may hand us a
+    vanilla session)."""
+    for key, value in POSTURE.items():
+        spark.conf.set(key, value)
     # Runtime-settable; the driver's vanilla session defaults to 200, which
     # at sf<=0.1 just multiplies task/state-store overhead (esp. for the
     # streaming stateful operators — one state store per partition).
     n_cores = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(max(8, n_cores)))
-    # At sf<=0.1 whole shuffle stages fit in one 64 MB advisory partition,
-    # so AQE coalesces post-shuffle work (JSON parse, HOF extraction) onto
-    # ONE core. A 1 MB advisory keeps those stages parallel locally
-    # (~25-35% per-query); production clusters override via the same
-    # SPARK_GRAFT_ADVISORY_PARTITION knob session.py honors (or keep
-    # Spark's 64 MB default — full-scale stages don't need this).
-    spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "1m"),
-    )
-    # r13 engine posture, all runtime-settable and result-invariant
-    # (mirrors session.py; the driver hands us a vanilla session):
-    # - InferFiltersFromGenerate re-evaluates expensive derived generator
-    #   inputs inside injected filters (measured 16x on cdc_shared_chunks);
-    # - the FileContext checkpoint manager + checksum siblings fork a
-    #   readlink/chmod subprocess per checkpoint metadata op when
-    #   libhadoop native is absent (measured ~28k forks per stateful
-    #   streaming query), which the streaming operators pay in every run.
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        os.environ.get(
-            "SPARK_GRAFT_EXCLUDED_RULES",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        ),
-    )
-    spark.conf.set(
-        "spark.sql.streaming.checkpointFileManagerClass",
-        os.environ.get(
-            "SPARK_GRAFT_CKPT_MANAGER",
-            "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileSystemBasedCheckpointFileManager",
-        ),
-    )
-    spark.conf.set(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"),
-    )
-    try:
-        # legacy-compat only: matters iff the testdata regenerates with
-        # parquet TIMESTAMP(NANOS); the events scan itself is
-        # schema-adaptive (sources.tables.canonicalize_events) and
-        # handles timestamp[us]/TIMESTAMP_NTZ and int64-ns alike.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static conf on some builds
     return spark
 
 

@@ -24,11 +24,3 @@ Layout:
 """
 
 __version__ = "0.1.0"
-
-# Make google.protobuf importable (vendored fallback) BEFORE any
-# SparkSession is created, so the PYTHONPATH the Python workers inherit
-# already carries it — transformWithStateInPandas' state client needs it
-# worker-side. No-op when a real protobuf install exists.
-from .vendor import ensure_protobuf as _ensure_protobuf  # noqa: E402
-
-_ensure_protobuf()

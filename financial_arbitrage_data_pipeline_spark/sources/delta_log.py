@@ -1700,15 +1700,18 @@ MIN_SWEEP_RETENTION_MS = 3_600_000
 
 
 def _vacuum_dv_files(
-    table_dir: str, state: _LogState, removes: dict[str, dict], cutoff: int
+    table_dir: str, state: _LogState, removes: list[dict], cutoff: int
 ) -> list[str]:
     """Reclaim superseded deletion-vector files: a remove that carries a
     `deletionVector` descriptor (the DV its add was replaced under) makes
     the .bin reclaimable once (a) that tombstone aged past the cutoff and
     (b) no ACTIVE add and no UNEXPIRED tombstone references the same file
     — one multi-DV .bin can back several data files from one commit, so
-    reference counting is by resolved path. Only paths inside the table
-    root are ever deleted ('p'-storage can point anywhere; a foreign
+    reference counting is by resolved path. `removes` holds EVERY remove
+    action, not one per data file: a file removed twice (a stacked delete
+    swaps DV1 for DV2, then OPTIMIZE purges DV2) carries a different
+    descriptor in each remove, and both must count. Only paths inside the
+    table root are ever deleted ('p'-storage can point anywhere; a foreign
     absolute path is not ours to reclaim). Inline ('i') DVs have no file.
     Caveat: checkpoints don't carry remove-side DV descriptors, so a DV
     superseded before a checkpoint whose JSON commit was deleted stays an
@@ -1733,14 +1736,13 @@ def _vacuum_dv_files(
         p = resolve(a.get("deletionVector"))
         if p:
             protected.add(p)
-    for r in removes.values():
+    for r in removes:
         if r.get("deletionTimestamp", 0) > cutoff:
             p = resolve(r.get("deletionVector"))
             if p:
                 protected.add(p)
     deleted: list[str] = []
-    for path in sorted(removes):
-        r = removes[path]
+    for r in removes:
         if r.get("deletionTimestamp", 0) > cutoff:
             continue
         p = resolve(r.get("deletionVector"))
@@ -1792,11 +1794,13 @@ def vacuum_delta(
     active = set(state.files)
     cutoff = _now_ms() - retention_ms
     removes: dict[str, dict] = dict(state.tombstones)
+    remove_actions = list(removes.values())
     for v in delta_versions(table_dir):
         for action in _read_commit_actions(table_dir, v):
             r = action.get("remove")
             if r:
                 removes.setdefault(r["path"], r)
+                remove_actions.append(r)
     deleted: list[str] = []
     for path in sorted(removes):
         r = removes[path]
@@ -1806,7 +1810,7 @@ def vacuum_delta(
         if os.path.exists(abs_path):
             os.remove(abs_path)
             deleted.append(path)
-    deleted.extend(_vacuum_dv_files(table_dir, state, removes, cutoff))
+    deleted.extend(_vacuum_dv_files(table_dir, state, remove_actions, cutoff))
     # Listing sweep: unreferenced files (no add, no live tombstone).
     if retention_ms < MIN_SWEEP_RETENTION_MS and not force_listing_sweep:
         return sorted(set(deleted))

@@ -146,9 +146,7 @@ _EMPTY_STATE = (0.0, 0.0, -1, -1, 0.0, 0.0, -1, -1)
 def _fold_batches(s: list, pdfs: Iterator[pd.DataFrame]) -> list:
     """Fold micro-batch quote frames into the 8-slot latest-per-venue
     state by (ts_us, event_id) — vectorized: per venue, take the batch's
-    max row, then compare against state; no per-row Python. Shared by
-    BOTH stateful backends (applyInPandasWithState and
-    transformWithStateInPandas) so their semantics cannot diverge."""
+    max row, then compare against state; no per-row Python."""
     for pdf in pdfs:
         for is_kalshi, base in ((True, 0), (False, 4)):
             sub = pdf[(pdf["venue"] == "kalshi") == is_kalshi]
@@ -208,45 +206,6 @@ def opportunity_stream(
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def opportunity_stream_tws(
-    quotes: DataFrame,
-    pairs: DataFrame,
-    freshness_us: int = FRESHNESS_US_DEFAULT,
-    threshold: float = THRESHOLD_DEFAULT,
-) -> DataFrame:
-    """The SAME scan on Spark 4's arbitrary-state API
-    (`transformWithStateInPandas` + StatefulProcessor/ValueState) — the
-    successor to applyInPandasWithState, required for multi-state
-    operators, timers, and TTL'd state. Both backends share _fold_batches
-    and _decide, and the equivalence test replays one fixture through
-    both and asserts identical final states. Requires the RocksDB state
-    store provider (changelog-checkpointed, the 100 TB state backend —
-    HDFS-backed state must fit executor memory; RocksDB spills)."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _ScanProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("scan_state", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            got = self._state.get()
-            s = list(got) if got is not None else list(_EMPTY_STATE)
-            s = _fold_batches(s, rows)
-            self._state.update(tuple(s))
-            yield _emission(key[0], tuple(s), freshness_us, threshold)
-
-        def close(self) -> None:
-            pass
-
-    mapped = quotes.join(F.broadcast(pairs), "pair_id")
-    return mapped.groupBy("pair_id").transformWithStateInPandas(
-        statefulProcessor=_ScanProcessor(),
-        outputStructType=OPPORTUNITY_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

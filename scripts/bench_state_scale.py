@@ -1,11 +1,10 @@
 #!/usr/bin/env python
-"""State-store SCALE proof for the T3 latest-per-key lane (VERDICT r9
-task 5): `opportunity_stream_tws` runs on RocksDB, but the committed
+"""State-store SCALE proof for the T3 latest-per-key lane: the committed
 latency bench measured only sf0.1's ~1.5k key cardinality. This bench
 replays the REAL lane (quotes → broadcast pair join →
-transformWithStateInPandas latest-per-key scan) at 1× / 10× / 100× the
-sf0.1 key count (100× = sf10's cardinality) and records, per scale
-point:
+`scan.opportunity_stream`, the applyInPandasWithState latest-per-key
+scan) on the RocksDB state store provider at 1× / 10× / 100× the sf0.1
+key count (100× = sf10's cardinality) and records, per scale point:
 
 - per-batch addBatch latency (p50 over the availableNow replay),
 - state size from Spark's own stateOperators metrics (numRowsTotal +
@@ -88,7 +87,7 @@ def run_point(spark, n_keys: int, rows_per_key: int, n_chunks: int) -> dict:
             .option("maxFilesPerTrigger", 4)
             .parquet(qdir)
         )
-        return scan.opportunity_stream_tws(quotes, pairs, freshness_us=HOUR_US)
+        return scan.opportunity_stream(quotes, pairs, freshness_us=HOUR_US)
 
     t0 = time.time()
     q = scan.start_scan_lane(stream(), sink, ckpt)
@@ -163,7 +162,7 @@ def main() -> int:
     with open(art, encoding="utf-8") as fh:
         data = json.load(fh)
     data["state_scale"] = {
-        "lane": "opportunity_stream_tws (RocksDB, latest-per-key)",
+        "lane": "opportunity_stream (applyInPandasWithState on RocksDB, latest-per-key)",
         "rows_per_key": rows_per_key,
         "rows": rows,
         "note": (

@@ -274,3 +274,23 @@ def test_vacuum_reclaims_superseded_dv_files(spark, tmp_path):
     assert remaining == [], f"superseded DV files not reclaimed: {remaining}"
     assert sum(1 for d in deleted if d.startswith("deletion_vector_")) == 2
     assert sorted(r["k"] for r in DL.read_delta_table(spark, td).collect()) == live
+
+
+def test_vacuum_reclaims_every_dv_of_a_file_removed_twice(spark, tmp_path):
+    """One data file (pinned: a single input partition) takes both stacked
+    deletes — its DV1 is swapped for DV2 — and then the purge OPTIMIZE
+    removes it again. The log carries two removes for the same path, each
+    with a different superseded descriptor; VACUUM must reclaim both .bin
+    files, not just the one kept by a path-keyed lookup."""
+    td = str(tmp_path / "t")
+    DL.create_delta_table(spark, td, spark.range(0, 80, 1, 1).selectExpr("id as k"))
+    assert len([f for f in os.listdir(td) if f.endswith(".parquet")]) == 1
+    DL.delete_from_delta_table(spark, td, "k % 10 = 0")
+    DL.delete_from_delta_table(spark, td, "k % 10 = 1")
+    live = sorted(r["k"] for r in DL.read_delta_table(spark, td).collect())
+    DL.optimize_compact(spark, td, target_files=1)
+    deleted = DL.vacuum_delta(spark, td, retention_ms=0)
+    remaining = [f for f in os.listdir(td) if f.startswith("deletion_vector_")]
+    assert remaining == [], f"superseded DV files not reclaimed: {remaining}"
+    assert sum(1 for d in deleted if d.startswith("deletion_vector_")) == 2
+    assert sorted(r["k"] for r in DL.read_delta_table(spark, td).collect()) == live

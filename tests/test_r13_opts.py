@@ -112,14 +112,8 @@ def test_create_bucketed_table_empty_seed_still_reads(spark):
 def test_session_streaming_checkpoint_posture(spark):
     """The r13 checkpoint IO posture must actually be installed: the
     FileSystem-based manager (no Hadoop Stat/Shell fork per metadata op)
-    and checksum siblings off — env-overridable, so assert the defaults
-    only when the overrides are unset."""
-    if "SPARK_GRAFT_CKPT_MANAGER" not in os.environ:
-        assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
-            "FileSystemBasedCheckpointFileManager"
-        )
-    if "SPARK_GRAFT_CKPT_CHECKSUM" not in os.environ:
-        assert (
-            spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-            == "false"
-        )
+    and checksum siblings off."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false"

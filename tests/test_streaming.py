@@ -360,68 +360,6 @@ def test_pair_performance_upserter_skips_redelivered_batches(spark, sf_dir, tmp_
     assert final == {7: 4, 8: 2}
 
 
-def test_transform_with_state_matches_apply_in_pandas_backend(spark, tmp_path):
-    """The Spark 4 arbitrary-state backend (transformWithStateInPandas +
-    ValueState) must produce the exact same final per-pair state as the
-    shipped applyInPandasWithState operator for an out-of-order,
-    multi-batch replay — both fold through the shared _fold_batches
-    kernel. TWS needs the RocksDB state store provider; set it for this
-    run and restore the previous provider after.
-
-    TWS's state-server protocol needs a `google.protobuf` runtime; the
-    package __init__ makes one importable everywhere (vendored fallback
-    in `financial_arbitrage_data_pipeline_spark/vendor`, real install
-    preferred), so this runs in-container. The importorskip only guards
-    environments where even the vendored runtime cannot load."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas requires protobuf for its state protocol",
-    )
-    chunks = [
-        [(1, "kalshi", 0.45, 0.47, 1_000_000, 1), (2, "kalshi", 0.30, 0.80, 1_000_000, 2)],
-        [(1, "polymarket", 0.40, 0.60, 2_000_000, 3)],
-        # out-of-order older kalshi quote for pair 1 must NOT regress state;
-        # pair 2 gets its polymarket side later
-        [(1, "kalshi", 0.99, 0.99, 500_000, 4), (2, "polymarket", 0.25, 0.75, 3_000_000, 5)],
-    ]
-    pairs_ids = [1, 2]
-
-    def run(backend, sub):
-        qdir = str(tmp_path / sub / "quotes")
-        sink = str(tmp_path / sub / "sink")
-        ckpt = str(tmp_path / sub / "ckpt")
-        _write_quote_chunks(qdir, chunks)
-        quotes = (
-            spark.readStream.schema(scan.QUOTE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(qdir)
-        )
-        pairs = spark.createDataFrame([(p,) for p in pairs_ids], "pair_id long")
-        q = scan.start_scan_lane(backend(quotes, pairs, freshness_us=HOUR_US), sink, ckpt)
-        q.awaitTermination()
-        return sorted(
-            (r.pair_id, r.arbitrage_type, r.kalshi_price, r.poly_price, r.profit_margin)
-            for r in scan.final_opportunities(spark, sink).collect()
-        )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got_tws = run(scan.opportunity_stream_tws, "tws")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    got_apiws = run(scan.opportunity_stream, "apiws")
-    assert got_tws == got_apiws
-    assert len(got_apiws) == 2  # both pairs end with a live opportunity
-
-
 def test_storage_lane_reports_observed_counters(spark, sf_dir, tmp_path):
     """The ingest lane's health counters (the reference's message/latency
     counters) must surface through the streaming progress API — computed
@@ -465,27 +403,6 @@ def test_batch_observation_counts_without_second_scan(spark, sf_dir):
     )
     n_written = observed_df.count()
     assert obs.get["n_rows"] == n_written
-
-
-def test_vendored_protobuf_roundtrips_state_messages():
-    """The vendored protobuf runtime (see
-    financial_arbitrage_data_pipeline_spark/vendor) must load pyspark's
-    generated StateMessage_pb2 (gencode 6.33 vs runtime 4.23 — the
-    runtime_version shim bridges the version gate) and round-trip the
-    state-server messages byte-exactly."""
-    from financial_arbitrage_data_pipeline_spark.vendor import ensure_protobuf
-
-    assert ensure_protobuf()
-    from pyspark.sql.streaming.proto import StateMessage_pb2 as M
-
-    req = M.StateRequest(version=2)
-    req.statefulProcessorCall.setHandleState.state = M.HandleState.INITIALIZED
-    payload = req.SerializeToString()
-    back = M.StateRequest()
-    back.ParseFromString(payload)
-    assert back.version == 2
-    assert back.statefulProcessorCall.setHandleState.state == M.HandleState.INITIALIZED
-    assert back.SerializeToString() == payload
 
 
 def test_transient_sink_failure_then_restart_is_exactly_once(spark, sf_dir, tmp_path):
