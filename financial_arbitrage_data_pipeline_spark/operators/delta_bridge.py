@@ -3,11 +3,11 @@
 The reference's durable state lives behind a private Postgres schema
 (`/root/reference/database/postgres/writer.py:351-407`); nothing else
 can read it without the reference's own code. These queries prove the
-Spark engine's durable MERGE state round-trips through the OPEN Delta
-Lake transaction-log format (`sources/delta_log.py`, built from the
-public PROTOCOL.md): any Delta client — delta-spark, delta-rs, Trino,
-DuckDB delta — can consume the exported table, and our own log-replay
-reader consumes it with no directory listing at all.
+Spark engine's durable MERGE state lives in the OPEN Delta Lake
+transaction-log format (`sources/delta_log.py`, built from the public
+PROTOCOL.md): any Delta client — delta-spark, delta-rs, Trino, DuckDB
+delta — can consume the table, and our own log-replay reader consumes
+it with no directory listing at all.
 
 Both queries are full-cycle: build state -> commit log -> REPLAY the
 log -> aggregate; the oracle recomputes the expected end state
@@ -34,7 +34,6 @@ from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
     commit_append,
     create_delta_table,
     delta_versions,
-    export_delta_log,
     last_txn_version,
     read_delta_table,
 )
@@ -80,16 +79,15 @@ GROUP BY 1, 2
     tags=("K4", "lakehouse", "delta-protocol", "time-travel"),
 )
 def delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIME TRAVEL through the EXPORTED Delta log: seed the trade-ticket
-    table with history enabled, apply the same two fill batches as
-    `ticket_fill_merge`, mirror the merge history into a `_delta_log`
-    (`export_delta_log` — one Delta version per merge commit, deltas
-    sized by touched buckets), then read versions 0/1/2 back through
-    PURE LOG REPLAY (`read_delta_table` never lists a data directory)
-    and roll each snapshot up by fill status. Matching the oracle for
-    all three versions proves the exported add/remove actions select
-    exactly the right file set at every version — the same guarantee a
-    real Delta reader gets from `VERSION AS OF`."""
+    """TIME TRAVEL through the merge table's own Delta log: seed the
+    trade-ticket table, apply the same two fill batches as
+    `ticket_fill_merge` (one Delta version per merge commit, add/remove
+    deltas sized by touched buckets), then read versions 0/1/2 back
+    through PURE LOG REPLAY (`read_delta_table` never lists a data
+    directory) and roll each snapshot up by fill status. Matching the
+    oracle for all three versions proves the merge commits' add/remove
+    actions select exactly the right file set at every version — the
+    same guarantee a real Delta reader gets from `VERSION AS OF`."""
     root = tempfile.mkdtemp(prefix="sgdelta_")
     tickets_dir = os.path.join(root, "trade_tickets")
     try:
@@ -104,7 +102,6 @@ def delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("pending").alias("status"),
             ),
             key="ticket_id",
-            keep_history=True,
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ticket_id"),
@@ -115,8 +112,7 @@ def delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_fills(spark, tickets_dir, li.filter(F.col("l_linenumber") <= 3))
         apply_fills(spark, tickets_dir, li.filter(F.col("l_linenumber") > 3))
 
-        last = export_delta_log(spark, tickets_dir)
-        assert last == 2 and delta_versions(tickets_dir) == [0, 1, 2]
+        assert delta_versions(tickets_dir) == [0, 1, 2]
 
         snaps = [
             read_delta_table(spark, tickets_dir, version=v).withColumn(

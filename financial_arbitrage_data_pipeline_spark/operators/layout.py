@@ -55,8 +55,9 @@ def compact_small_files(
     optionally range-clustered on `sort_cols` (repartitionByRange +
     sortWithinPartitions: globally range-partitioned, locally sorted —
     the layout that makes min/max pruning on the sort key exact). The
-    rewrite lands in a tmp dir and swaps in via rename, same recovery
-    contract as operators/upsert.merge_into_parquet. Returns the new
+    rewrite lands in a tmp dir and swaps in via two renames; a crash
+    between them leaves the table parked at `<dir>.__compact_old__`,
+    which the next call restores before rewriting. Returns the new
     file count.
 
     Scale notes: the rewrite is one shuffle of the table — schedule it

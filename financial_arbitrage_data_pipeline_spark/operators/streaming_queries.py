@@ -717,21 +717,9 @@ def make_pair_perf_upserter(spark: SparkSession, table: str):
         )
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from .upsert import recover_merge_table
-
-        # Resolve any crashed prior merge BEFORE trusting the marker: a
-        # committed-but-uncleaned merge rolls forward (reinstalling its
-        # marker so this batch skips), an uncommitted one rolls back (so
-        # re-applying is safe) — either way at-least-once redelivery is
-        # exactly-once into the table. break_lock: this upserter IS the
-        # table's single writer, so a lock found at batch start can only
-        # be a crashed predecessor's.
-        recover_merge_table(table, break_lock=True)
-        marker = os.path.join(table, "_last_applied_batch")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                if batch_id <= int(fh.read().strip()):
-                    return  # redelivered batch: already merged
+        # at-least-once redelivery is exactly-once into the table: the
+        # merge records batch_id as the commit's txn action and skips any
+        # batch id at or below the committed one
         qty = F.col("event_id") % 10 + 1
         cents = F.round(F.col("value") * 100).cast("long")
         b = (
@@ -762,7 +750,6 @@ def make_pair_perf_upserter(spark: SparkSession, table: str):
                 + F.col("u.c"),
             },
             insert_missing=True,
-            extra_files={"_last_applied_batch": str(batch_id)},
             applied_batch_id=batch_id,
         )
 
@@ -789,10 +776,9 @@ def streaming_pair_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     and MERGEs the deltas into the running table — the reference's
     `total_trades += 1` counters (`writer.py:409-468`). foreachBatch is
     at-least-once, so the additive merge records the applied batch id
-    in the commit manifest that lands with the bucket swaps in one
-    atomic rename (see `upsert.recover_merge_table`): a redelivered
-    batch is skipped, never double-added, even across a crash between
-    bucket swaps. The oracle
+    as a `txn` action in the same log commit as its data: a redelivered
+    batch is skipped, never double-added, and a crash before the commit
+    leaves nothing to skip. The oracle
     recomputes the same totals from scratch: equality proves the
     incremental path equals the batch recompute — the defining property
     of a continuous aggregate."""
@@ -1839,10 +1825,10 @@ def make_book_depth_upserter(spark: SparkSession, table: str):
     """foreachBatch upserter maintaining per-(market, side, level) net
     resting depth across micro-batches — the streaming form of
     book_depth_rebuild's first aggregation stage, riding the same
-    exactly-once merge protocol as make_pair_perf_upserter (applied
-    batch id recorded atomically with the bucket swaps; redelivered
-    batches skipped)."""
-    from .upsert import create_bucketed_table, merge_into_parquet, recover_merge_table
+    exactly-once merge as make_pair_perf_upserter (applied batch id
+    recorded as a txn action in the data's commit; redelivered batches
+    skipped)."""
+    from .upsert import create_bucketed_table, merge_into_parquet
 
     if not os.path.exists(table):
         create_bucketed_table(
@@ -1857,12 +1843,6 @@ def make_book_depth_upserter(spark: SparkSession, table: str):
         )
 
     def upsert_batch(batch_df, batch_id: int) -> None:
-        recover_merge_table(table, break_lock=True)
-        marker = os.path.join(table, "_last_applied_batch")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                if batch_id <= int(fh.read().strip()):
-                    return  # redelivered batch: already merged
         qty = F.col("event_id") % 7 + 1
         b = (
             batch_df.select(
@@ -1896,7 +1876,6 @@ def make_book_depth_upserter(spark: SparkSession, table: str):
                 "net": F.coalesce(F.col("t.net"), F.lit(0)) + F.col("u.d"),
             },
             insert_missing=True,
-            extra_files={"_last_applied_batch": str(batch_id)},
             applied_batch_id=batch_id,
         )
 
@@ -1939,9 +1918,9 @@ def streaming_book_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained INCREMENTALLY across micro-batches — each batch
     pre-aggregates its add/cancel deltas map-side ((market, side,
     level) × batch, tiny) and additively MERGEs them into the running
-    book table through the exactly-once merge protocol (applied-batch
-    marker atomic with the bucket swaps; at-least-once redelivery never
-    double-counts a delta). Because net depth is a SUM, chunk boundaries
+    book table through the exactly-once merge (applied batch id
+    committed as a txn action with the data; at-least-once redelivery
+    never double-counts a delta). Because net depth is a SUM, chunk boundaries
     are invisible by algebra — the final book rollup (best bid/ask,
     spread, per-side depth, over-cancelled levels) is computed off the
     merged table and hash-matches the batch recompute from the raw tape:
@@ -2001,9 +1980,9 @@ def make_auction_upserter(spark: SparkSession, table: str):
     """foreachBatch upserter maintaining per-(market, px) two-sided
     resting volume across micro-batches — auction_clearing_price's
     level aggregation as an additive continuous aggregate on the
-    exactly-once merge protocol (redelivered batches skipped via the
-    applied-batch marker, atomic with the bucket swaps)."""
-    from .upsert import create_bucketed_table, merge_into_parquet, recover_merge_table
+    exactly-once merge (redelivered batches skipped via the txn action
+    committed with the data)."""
+    from .upsert import create_bucketed_table, merge_into_parquet
 
     if not os.path.exists(table):
         create_bucketed_table(
@@ -2018,12 +1997,6 @@ def make_auction_upserter(spark: SparkSession, table: str):
         )
 
     def upsert_batch(batch_df, batch_id: int) -> None:
-        recover_merge_table(table, break_lock=True)
-        marker = os.path.join(table, "_last_applied_batch")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                if batch_id <= int(fh.read().strip()):
-                    return  # redelivered batch: already merged
         is_bid = F.col("event_type").isin("click", "view")
         b = (
             batch_df.select(
@@ -2061,7 +2034,6 @@ def make_auction_upserter(spark: SparkSession, table: str):
                 + F.col("u.aq"),
             },
             insert_missing=True,
-            extra_files={"_last_applied_batch": str(batch_id)},
             applied_batch_id=batch_id,
         )
 

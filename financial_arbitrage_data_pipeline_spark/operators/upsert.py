@@ -7,20 +7,27 @@ update that recomputes executed quantity / weighted-average fill price /
 status per trade (`database/postgres/writer.py:215-294`,
 `database/models/postgres.py:184-211`).
 
-Spark-first realization: the one sink primitive plain parquet lacks is
-`MERGE INTO`; with Delta/Iceberg present, `merge_into_parquet` is spelled
-`target.merge(updates, ...)` and everything else here is unchanged. On
-plain parquet the equivalent is a join → rewrite cycle, scoped by HASH
-BUCKET: merge targets are laid out `partitionBy("__bucket__")` with
-`__bucket__ = pmod(xxhash64(key), n_buckets)`, a merge computes the
-(tiny, ≤ n_buckets) set of buckets its update keys hash into, reads ONLY
-those bucket directories (partition pruning at the scan), and swaps only
-them — untouched buckets are never read or rewritten, so the cost of a
-MERGE is proportional to touched data, not table size. That is the same
-write-amplification contract Delta/Iceberg `MERGE INTO` gives via file
-pruning; on a 100 TB table you would raise n_buckets so each bucket is
-a few GB. Unbucketed targets fall back to a whole-table rewrite (kept
-for tiny fixtures and as the recovery path).
+Spark-first realization: a merge table is a Delta table
+(`sources/delta_log.py`) partitioned by HASH BUCKET —
+`__bucket__ = pmod(xxhash64(key), n_buckets)`, with the key and modulus
+recorded in the log's metaData.configuration. `merge_into_parquet` is
+`MERGE INTO` through the transaction log: it computes the (tiny,
+≤ n_buckets) set of buckets its update keys hash into, reads and
+rewrites only those buckets' files, and commits remove+add actions in
+one put-if-absent log version — untouched buckets are never opened, so
+the cost of a MERGE is proportional to touched data, not table size. On
+a 100 TB table you would raise n_buckets (`rebucket_merge_table`) so
+each bucket is a few GB.
+
+Everything else a relational store gives comes from the log, not from a
+side protocol: atomic multi-bucket commits and crash safety (staged
+files are invisible until the commit JSON lands), concurrent writers
+(the loser of a version race retries on the new head), exactly-once
+foreachBatch upserts (the `txn` action), schema widening (a metaData
+re-emit), time travel (`VERSION AS OF` by log replay), a change feed
+(the buckets named by the add/remove actions between two versions) and
+retention (`vacuum_merge_history`). Replaced files stay on disk until
+that vacuum, which is what keeps every retained version readable.
 
 Exactness divergence (deliberate, SURVEY risk-note style): the reference
 stores the running `average_fill_price` and updates it incrementally with
@@ -32,159 +39,37 @@ under any batch split or partial-aggregation order.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..sources.delta_log import (
+    BUCKET_COL,
+    BUCKET_COUNT_CONF,
+    BUCKET_KEY_CONF,
+    CHECKPOINT_INTERVAL,
+    _commit_rewrite,
+    _read_commit_actions,
+    bucket_of,
+    bucket_spec,
+    create_delta_table,
+    delta_versions,
+    merge_delta_table,
+    read_delta_table,
+    replay_state,
+)
+# A merge table's history is its Delta log's: the readable versions and
+# version-based retention are the log's own functions under these names.
+from ..sources.delta_log import readable_versions as history_versions  # noqa: F401
+from ..sources.delta_log import vacuum_history as vacuum_merge_history  # noqa: F401
 from ..sources.tables import load_table
 
-try:  # Delta gives true transactional MERGE; optional, never required.
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAS_DELTA = True
-except Exception:  # pragma: no cover - delta not shipped in this container
-    _HAS_DELTA = False
-
-_N_BUCKETS_FILE = "_n_buckets"
-_HISTORY_MARKER = "_history_enabled"
-_COMMIT_LOG = "_commit_log.jsonl"
-_VERSIONS_DIR = "_versions"
-_VACUUM_MARKER = "_history_vacuumed"
 _DEFAULT_BUCKETS = 16
-_PENDING_FILE = "_merge_pending"
-_COMMIT_FILE = "_commit_manifest"
-# Present once any merge widened the table schema (VERDICT r9 task 6):
-# untouched buckets keep their pre-evolution parquet schema on disk, so
-# evolved tables read with mergeSchema (absent columns surface as null).
-# Installed through the commit manifest's extra_files, so the marker
-# lands atomically with the evolving merge and crash roll-forward
-# reinstalls it.
-_EVOLVED_MARKER = "_schema_evolved"
-_LOCK_SUFFIX = ".__merge_lock__"
-
-
-class ConcurrentMergeError(RuntimeError):
-    """A second writer attempted to MERGE while another holds the
-    table's writer lock. The parquet MERGE paths are single-writer by
-    design (the streaming upserter shape — one foreachBatch owner per
-    table); without the lock, the second writer's crash recovery would
-    roll back the live merge's in-flight swaps and both writers would
-    then race the same buckets. Fail loudly instead."""
-
-
-def _lock_path(target_dir: str) -> str:
-    """The writer lock lives as a SIBLING of the table directory, not
-    inside it (ADVICE r5): the full-rewrite path renames target_dir
-    away, so an in-dir lock would travel with the old directory and be
-    deleted with it, leaving the rename window unguarded. A sibling
-    path also survives the momentary dir-absent window, so acquisition
-    never has to silently proceed without a lock."""
-    return target_dir.rstrip("/") + _LOCK_SUFFIX
-
-
-def _lock_owner_dead(path: str) -> bool:
-    """True iff the lock file names an owner pid that provably no
-    longer exists on this host. Unreadable/unparseable lock content is
-    treated as LIVE (conservative: a writer that just created the file
-    may not have flushed its pid yet), as is EPERM from the probe (the
-    pid exists but belongs to another user)."""
-    try:
-        with open(path) as fh:
-            pid = int(json.load(fh)["pid"])
-    except (OSError, ValueError, KeyError, TypeError, json.JSONDecodeError):
-        return False
-    if pid == os.getpid():
-        return False
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return True
-    except PermissionError:  # pragma: no cover - cross-user pid reuse
-        return False
-    return False
-
-
-def _reclaim_stale_lock(path: str) -> bool:
-    """Atomically claim a dead owner's lock file. The rename is the
-    claim: of N racers detecting the same dead pid, exactly one rename
-    succeeds; the losers see FileNotFoundError and go back around the
-    acquire loop (where they will contend on O_EXCL like normal).
-    Returns True if this process claimed (and removed) the stale lock."""
-    claimed = path + f".reclaim.{uuid.uuid4().hex}"
-    try:
-        os.rename(path, claimed)
-    except FileNotFoundError:
-        return False
-    os.remove(claimed)
-    return True
-
-
-def _acquire_merge_lock(target_dir: str) -> None:
-    path = _lock_path(target_dir)
-    recovery_waits = 0
-    while True:
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            if _lock_owner_dead(path):
-                _reclaim_stale_lock(path)
-                continue  # retry the O_EXCL create against any racers
-            try:
-                with open(path) as fh:
-                    holder = fh.read().strip()
-            except OSError:  # pragma: no cover - lock vanished mid-read
-                continue  # released between the create and the read
-            try:
-                is_recovery = bool(json.loads(holder).get("recovery"))
-            except (ValueError, AttributeError):
-                # a partially-flushed lock file (or any non-dict JSON) is
-                # NOT a recovery holder — keep the conservative default
-                # of treating it as a real conflict (ADVICE r8: substring
-                # matching misclassified hosts containing the token)
-                is_recovery = False
-            if is_recovery and recovery_waits < 500:
-                # A reader holds the lock only for the duration of
-                # crash recovery (pure filesystem metadata ops, ms
-                # scale). Writers wait it out instead of raising —
-                # bounded so a wedged reader can't hang a writer
-                # forever (after ~5 s it reads as a real conflict).
-                recovery_waits += 1
-                time.sleep(0.01)
-                continue
-            raise ConcurrentMergeError(
-                f"merge already in progress on {target_dir} (lock held by"
-                f" {holder}). The lock self-clears once that pid exits; a"
-                " live holder is never preempted."
-            ) from None
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"pid": os.getpid(), "host": os.uname().nodename}, fh)
-        return
-
-
-def _release_merge_lock(target_dir: str) -> None:
-    try:
-        os.remove(_lock_path(target_dir))
-    except FileNotFoundError:  # pragma: no cover - already released
-        pass
-
-# Test seam for the crash-injection suite: when set to a callable it is
-# invoked after every bucket swap with the bucket id — a test raises from
-# it to simulate the process dying between two bucket swaps.
-_post_swap_hook = None
-
-
-def _bucket_of(key_col: Column, n_buckets: int) -> Column:
-    """Deterministic bucket id for a merge key. xxhash64 is a stable
-    JVM-side hash (same value on every executor/session), so the bucket
-    assignment is reproducible across jobs — a requirement for a layout
-    that outlives the session that wrote it."""
-    return F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
+# txn appId under which merge_into_parquet records applied_batch_id
+_APPLIED_BATCH_APP = "spark-graft-applied-batch"
 
 
 def create_bucketed_table(
@@ -193,265 +78,51 @@ def create_bucketed_table(
     df: DataFrame,
     key: str,
     n_buckets: int = _DEFAULT_BUCKETS,
-    keep_history: bool = False,
 ) -> None:
-    """Materialize `df` as a hash-bucketed merge target:
-    `<dir>/__bucket__=<i>/part-*.parquet` + an `_n_buckets` marker so
-    later merges reproduce the same modulus. An empty seed writes its
-    (empty) schema into `__bucket__=0` so the layout is readable before
-    the first merge.
-
-    `keep_history=True` turns on TIME TRAVEL (the Delta/Iceberg
-    snapshot-read feature on this plain-parquet layout): each committed
-    merge ARCHIVES the replaced buckets' pre-merge content under
-    `_versions/<seq>/` instead of deleting it, and appends one line to
-    `_commit_log.jsonl` — an UNDO LOG sized by what changed, never by
-    the table. `read_merge_table_asof` reconstructs any committed
-    version; `vacuum_merge_history` truncates retention."""
-    # One write job, no emptiness pre-probe (r13, guide §1.2: the old
-    # `df.take(1)` ran a whole extra job per table creation just to pick
-    # the empty-seed layout). A partitionBy write of an empty frame
-    # produces no `__bucket__=` directories, so emptiness is detected
-    # from the written layout and the empty-schema fallback runs then.
-    (
-        df.withColumn("__bucket__", _bucket_of(F.col(key), n_buckets))
-        .repartition("__bucket__")
-        .write.mode("overwrite")
-        .partitionBy("__bucket__")
-        .parquet(target_dir)
+    """Materialize `df` as a hash-bucketed merge target: version 0 of a
+    Delta table partitioned by `__bucket__` (one file per bucket), with
+    the bucket key and modulus in metaData.configuration so every later
+    merge reproduces them. An empty seed commits the schema and no
+    files, and reads back empty."""
+    create_delta_table(
+        spark,
+        target_dir,
+        df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).repartition(BUCKET_COL),
+        partition_by=[BUCKET_COL],
+        configuration={BUCKET_KEY_CONF: key, BUCKET_COUNT_CONF: str(n_buckets)},
     )
-    if not any(
-        e.startswith("__bucket__=") for e in os.listdir(target_dir)
-    ):  # empty seed: write the schema into bucket 0 so the layout reads
-        df.write.mode("overwrite").parquet(
-            os.path.join(target_dir, "__bucket__=0")
-        )
-    with open(os.path.join(target_dir, _N_BUCKETS_FILE), "w") as fh:
-        fh.write(str(n_buckets))
-    if keep_history:
-        with open(os.path.join(target_dir, _HISTORY_MARKER), "w") as fh:
-            fh.write("1")
 
 
-def _history_enabled(target_dir: str) -> bool:
-    return os.path.exists(os.path.join(target_dir, _HISTORY_MARKER))
+def _user_cols(df: DataFrame) -> DataFrame:
+    return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
-def _evolved(target_dir: str) -> bool:
-    return os.path.exists(os.path.join(target_dir, _EVOLVED_MARKER))
+def read_merge_table(spark: SparkSession, target_dir: str) -> DataFrame:
+    """The merge table's latest committed version, bucket column dropped."""
+    return _user_cols(read_delta_table(spark, target_dir))
 
 
-def _evolved_cols(target_dir: str) -> list[str]:
-    p = os.path.join(target_dir, _EVOLVED_MARKER)
-    if not os.path.exists(p):
-        return []
-    with open(p, encoding="utf-8") as fh:
-        return json.load(fh)
-
-
-def _read_parquet(spark: SparkSession, *paths: str, evolved: bool):
-    """Parquet read that surfaces post-evolution columns as nulls for
-    files written before the widening merge. mergeSchema is paid only on
-    evolved tables — unevolved reads keep the single-footer fast path."""
-    reader = spark.read
-    if evolved:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*paths)
-
-
-def _read_commit_log(target_dir: str) -> list[dict]:
-    path = os.path.join(target_dir, _COMMIT_LOG)
-    if not os.path.exists(path):
-        return []
-    out = []
-    with open(path, encoding="utf-8") as fh:
-        for line in fh:
-            line = line.strip()
-            if line:
-                out.append(json.loads(line))
-    return out
-
-
-def _archive_commit(target_dir: str, manifest: dict) -> None:
-    """History-mode cleanup for a COMMITTED merge: move every replaced
-    bucket's `.__old__` backup into `_versions/<seq>/` and append the
-    commit-log line. IDEMPOTENT under crash-retry: if the log's last
-    entry already carries this merge_id the seq is reused and the append
-    is skipped; bucket moves skip already-moved (absent) backups — so
-    recovery can re-run it from any crash point and the archive lands
-    exactly once."""
-    log = _read_commit_log(target_dir)
-    if log and log[-1]["merge_id"] == manifest["merge_id"]:
-        seq = log[-1]["seq"]
-        append = False
-    else:
-        seq = (log[-1]["seq"] + 1) if log else 1
-        append = True
-    vdir = os.path.join(target_dir, _VERSIONS_DIR, str(seq))
-    for swap in manifest["swaps"]:
-        old = os.path.join(
-            target_dir, f"__bucket__={swap['bucket']}.__old__"
-        )
-        if swap.get("had_prev") and os.path.exists(old):
-            os.makedirs(vdir, exist_ok=True)
-            dst = os.path.join(vdir, f"__bucket__={swap['bucket']}")
-            if os.path.exists(dst):  # pragma: no cover - raced retry
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.rename(old, dst)
-        elif os.path.exists(old):  # pragma: no cover - defensive
-            shutil.rmtree(old, ignore_errors=True)
-    if append:
-        entry = {
-            "seq": seq,
-            "merge_id": manifest["merge_id"],
-            "swaps": [
-                {"bucket": s["bucket"], "had_prev": bool(s.get("had_prev"))}
-                for s in manifest["swaps"]
-            ],
-        }
-        with open(
-            os.path.join(target_dir, _COMMIT_LOG), "a", encoding="utf-8"
-        ) as fh:
-            fh.write(json.dumps(entry) + "\n")
-
-
-def history_versions(target_dir: str) -> list[int]:
-    """Committed version numbers readable via as-of: 0 (the created
-    table) through the latest merge's seq, floored by any vacuum."""
-    log = _read_commit_log(target_dir)
-    last = log[-1]["seq"] if log else 0
-    floor = 0
-    vac = os.path.join(target_dir, _VACUUM_MARKER)
-    if os.path.exists(vac):
-        with open(vac) as fh:
-            floor = int(fh.read().strip() or 0)
-    return list(range(floor, last + 1))
-
-
-# Test seam for the asof/merge/vacuum race suite: called between the
-# commit-log read and path resolution so a test can inject a concurrent
-# merge or vacuum at the exact racy point.
-_asof_resolve_hook = None
+def _check_readable(target_dir: str, *wanted: int) -> None:
+    versions = history_versions(target_dir)
+    for v in wanted:
+        if v not in versions:
+            raise ValueError(
+                f"version {v} not readable; available: "
+                + (f"{versions[0]}..{versions[-1]}" if versions else "none")
+            )
 
 
 def read_merge_table_asof(
     spark: SparkSession, target_dir: str, version: int
 ) -> DataFrame:
-    """TIME-TRAVEL read of a history-enabled merge table: the state
-    exactly as of committed version `version` (0 = as created, N = after
-    the N-th merge). Reconstruction is the undo-log overlay: a bucket's
-    as-of content is the archive of the EARLIEST later merge that
-    replaced it (that archive is the pre-merge copy, and no merge
-    between `version` and it touched the bucket), else the live bucket;
-    a bucket first created by a later merge is absent. Cost: metadata +
-    a parquet read over exactly the as-of file set — no copy, no
-    restore."""
-    recover_merge_table(target_dir)
-    if not _history_enabled(target_dir):
-        raise ValueError(f"{target_dir} was not created with keep_history")
-    # Concurrency contract (VERDICT r9 task 7): an as-of reader racing a
-    # merge (head advances, live buckets swap) or a vacuum (archives
-    # die) must FAIL LOUDLY or read version-consistently — never mix
-    # versions. Two mechanisms:
-    #   1. optimistic resolution: resolve paths, then re-read the commit
-    #      log; if it advanced, re-resolve (a bucket we resolved to the
-    #      LIVE dir may now have an archive holding exactly the content
-    #      we wanted — the retry converges to it);
-    #   2. FILE-level pinning: the returned plan reads the concrete
-    #      part-files snapshotted at resolution, not directories. A
-    #      later swap replaces a bucket dir's files (new names), so a
-    #      stale plan raises FileNotFound at action time instead of
-    #      silently re-listing post-merge content; a vacuum that deletes
-    #      a pinned archive fails the same loud way.
-    files: list[str] = []
-    for _ in range(5):
-        log = _read_commit_log(target_dir)
-        versions = history_versions(target_dir)
-        if version not in versions:
-            raise ValueError(
-                f"version {version} not readable; available: "
-                f"{versions[0]}..{versions[-1]}"
-            )
-        if _asof_resolve_hook is not None:  # test seam: race injection
-            _asof_resolve_hook()
-        paths = _asof_bucket_paths(target_dir, version, log)
-        if not paths:  # as-of an empty table
-            return read_merge_table(spark, target_dir).limit(0)
-        try:
-            files = sorted(
-                os.path.join(d, f)
-                for d in paths.values()
-                for f in os.listdir(d)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-        except FileNotFoundError:
-            continue  # a resolved dir vanished mid-snapshot: re-resolve
-        log2 = _read_commit_log(target_dir)
-        if len(log2) == len(log) and (
-            not log or log2[-1]["merge_id"] == log[-1]["merge_id"]
-        ):
-            break
-    else:
-        raise ConcurrentMergeError(
-            f"as-of read of {target_dir} could not get a stable commit-log "
-            "snapshot in 5 attempts — a writer is advancing the table "
-            "faster than resolution; retry when the merge storm settles"
-        )
-    if not files:  # resolved buckets hold no data files
-        return read_merge_table(spark, target_dir).limit(0)
-    # Evolution-correct by construction: a pre-evolution version's path
-    # set contains only pre-evolution files (archives hold pre-merge
-    # content; untouched live buckets were never rewritten), so the
-    # merged schema IS the old schema; a post-evolution version's mixed
-    # file set widens with nulls.
-    df = _read_parquet(spark, *files, evolved=_evolved(target_dir))
-    return df.drop("__bucket__") if "__bucket__" in df.columns else df
-
-
-def _asof_bucket_paths(
-    target_dir: str,
-    version: int,
-    log: list[dict],
-    only_buckets: set[int] | None = None,
-) -> dict[int, str]:
-    """bucket id → the directory holding that bucket's content AS OF
-    `version` (the earliest later archive, else the live dir); buckets
-    absent at `version` are omitted. `only_buckets` restricts the
-    resolution — the delta-sized path the change feed uses."""
-    current = {
-        int(e.split("=", 1)[1])
-        for e in os.listdir(target_dir)
-        if e.startswith("__bucket__=") and not e.endswith(".__old__")
-    }
-    universe = current | {s["bucket"] for e in log for s in e["swaps"]}
-    if only_buckets is not None:
-        universe &= only_buckets
-    paths: dict[int, str] = {}
-    for b in sorted(universe):
-        chosen = None
-        for e in log:  # ascending seq
-            if e["seq"] > version and any(
-                s["bucket"] == b for s in e["swaps"]
-            ):
-                swap = next(s for s in e["swaps"] if s["bucket"] == b)
-                if swap["had_prev"]:
-                    chosen = os.path.join(
-                        target_dir, _VERSIONS_DIR, str(e["seq"]), f"__bucket__={b}"
-                    )
-                else:
-                    chosen = ""  # bucket did not exist at `version`
-                break
-        if chosen is None:
-            if b in current:
-                paths[b] = os.path.join(target_dir, f"__bucket__={b}")
-        elif chosen:
-            if not os.path.isdir(chosen):  # pragma: no cover - vacuum race
-                raise ValueError(
-                    f"archive for bucket {b} at seq > {version} was vacuumed"
-                )
-            paths[b] = chosen
-    return paths
+    """TIME-TRAVEL read: the table exactly as of committed version
+    `version` (0 = as created, N = after the N-th commit), by log
+    replay — each version reads with its own schema. The plan pins that
+    version's files: a later merge never alters them, and a vacuum that
+    deletes them makes the read fail loudly at action time instead of
+    mixing versions."""
+    _check_readable(target_dir, version)
+    return _user_cols(read_delta_table(spark, target_dir, version=version))
 
 
 def merge_table_changes(
@@ -461,306 +132,62 @@ def merge_table_changes(
     to_version: int,
     key: str,
 ) -> DataFrame:
-    """CHANGE DATA FEED between two committed versions (Delta's CDF on
-    the plain-parquet layout): every key whose row differs between
-    `from_version` and `to_version`, tagged 'insert' / 'update' /
-    'delete', with the full pre- and post-image structs. Reads ONLY the
-    buckets the intervening merges touched (from the commit log), so
-    feed cost is delta-sized — on a 100 TB table a feed over one merge
-    reads that merge's buckets, nothing else. Row equality compares
-    every data column (null-safe), so a no-op rewrite emits nothing."""
-    recover_merge_table(target_dir)
-    if not _history_enabled(target_dir):
-        raise ValueError(f"{target_dir} was not created with keep_history")
-    versions = history_versions(target_dir)
-    if not (
-        from_version in versions
-        and to_version in versions
-        and from_version < to_version
-    ):
-        raise ValueError(
-            f"need readable from_version < to_version; available: "
-            f"{versions[0]}..{versions[-1]}"
+    """CHANGE DATA FEED between two committed versions (Delta CDF's
+    role): every key whose row differs between `from_version` and
+    `to_version`, tagged 'insert' / 'update' / 'delete', with the full
+    pre- and post-image structs. Reads ONLY the buckets named by the
+    add/remove actions of the commits in (from, to], through the
+    reader's partition filter, so feed cost is delta-sized. Row
+    equality compares every data column (null-safe), so a no-op rewrite
+    emits nothing; across a schema widening the older side is conformed
+    with typed nulls, so a null -> value transition reads as an
+    'update'."""
+    if from_version >= to_version:
+        raise ValueError("need readable from_version < to_version")
+    _check_readable(target_dir, from_version, to_version)
+    touched: set[str] = set()
+    for v in range(from_version + 1, to_version + 1):
+        for action in _read_commit_actions(target_dir, v):
+            body = action.get("add") or action.get("remove")
+            if body is not None:
+                touched.add((body.get("partitionValues") or {}).get(BUCKET_COL))
+
+    def read_side(version: int) -> DataFrame:
+        df = read_delta_table(
+            spark,
+            target_dir,
+            version=version,
+            partition_filter={BUCKET_COL: sorted(touched)},
         )
-    log = _read_commit_log(target_dir)
-    touched = {
-        s["bucket"]
-        for e in log
-        if from_version < e["seq"] <= to_version
-        for s in e["swaps"]
-    }
+        return _user_cols(df)
+
     if not touched:
         empty = read_merge_table(spark, target_dir).limit(0)
         return empty.select(
             F.col(key),
             F.lit("").alias("change_type"),
-            F.struct(*[c for c in empty.columns]).alias("old"),
-            F.struct(*[c for c in empty.columns]).alias("new"),
-        ).limit(0)
-
-    def read_side(version: int) -> DataFrame:
-        paths = _asof_bucket_paths(target_dir, version, log, touched)
-        if not paths:
-            return read_merge_table(spark, target_dir).limit(0)
-        df = _read_parquet(spark, *paths.values(), evolved=_evolved(target_dir))
-        return df.drop("__bucket__") if "__bucket__" in df.columns else df
-
+            F.struct(*empty.columns).alias("old"),
+            F.struct(*empty.columns).alias("new"),
+        )
     old_df = read_side(from_version)
     new_df = read_side(to_version)
-    # CDF across a schema-evolution boundary: the pre-evolution side has
-    # no post-evolution columns at all — conform it with typed nulls so
-    # the image structs align and a null -> value transition reads as an
-    # honest 'update'
     for c in new_df.columns:
         if c not in old_df.columns:
-            old_df = old_df.withColumn(
-                c, F.lit(None).cast(new_df.schema[c].dataType)
-            )
-    cols = [c for c in new_df.columns]
-    o = old_df.select(
-        F.col(key).alias("__k"), F.struct(*cols).alias("old")
-    )
-    n = new_df.select(
-        F.col(key).alias("__k"), F.struct(*cols).alias("new")
-    )
-    joined = o.join(n, "__k", "full_outer")
+            old_df = old_df.withColumn(c, F.lit(None).cast(new_df.schema[c].dataType))
+    cols = new_df.columns
+    o = old_df.select(F.col(key).alias("__k"), F.struct(*cols).alias("old"))
+    n = new_df.select(F.col(key).alias("__k"), F.struct(*cols).alias("new"))
     change = (
         F.when(F.col("old").isNull(), F.lit("insert"))
         .when(F.col("new").isNull(), F.lit("delete"))
         .when(~F.col("old").eqNullSafe(F.col("new")), F.lit("update"))
     )
     return (
-        joined.withColumn("change_type", change)
+        o.join(n, "__k", "full_outer")
+        .withColumn("change_type", change)
         .filter(F.col("change_type").isNotNull())
         .select(F.col("__k").alias(key), "change_type", "old", "new")
     )
-
-
-def vacuum_merge_history(target_dir: str, keep_last: int) -> list[int]:
-    """Retention: drop archived versions older than the newest
-    `keep_last` merges (Delta VACUUM's role for the undo log). Readable
-    history then starts at `last_seq - keep_last`; the floor is recorded
-    so as-of requests below it fail loudly instead of reconstructing
-    from missing archives. Returns the seqs removed."""
-    log = _read_commit_log(target_dir)
-    if not log:
-        return []
-    cutoff = max(log[-1]["seq"] - max(keep_last, 0), 0)
-    removed = []
-    for e in log:
-        if e["seq"] <= cutoff:
-            vdir = os.path.join(target_dir, _VERSIONS_DIR, str(e["seq"]))
-            if os.path.isdir(vdir):
-                shutil.rmtree(vdir, ignore_errors=True)
-                removed.append(e["seq"])
-    # The recorded floor is MONOTONE (ADVICE r7): a later vacuum with a
-    # larger keep_last computes a smaller cutoff, but the earlier vacuum
-    # already deleted the archives below the old floor — writing the
-    # smaller value would re-advertise unreadable versions. Never let
-    # the floor decrease.
-    prior = 0
-    vac_p = os.path.join(target_dir, _VACUUM_MARKER)
-    if os.path.exists(vac_p):
-        try:
-            with open(vac_p) as fh:
-                prior = int(fh.read().strip() or 0)
-        except (OSError, ValueError):  # pragma: no cover - corrupt marker
-            prior = 0
-    floor = max(cutoff, prior)
-    if floor > 0:
-        _install_root_files(target_dir, {_VACUUM_MARKER: str(floor)})
-    return removed
-
-
-def read_merge_table(spark: SparkSession, target_dir: str) -> DataFrame:
-    """Read a merge target in user-schema form (bucket column dropped).
-    Runs crash recovery first so a reader after a mid-merge crash sees
-    exactly the last COMMITTED state (uncommitted bucket swaps rolled
-    back, committed-but-unfinished merges rolled forward, a crashed
-    whole-table swap's parked layout restored)."""
-    recover_merge_table(target_dir)
-    df = _read_parquet(spark, target_dir, evolved=_evolved(target_dir))
-    return df.drop("__bucket__") if "__bucket__" in df.columns else df
-
-
-def _read_json(path: str) -> dict | None:
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
-
-
-def recover_merge_table(
-    target_dir: str, break_lock: bool = False, ignore_lock: bool = False
-) -> None:
-    """Crash recovery for the bucketed-merge commit protocol — makes a
-    multi-bucket MERGE all-or-nothing (the transactional contract the
-    reference gets from Postgres, `database/postgres/writer.py:351-407`).
-
-    Writer-lock discipline: while the sibling writer lock is held by a
-    LIVE pid, a pending intent file belongs to a live merge — rolling it
-    back from a concurrent reader would corrupt the writer mid-flight,
-    so recovery is a NO-OP unless the caller owns the lock
-    (`ignore_lock`, used internally by the merge itself). A lock whose
-    recorded owner pid is provably dead is reclaimed automatically
-    (r5 task 5): default-args readers after a crash recover to the last
-    committed state without anyone having to know to pass
-    `break_lock=True`; a live holder is never preempted. `break_lock`
-    remains for the declared single owner at lane startup (it claims
-    even a live-looking lock, e.g. after pid reuse on another host).
-
-    Protocol (see `_merge_bucketed`): swaps keep every replaced bucket as
-    `__bucket__=<i>.__old__`; the `_commit_manifest` (tmp-written then
-    `os.replace`d) is the single atomic COMMIT POINT. Recovery decides by
-    comparing the in-flight `_merge_pending` intent file with the last
-    committed manifest's merge id:
-
-    - pending == committed  → the merge COMMITTED but died during
-      cleanup: roll FORWARD — reinstall the manifest's root files (e.g.
-      the applied-batch marker), delete the `.__old__` backups, drop the
-      intent file. A redelivery then sees the marker and skips: no
-      double-apply.
-    - pending != committed  → the merge died BEFORE its commit point:
-      roll BACK every recorded swap (restore `.__old__`; delete buckets
-      that did not exist before), so the table reads as if the merge
-      never ran and the redelivered batch re-applies cleanly: no lost
-      rows, no partial application.
-
-    Idempotent and cheap (pure filesystem metadata ops), so callers run
-    it before reading the applied-batch marker and before every merge."""
-    lock_p = _lock_path(target_dir)
-    we_hold = False
-    if not ignore_lock:
-        # Recovery must hold the writer lock BEFORE touching pending
-        # state (ADVICE r6 for the stale-reclaim path; ADVICE r7 extends
-        # it to the no-lock path): even when no lock file exists at the
-        # check, a writer can acquire the lock and write _merge_pending
-        # in the window before _recover_unlocked runs — an unlocked
-        # reader would then roll back a LIVE merge mid-flight. So every
-        # non-owner caller wins the O_CREAT|O_EXCL create first and
-        # backs off if a writer (or a racing reader) gets in ahead.
-        break_attempts = 0
-        while True:
-            if break_lock:
-                # Declared single owner at lane startup: claims even a
-                # live-looking lock (e.g. pid reuse on another host).
-                try:
-                    os.remove(lock_p)
-                except FileNotFoundError:
-                    pass
-            try:
-                fd = os.open(lock_p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                if break_lock:
-                    # Bounded with a backoff (ADVICE r8): two concurrent
-                    # break_lock callers (or one racing a tight writer
-                    # loop) would otherwise busy-spin stealing the lock
-                    # from each other indefinitely. Mirrors the 500-step
-                    # bound in _acquire_merge_lock's recovery wait.
-                    break_attempts += 1
-                    if break_attempts >= 500:
-                        raise ConcurrentMergeError(
-                            f"break_lock on {target_dir} lost the re-claim"
-                            " race 500 times — another declared single"
-                            " owner is contending; refusing to spin"
-                        ) from None
-                    time.sleep(0.01)
-                    continue  # re-claim whatever raced in
-                if _lock_owner_dead(lock_p):
-                    if _reclaim_stale_lock(lock_p):
-                        continue  # contend on O_EXCL like normal
-                    return  # a racer claimed it; it owns recovery
-                return  # live writer owns the pending state; no-op
-            with os.fdopen(fd, "w") as fh:
-                json.dump(
-                    {
-                        "pid": os.getpid(),
-                        "host": os.uname().nodename,
-                        "recovery": True,
-                    },
-                    fh,
-                )
-            we_hold = True
-            break
-    try:
-        _recover_unlocked(target_dir)
-    finally:
-        if we_hold:
-            try:
-                os.remove(lock_p)
-            except FileNotFoundError:  # pragma: no cover - raced release
-                pass
-
-
-def _recover_unlocked(target_dir: str) -> None:
-    """The recovery state machine proper — callers must either hold the
-    writer lock or have established that no live writer exists (see
-    recover_merge_table's lock discipline)."""
-    # whole-table swap crash (full rewrite / rebucket): the old layout
-    # was renamed aside but the new one never landed — restore it
-    whole_old = target_dir.rstrip("/") + ".__merge_old__"
-    if os.path.exists(whole_old) and not os.path.exists(target_dir):
-        os.rename(whole_old, target_dir)
-    if not os.path.isdir(target_dir):
-        return  # nothing on disk to recover
-    pending_p = os.path.join(target_dir, _PENDING_FILE)
-    commit_p = os.path.join(target_dir, _COMMIT_FILE)
-    tmp = target_dir.rstrip("/") + ".__merge_tmp__"
-    pending = _read_json(pending_p)
-    if pending is None:
-        # No merge in flight. A stray .__old__ here can only be legacy
-        # (pre-manifest) debris: restore it if it holds the only copy of
-        # its bucket, otherwise drop it.
-        for entry in os.listdir(target_dir):
-            if not entry.endswith(".__old__"):
-                continue
-            old = os.path.join(target_dir, entry)
-            dst = os.path.join(target_dir, entry[: -len(".__old__")])
-            if os.path.exists(dst):
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.rename(old, dst)
-        return
-    commit = _read_json(commit_p)
-    if commit is not None and commit.get("merge_id") == pending["merge_id"]:
-        # committed: finish what the cleanup phase would have done —
-        # archiving the replaced buckets when history is on (the
-        # _archive_commit idempotence contract makes this re-runnable
-        # from any crash point), deleting them otherwise
-        _install_root_files(target_dir, commit.get("extra_files") or {})
-        if _history_enabled(target_dir):
-            _archive_commit(target_dir, pending)
-        else:
-            for swap in pending["swaps"]:
-                old = os.path.join(
-                    target_dir, f"__bucket__={swap['bucket']}.__old__"
-                )
-                shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.remove(pending_p)
-        return
-    # uncommitted: undo every swap the intent file recorded
-    for swap in pending["swaps"]:
-        dst = os.path.join(target_dir, f"__bucket__={swap['bucket']}")
-        old = dst + ".__old__"
-        if swap["had_prev"]:
-            if os.path.exists(old):
-                shutil.rmtree(dst, ignore_errors=True)
-                os.rename(old, dst)
-            # old absent → this swap never started; dst is the original
-        else:
-            # bucket is new in this merge: rolling back means removing it
-            shutil.rmtree(dst, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.remove(pending_p)
-
-
-def _bucketed_n(target_dir: str) -> int | None:
-    p = os.path.join(target_dir, _N_BUCKETS_FILE)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return int(fh.read().strip())
 
 
 def merge_into_parquet(
@@ -770,566 +197,85 @@ def merge_into_parquet(
     key: str,
     set_exprs: dict[str, Column],
     insert_missing: bool = False,
-    extra_files: dict[str, str] | None = None,
     applied_batch_id: int | None = None,
     evolve_schema: bool = False,
     evolve_cols: list[str] | None = None,
 ) -> None:
     """K4: MERGE INTO target USING updates ON target.key = updates.key
-    WHEN MATCHED THEN UPDATE SET <set_exprs> [WHEN NOT MATCHED INSERT].
-
-    `evolve_schema=True` (VERDICT r9 task 6) WIDENS the table: every
-    updates column absent from the target schema becomes a new table
-    column (matched/inserted rows take the update's value — or the
-    set_exprs entry if one is given — and pre-existing unmatched rows
-    read as null). `evolve_cols` (ADVICE r9) restricts the widening to
-    an explicit allowlist, so updates columns that are only join-side
-    helpers for set_exprs (intermediate sums, flags) are NOT silently
-    persisted into the table schema — pass the columns you mean to
-    evolve. Only touched buckets are rewritten with the new
-    schema; untouched buckets keep their old files and the table flips
-    to mergeSchema reads via the `_schema_evolved` marker, installed
-    atomically with the commit manifest (crash roll-forward reinstalls
-    it). Time travel is unaffected: a pre-evolution version's as-of
-    file set contains only pre-evolution files, so it reads with the
-    OLD schema. With the default evolve_schema=False, extra updates
-    columns stay what they always were — join-side helpers for
-    set_exprs, never table columns.
-
-    `applied_batch_id` makes an additive foreachBatch upsert exactly-once
-    under MULTI-process redelivery: the marker is re-read AFTER the merge
-    lock is held, and the merge no-ops if another driver already applied
-    a batch >= this id (ADVICE r8: an unlocked check-then-merge let a
-    zombie driver double-count a batch a failover driver had merged).
+    WHEN MATCHED THEN UPDATE SET <set_exprs> [WHEN NOT MATCHED INSERT],
+    through the merge table's transaction log (`merge_delta_table`:
+    bucket-pruned copy-on-write, one atomic commit, optimistic
+    concurrency).
 
     `set_exprs` sees the joined row with target columns as `t.<c>` and
     update columns as `u.<c>`. Unmatched target rows pass through; with
     `insert_missing`, unmatched update rows are inserted (columns not
     covered by set_exprs default to null).
 
-    Physical strategy, best available first:
+    `applied_batch_id` makes an additive foreachBatch upsert exactly-once
+    under redelivery: it is recorded as the commit's `txn` action, and a
+    batch id at or below the recorded one is a no-op — checked against
+    the snapshot the commit lands on, so a zombie driver cannot
+    double-apply a batch a failover driver already merged.
 
-    1. **Delta** (`_delta_log` present): transactional `MERGE INTO` —
-       file-pruned, atomic, concurrent-safe. Via the delta-spark
-       library when importable (plain merges), else via the engine's
-       own protocol writer (`sources/delta_log.py:merge_delta_table`,
-       copy-on-write remove+add in one commit); applied_batch_id maps
-       to the protocol's `txn` action and evolve_schema to a metaData
-       re-emit, so both guarantees hold on Delta targets too.
-    2. **Hash-bucketed parquet** (`_n_buckets` marker present, written by
-       `create_bucketed_table`): read/join/rewrite ONLY the buckets the
-       update keys hash into; untouched buckets are never opened. Swaps
-       are made ALL-OR-NOTHING across buckets by a root-level commit
-       manifest: an intent file records the planned swaps, `.__old__`
-       backups are kept through the swap loop, and one atomic
-       `os.replace` of `_commit_manifest` (which also carries the
-       applied-batch marker contents) commits the whole merge.
-       `recover_merge_table` rolls an uncommitted crash back and a
-       committed-but-uncleaned crash forward — a single-table analogue
-       of a Delta/Iceberg commit log, and the same contract the
-       reference gets from Postgres transactions (`writer.py:351-407`).
-    3. **Plain parquet dir**: whole-table read → join → rewrite through a
-       tmp dir and a two-rename swap. A failed job never corrupts the
-       target; a crash between the renames leaves the data in
-       `<target>.__merge_old__` (recovery: rename it back and re-run).
-    """
-    if evolve_cols is not None and not evolve_schema:
-        raise ValueError("evolve_cols requires evolve_schema=True")
-    if _HAS_DELTA and os.path.isdir(os.path.join(target_dir, "_delta_log")):
-        if applied_batch_id is None and not evolve_schema:
-            # Delta brings its own optimistic concurrency control
-            _merge_delta(
-                spark, target_dir, updates, key, set_exprs, insert_missing, extra_files
-            )
-            return
-        # applied_batch_id / evolve_schema: the library MERGE has
-        # neither the locked applied-batch recheck nor our widening
-        # allowlist — the NATIVE protocol writer implements both
-        # (txn action + metaData re-emit), so route there (r10
-        # VERDICT task 2; formerly a loud NotImplementedError)
-    # A _delta_log carrying our exporter's sentinel is a DERIVED mirror
-    # (about to go stale): drop it, merge bucketed, and let the caller
-    # re-export. ANY other _delta_log — library-written or authored by
-    # our native protocol writer — is a live Delta table: merge THROUGH
-    # the transaction log (copy-on-write remove+add in one commit,
-    # `txn` for the applied-batch guarantee, metaData re-emit for
-    # widening), never around it.
-    dl = os.path.join(target_dir, "_delta_log")
-    if os.path.isdir(dl):
-        from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
-            EXPORT_SENTINEL,
-            merge_delta_table,
-        )
-
-        if os.path.exists(os.path.join(dl, EXPORT_SENTINEL)):
-            shutil.rmtree(dl, ignore_errors=True)
-        else:
-            from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
-                _latest_checkpoint_at_or_below,
-                delta_versions,
-            )
-
-            if not delta_versions(target_dir) and not _latest_checkpoint_at_or_below(
-                target_dir, 1 << 62
-            ):
-                # A _delta_log with NO commits and no sentinel is not a
-                # live Delta table — it is a foreign marker the engine
-                # did not derive. Writing around it would desync a
-                # third-party writer; writing through it would invent a
-                # table that writer never created. Refuse loudly.
-                raise RuntimeError(
-                    f"refusing to merge: {dl} exists but holds no Delta "
-                    "commits and the engine did not derive it (no export "
-                    "sentinel) — a foreign transaction log must not be "
-                    "written around or through"
-                )
-            merge_delta_table(
-                spark,
-                target_dir,
-                updates,
-                key,
-                set_exprs,
-                insert_missing=insert_missing,
-                txn_app_id="spark-graft-applied-batch"
-                if applied_batch_id is not None
-                else None,
-                txn_version=applied_batch_id,
-                evolve_schema=evolve_schema,
-                evolve_cols=evolve_cols,
-            )
-            _install_root_files(target_dir, extra_files)
-            return
-    # the parquet paths are single-writer: claim the writer lock so a
-    # second concurrent writer fails loudly instead of racing recovery
-    _acquire_merge_lock(target_dir)
-    try:
-        if applied_batch_id is not None:
-            marker = os.path.join(target_dir, "_last_applied_batch")
-            if os.path.exists(marker):
-                with open(marker) as fh:
-                    content = fh.read().strip()
-                if content and applied_batch_id <= int(content):
-                    return  # another driver merged this batch first
-        n_buckets = _bucketed_n(target_dir)
-        if n_buckets is not None:
-            _merge_bucketed(
-                spark,
-                target_dir,
-                updates,
-                key,
-                set_exprs,
-                insert_missing,
-                extra_files,
-                n_buckets,
-                evolve_schema,
-                evolve_cols,
-            )
-            return
-        _merge_full_rewrite(
-            spark,
-            target_dir,
-            updates,
-            key,
-            set_exprs,
-            insert_missing,
-            extra_files,
-            evolve_schema,
-            evolve_cols,
-        )
-    finally:
-        _release_merge_lock(target_dir)
-
-
-def _evolution_new_cols(
-    updates: DataFrame,
-    existing: set[str],
-    evolve_schema: bool,
-    evolve_cols: list[str] | None,
-) -> list[str]:
-    """Which updates columns become new TABLE columns this merge.
-    With an explicit `evolve_cols` allowlist only those are promoted
-    (and each must actually be an updates column); without one, every
-    updates column absent from the target widens the table — the r9
-    behavior, kept for callers that curate their updates projection."""
-    if not evolve_schema:
-        return []
-    if evolve_cols is not None:
-        missing = [c for c in evolve_cols if c not in updates.columns]
-        if missing:
-            raise ValueError(f"evolve_cols not in updates: {missing}")
-        return [c for c in evolve_cols if c not in existing]
-    return [c for c in updates.columns if c not in existing]
-
-
-def _merged_output(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str,
-    set_exprs: dict[str, Column],
-    insert_missing: bool,
-    data_cols: list[str],
-    new_cols: frozenset[str] = frozenset(),
-) -> DataFrame:
-    """The MERGE join + per-column WHEN MATCHED/NOT MATCHED projection,
-    shared by the bucketed and full-rewrite paths. Columns in `new_cols`
-    (schema evolution) have no stored target side: the target is padded
-    with typed nulls for them, so a set_exprs entry may reference
-    `t.<c>` uniformly whether the column is new this batch or was
-    evolved in an earlier one (ADVICE r9: the coalesce(u.c, t.c)
-    idiom must work in EVERY batch of an upgraded feed, not only the
-    widening batch). Matched/inserted rows take the update's value (or
-    the set_exprs entry); unmatched target rows read null."""
-    for c in new_cols:
-        target = target.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
-    t = target.alias("t")
-    u = updates.alias("u")
-    join_type = "full_outer" if insert_missing else "left_outer"
-    joined = t.join(u, F.col(f"t.{key}") == F.col(f"u.{key}"), join_type)
-    matched = F.col(f"u.{key}").isNotNull()
-    out_cols = []
-    for c in data_cols:
-        if c == key:
-            out_cols.append(F.coalesce(F.col(f"t.{key}"), F.col(f"u.{key}")).alias(c))
-        elif c in new_cols:
-            out_cols.append(
-                F.when(matched, set_exprs.get(c, F.col(f"u.{c}")))
-                .otherwise(F.col(f"t.{c}"))  # the typed-null pad above
-                .alias(c)
-            )
-        elif c in set_exprs:
-            out_cols.append(
-                F.when(matched, set_exprs[c]).otherwise(F.col(f"t.{c}")).alias(c)
-            )
-        else:
-            out_cols.append(F.col(f"t.{c}").alias(c))
-    return joined.select(*out_cols)
-
-
-def _install_root_files(target_dir: str, extra_files: dict[str, str] | None) -> None:
-    """Install root-level metadata (e.g. the applied-batch marker)
-    atomically per file via write-tmp + os.replace."""
-    for name, content in (extra_files or {}).items():
-        tmpf = os.path.join(target_dir, f".{name}.tmp")
-        with open(tmpf, "w") as fh:
-            fh.write(content)
-        os.replace(tmpf, os.path.join(target_dir, name))
-
-
-def _merge_bucketed(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: str,
-    set_exprs: dict[str, Column],
-    insert_missing: bool,
-    extra_files: dict[str, str] | None,
-    n_buckets: int,
-    evolve_schema: bool = False,
-    evolve_cols: list[str] | None = None,
-) -> None:
-    """Bucket-scoped MERGE: rewrite only `__bucket__=<i>` directories
-    whose bucket id appears among the update keys. The touched-bucket
-    collect is ≤ n_buckets ints — driver-safe at any scale.
-
-    Multi-bucket atomicity via a root-level COMMIT MANIFEST: before any
-    swap, an intent file (`_merge_pending`) records the merge id and
-    every planned swap; the per-bucket swaps keep their `.__old__`
-    backups; then `_commit_manifest` — carrying the same merge id, the
-    touched buckets and the root metadata (applied-batch marker) — is
-    tmp-written and `os.replace`d as the SINGLE atomic commit point.
-    Only after that are backups and the intent file garbage-collected.
-    A crash anywhere is resolved by `recover_merge_table`: before the
-    manifest lands, every swap rolls back (the merge never happened —
-    redelivery re-applies, nothing lost); after it lands, cleanup rolls
-    forward (marker present — redelivery skips, nothing double-applied)."""
-    recover_merge_table(target_dir, ignore_lock=True)  # caller holds the lock
-    # The updates plan is executed TWICE per merge — once for the
-    # touched-bucket collect, once as the join side of the rewrite. For
-    # expensive update pipelines (the bitemporal/asof queries derive
-    # updates from a lineitem aggregation + join) that doubles the
-    # merge's compute, so persist across the two jobs and drop the cache
-    # before returning (guide §5: persist only for genuine reuse,
-    # unpersist when done). Updates are delta-sized by the merge
-    # contract, so the cache is O(delta), never O(table). Callers that
-    # persisted their own updates keep ownership — we neither re-persist
-    # nor unpersist theirs.
-    lvl = updates.storageLevel
-    we_cached = not (lvl.useMemory or lvl.useDisk)
-    if we_cached:
-        updates.persist()
-    try:
-        _merge_bucketed_inner(
-            spark,
-            target_dir,
-            updates,
-            key,
-            set_exprs,
-            insert_missing,
-            extra_files,
-            n_buckets,
-            evolve_schema,
-            evolve_cols,
-        )
-    finally:
-        if we_cached:
-            updates.unpersist()
-
-
-def _merge_bucketed_inner(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: str,
-    set_exprs: dict[str, Column],
-    insert_missing: bool,
-    extra_files: dict[str, str] | None,
-    n_buckets: int,
-    evolve_schema: bool = False,
-    evolve_cols: list[str] | None = None,
-) -> None:
-    touched = sorted(
-        r[0]
-        for r in updates.select(
-            _bucket_of(F.col(key), n_buckets).alias("__bucket__")
-        )
-        .distinct()
-        .collect()
-    )
-    tmp = target_dir.rstrip("/") + ".__merge_tmp__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    if not touched:
-        # no data change: the root metadata install is a single atomic
-        # os.replace per file, no manifest needed
-        _install_root_files(target_dir, extra_files)
-        return
-    full = _read_parquet(spark, target_dir, evolved=_evolved(target_dir))
-    data_cols = [c for c in full.columns if c != "__bucket__"]
-    new_cols = _evolution_new_cols(
-        updates, set(data_cols) | {"__bucket__"}, evolve_schema, evolve_cols
-    )
-    if new_cols:
-        # the evolution marker rides the commit manifest's extra_files:
-        # installed atomically with the merge, reinstalled by crash
-        # roll-forward, never observed without the widened data
-        extra_files = dict(extra_files or {})
-        extra_files[_EVOLVED_MARKER] = json.dumps(
-            sorted(set(_evolved_cols(target_dir)) | set(new_cols))
-        )
-    # partition filter → Spark prunes untouched bucket directories at
-    # the scan; only touched buckets are ever opened
-    target = full.filter(F.col("__bucket__").isin(touched)).drop("__bucket__")
-    merged = _merged_output(
-        target,
+    `evolve_schema=True` WIDENS the table: every updates column absent
+    from the target becomes a new table column (matched/inserted rows
+    take the update's value — or the set_exprs entry — and pre-existing
+    unmatched rows read null). `evolve_cols` restricts the widening to
+    an explicit allowlist, so updates columns that are only join-side
+    helpers for set_exprs are NOT persisted into the table schema."""
+    merge_delta_table(
+        spark,
+        target_dir,
         updates,
         key,
         set_exprs,
-        insert_missing,
-        data_cols + new_cols,
-        frozenset(new_cols),
-    ).withColumn("__bucket__", _bucket_of(F.col(key), n_buckets))
-    (
-        merged.repartition("__bucket__")
-        .write.mode("overwrite")
-        .partitionBy("__bucket__")
-        .parquet(tmp)
+        insert_missing=insert_missing,
+        txn_app_id=None if applied_batch_id is None else _APPLIED_BATCH_APP,
+        txn_version=applied_batch_id,
+        evolve_schema=evolve_schema,
+        evolve_cols=evolve_cols,
     )
-    swaps = []
-    for b in touched:
-        if not os.path.exists(os.path.join(tmp, f"__bucket__={b}")):
-            continue  # no surviving rows for this bucket: nothing to swap
-        dst = os.path.join(target_dir, f"__bucket__={b}")
-        swaps.append({"bucket": b, "had_prev": os.path.exists(dst)})
-    manifest = {
-        "merge_id": uuid.uuid4().hex,
-        "swaps": swaps,
-        "extra_files": dict(extra_files or {}),
-    }
-    _install_root_files(target_dir, {_PENDING_FILE: json.dumps(manifest)})
-    for swap in swaps:
-        b = swap["bucket"]
-        src = os.path.join(tmp, f"__bucket__={b}")
-        dst = os.path.join(target_dir, f"__bucket__={b}")
-        if swap["had_prev"]:
-            os.rename(dst, dst + ".__old__")
-        os.rename(src, dst)
-        if _post_swap_hook is not None:
-            _post_swap_hook(b)
-    # ---- COMMIT POINT: one atomic rename makes the whole merge real ----
-    _install_root_files(target_dir, {_COMMIT_FILE: json.dumps(manifest)})
-    # cleanup (crash-safe: recover_merge_table re-runs it on demand);
-    # with history enabled the replaced buckets ARCHIVE instead of dying
-    _install_root_files(target_dir, extra_files)
-    if _history_enabled(target_dir):
-        _archive_commit(target_dir, manifest)
-    else:
-        for swap in swaps:
-            shutil.rmtree(
-                os.path.join(target_dir, f"__bucket__={swap['bucket']}.__old__"),
-                ignore_errors=True,
-            )
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.remove(os.path.join(target_dir, _PENDING_FILE))
-
-
-def _merge_delta(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: str,
-    set_exprs: dict[str, Column],
-    insert_missing: bool,
-    extra_files: dict[str, str] | None,
-) -> None:  # pragma: no cover - exercised only where delta-spark is installed
-    """Transactional MERGE INTO via Delta Lake — same t./u. alias contract
-    as the parquet paths, with real ACID semantics."""
-    dt = DeltaTable.forPath(spark, target_dir)
-    cols = dt.toDF().columns
-    m = dt.alias("t").merge(updates.alias("u"), F.expr(f"t.{key} = u.{key}"))
-    m = m.whenMatchedUpdate(set=dict(set_exprs))
-    if insert_missing:
-        values = {
-            c: set_exprs.get(
-                c, F.col(f"u.{key}") if c == key else F.lit(None)
-            )
-            for c in cols
-        }
-        m = m.whenNotMatchedInsert(values=values)
-    m.execute()
-    _install_root_files(target_dir, extra_files)
-
-
-def _merge_full_rewrite(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: str,
-    set_exprs: dict[str, Column],
-    insert_missing: bool,
-    extra_files: dict[str, str] | None,
-    evolve_schema: bool = False,
-    evolve_cols: list[str] | None = None,
-) -> None:
-    """Whole-table rewrite fallback for unbucketed targets."""
-    # clear leftovers from a crashed prior run: a stale __merge_old__
-    # would make our os.rename(target, old) raise; a stale tmp is dead
-    # weight. If only __merge_old__ survives (crash between renames),
-    # restore it as the target before proceeding.
-    tmp_path = target_dir.rstrip("/") + ".__merge_tmp__"
-    old_path = target_dir.rstrip("/") + ".__merge_old__"
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    if os.path.exists(old_path):
-        if os.path.exists(target_dir):
-            shutil.rmtree(old_path, ignore_errors=True)
-        else:
-            os.rename(old_path, target_dir)
-
-    target = _read_parquet(spark, target_dir, evolved=_evolved(target_dir))
-    new_cols = _evolution_new_cols(
-        updates, set(target.columns), evolve_schema, evolve_cols
-    )
-    if new_cols:
-        extra_files = dict(extra_files or {})
-        extra_files[_EVOLVED_MARKER] = json.dumps(
-            sorted(set(_evolved_cols(target_dir)) | set(new_cols))
-        )
-    merged = _merged_output(
-        target,
-        updates,
-        key,
-        set_exprs,
-        insert_missing,
-        target.columns + new_cols,
-        frozenset(new_cols),
-    )
-
-    tmp = tmp_path
-    merged.write.mode("overwrite").parquet(tmp)
-    # extra_files install atomically WITH the data swap (written into tmp
-    # before the rename), so e.g. an applied-batch marker can never be
-    # observed without the data it describes — the idempotence anchor for
-    # at-least-once callers (streaming foreachBatch)
-    for name, content in (extra_files or {}).items():
-        with open(os.path.join(tmp, name), "w") as f:
-            f.write(content)
-    old = old_path
-    os.rename(target_dir, old)
-    os.rename(tmp, target_dir)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def rebucket_merge_table(
     spark: SparkSession, target_dir: str, key: str, n_buckets: int
 ) -> None:
-    """Maintenance op for table GROWTH (the docstring note above —
-    'on a 100 TB table you would raise n_buckets so each bucket is a
-    few GB' — made executable): rewrite the bucketed layout under a new
-    modulus. Holds the single-writer lock (concurrent merges fail
-    loudly, crashed holders self-clear); runs crash recovery first; the
-    swap is the same two-rename protocol as the full rewrite (new layout
-    fully materialized in `.__merge_tmp__`, old layout parked at
-    `.__merge_old__`), and `recover_merge_table` restores the old layout
-    if the process dies between the renames — readers never see a
-    missing or half-written table. Root metadata files (applied-batch
-    markers, the last commit manifest) are carried into the new layout,
-    so streaming upserters keep their exactly-once anchor across the
-    re-bucketing. Cost is one full-table read+write — the same as
+    """Maintenance op for table GROWTH: rewrite the table under a new
+    bucket modulus in ONE commit — remove every active file, add the
+    re-bucketed ones (dataChange=false: same rows, new layout) and
+    re-emit metaData with the new key and modulus. Every earlier
+    version stays readable from the log, so time travel and the change
+    feed span the rebucket. A writer that commits first makes this
+    raise DeltaCommitConflict (its staged files are removed); re-run it
+    on the new head. Cost is one full-table read+write — the same as
     Delta/Iceberg OPTIMIZE-style rewrites — after which every MERGE is
     again proportional to touched buckets at the new granularity."""
-    _acquire_merge_lock(target_dir)
-    try:
-        recover_merge_table(target_dir, ignore_lock=True)
-        if _bucketed_n(target_dir) is None:
-            raise ValueError(
-                f"{target_dir} is not a bucketed merge table (no "
-                f"{_N_BUCKETS_FILE} marker); use create_bucketed_table"
-            )
-        if n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        if _history_enabled(target_dir):
-            # the undo log is keyed by bucket ids under the OLD modulus;
-            # a re-bucket invalidates every archived overlay
-            raise ValueError(
-                f"{target_dir} keeps merge history; re-bucketing would "
-                "orphan the undo log. vacuum_merge_history(keep_last=0) "
-                "and remove _history_enabled first if you mean it."
-            )
-        df = spark.read.parquet(target_dir)
-        data = df.drop("__bucket__") if "__bucket__" in df.columns else df
-        tmp = target_dir.rstrip("/") + ".__merge_tmp__"
-        old = target_dir.rstrip("/") + ".__merge_old__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        # Crash-retry safety (ADVICE r6): a prior rewrite that died after
-        # its second rename but before rmtree(old) leaves a stale
-        # non-empty .__merge_old__ next to a LIVE target — recovery only
-        # restores it when the target is missing, so without this sweep
-        # the os.rename(target_dir, old) below would raise ENOTEMPTY on
-        # every retry. Mirrors _merge_full_rewrite's pre-swap cleanup.
-        if os.path.exists(old) and os.path.exists(target_dir):
-            shutil.rmtree(old, ignore_errors=True)
-        (
-            data.withColumn("__bucket__", _bucket_of(F.col(key), n_buckets))
-            .repartition("__bucket__")
-            .write.mode("overwrite")
-            .partitionBy("__bucket__")
-            .parquet(tmp)
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    versions = delta_versions(target_dir)
+    state = replay_state(spark, target_dir) if versions else None
+    if state is None or bucket_spec(state.metadata) is None:
+        raise ValueError(
+            f"{target_dir} is not a bucketed merge table; use create_bucketed_table"
         )
-        # carry root metadata into the new layout; _n_buckets is
-        # rewritten with the new modulus, Spark's _SUCCESS is tmp's own
-        for entry in os.listdir(target_dir):
-            p = os.path.join(target_dir, entry)
-            if (
-                os.path.isfile(p)
-                and entry not in (_N_BUCKETS_FILE, "_SUCCESS")
-                and not entry.startswith(".")
-            ):
-                shutil.copy2(p, os.path.join(tmp, entry))
-        with open(os.path.join(tmp, _N_BUCKETS_FILE), "w") as fh:
-            fh.write(str(n_buckets))
-        os.rename(target_dir, old)
-        os.rename(tmp, target_dir)
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        _release_merge_lock(target_dir)
+    head = versions[-1]
+    data = read_delta_table(spark, target_dir, version=head).drop(BUCKET_COL)
+    md = dict(state.metadata)
+    md["configuration"] = dict(
+        md.get("configuration") or {},
+        **{BUCKET_KEY_CONF: key, BUCKET_COUNT_CONF: str(n_buckets)},
+    )
+    _commit_rewrite(
+        spark,
+        target_dir,
+        head,
+        state,
+        data.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).repartition(BUCKET_COL),
+        "REBUCKET",
+        CHECKPOINT_INTERVAL,
+        metadata=md,
+    )
 
 
 def apply_fills(
@@ -1487,16 +433,15 @@ GROUP BY 1, 2
 )
 def ticket_fill_history_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME TRAVEL over the merge table (the Delta/Iceberg snapshot-read
-    feature on the plain-parquet bucketed layout): seed tickets with
-    `keep_history=True`, apply the SAME two fill batches as
+    feature): seed tickets, apply the SAME two fill batches as
     `ticket_fill_merge`, then read BOTH committed versions back via
     `read_merge_table_asof` — version 1 must show exactly the state
     after the first batch even though a second merge has since
-    rewritten those buckets. The undo-log archive is sized by what each
-    merge touched, never by the table, so history on a 100 TB target
-    costs delta-bytes per commit. The oracle recomputes both version
-    states declaratively from the raw tables; matching BOTH rowsets
-    proves the as-of overlay picks exactly the right archived buckets."""
+    rewritten those buckets. A merge only adds the touched buckets'
+    new files and tombstones the old ones, so history on a 100 TB
+    target costs delta-bytes per commit. The oracle recomputes both
+    version states declaratively from the raw tables; matching BOTH
+    rowsets proves log replay picks exactly the right file set."""
     import tempfile
 
     root = tempfile.mkdtemp(prefix="sgasof_")
@@ -1513,7 +458,6 @@ def ticket_fill_history_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("pending").alias("status"),
             ),
             key="ticket_id",
-            keep_history=True,
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ticket_id"),
@@ -1585,8 +529,7 @@ JOIN ball ON ball.ticket_id = c.ticket_id
     tags=("K4", "time-travel", "cdc", "lakehouse"),
 )
 def ticket_fill_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHANGE DATA FEED off the merge table's undo log (Delta CDF's
-    role): the exact per-key deltas between committed versions 1 and 2
+    """CHANGE DATA FEED off the merge table's log (Delta CDF's role): the exact per-key deltas between committed versions 1 and 2
     of the ticket lifecycle — pre- and post-image columns tagged with
     the change type, computed by reading ONLY the buckets the second
     merge touched. This is what a downstream incremental consumer
@@ -1612,7 +555,6 @@ def ticket_fill_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("pending").alias("status"),
             ),
             key="ticket_id",
-            keep_history=True,
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ticket_id"),
@@ -1690,8 +632,7 @@ def bitemporal_ticket_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BITEMPORAL as-of on the merge table: VALID TIME (when a ticket
     status was true in the world — SCD2 rows with [valid_from,
     valid_to) intervals) crossed with TRANSACTION TIME (when the system
-    recorded it — the undo-log versions of the keep_history commit
-    protocol). Merge 1 runs the batch-1 SCD2 transition (close the
+    recorded it — the merge table's log versions). Merge 1 runs the batch-1 SCD2 transition (close the
     pending row at day 10, insert the open successor) — transaction
     version 1. Merge 2 is a RETROACTIVE CORRECTION: for tickets whose
     later fills complete the order, the OPEN row's status is revised in
@@ -1701,7 +642,7 @@ def bitemporal_ticket_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corrections never leak backward in valid time), while day 15
     differs between tx 1 and tx 2 — 'as recorded then' vs 'as corrected
     now'. SQL:2011 temporal tables / Delta time travel only give one
-    axis each; this is both, from the same undo log, priced by
+    axis each; this is both, from the same log, priced by
     touched-buckets (the time-travel cost argument of
     ticket_fill_history_asof). All three SCD2 verbs (close, insert,
     revise) ride ONE merge primitive via coalesce(u.c, t.c) set-exprs —
@@ -1729,7 +670,6 @@ def bitemporal_ticket_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(_BT_OPEN_END).cast("long").alias("valid_to"),
             ),
             key="skey",
-            keep_history=True,
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ticket_id"),
@@ -1916,22 +856,20 @@ FROM u GROUP BY 1, 2, 3
     tags=("K4", "schema-evolution", "time-travel", "lakehouse"),
 )
 def ticket_fill_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCHEMA EVOLUTION on the merge table (VERDICT r9 task 6 — the one
-    Delta-MERGE feature the bucketed store lacked): seed tickets with
-    history, apply a plain fill batch (version 1, old schema), then an
+    """SCHEMA EVOLUTION on the merge table (VERDICT r9 task 6): seed
+    tickets, apply a plain fill batch (version 1, old schema), then an
     EVOLVING merge whose source carries a brand-new `venue` column
     (version 2) with `evolve_schema=True` — the table widens, touched
     rows take the venue, pre-existing untouched rows read venue as null,
     and only touched buckets were rewritten (untouched buckets keep
-    their pre-evolution files; the table flips to mergeSchema reads via
-    the `_schema_evolved` marker installed atomically with the commit
-    manifest).
+    their pre-evolution files; the commit re-emits metaData with the
+    widened schema, which the reader imposes on every file).
 
     The query reads ACROSS the evolution boundary: version 1 via time
-    travel (whose as-of file set contains only pre-evolution files, so
-    it presents the OLD schema — `venue_col_present` false is computed
-    from the actual DataFrame columns, not assumed) and the live table
-    (new schema, venue nulls for never-touched tickets). The oracle
+    travel (whose metaData still holds the OLD schema —
+    `venue_col_present` false is computed from the actual DataFrame
+    columns, not assumed) and the live table (new schema, venue nulls
+    for never-touched tickets). The oracle
     restates both versions declaratively; matching both rowsets proves
     the widened reads, the null backfill, and the time-travel schema
     isolation simultaneously. Reference anchor: the reference's fixed
@@ -1953,7 +891,6 @@ def ticket_fill_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("pending").alias("status"),
             ),
             key="ticket_id",
-            keep_history=True,
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ticket_id"),

@@ -71,6 +71,19 @@ POSTURE: dict[str, str] = {
 }
 
 
+def driver_memory() -> str:
+    """`spark.driver.memory` for a session this module launches:
+    `$SPARK_GRAFT_DRIVER_MEM` when set, else half the machine's physical
+    RAM capped at 16g. In local mode the driver heap also hosts every
+    executor task, so the other half is left to the Python workers,
+    off-heap Arrow buffers and the OS."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "financial_arbitrage_data_pipeline_spark",
     master: str | None = None,
@@ -97,7 +110,7 @@ def get_spark(
         .config(map=POSTURE)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config(map=extra_conf or {})
         .getOrCreate()
     )

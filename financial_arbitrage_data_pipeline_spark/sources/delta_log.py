@@ -1,27 +1,31 @@
-"""Delta Lake transaction-log bridge — the OPEN lakehouse commit format.
+"""Delta Lake transaction log — the engine's one table format.
 
 The reference persists its durable ticket/fill state through a
 hand-rolled Postgres upsert sink (`/root/reference/database/postgres/
-writer.py:351-407`). Our engine's durable sink is the bucketed
-parquet MERGE table (`operators/upsert.py`) with its own manifest
-commit log. This module bridges that table into the PUBLIC Delta Lake
-transaction-log format so the state becomes readable by ANY Delta
-client — delta-spark, delta-rs, Trino, DuckDB's delta extension —
-with no dependency on this engine.
+writer.py:351-407`). This engine persists it as Delta tables written
+by this module: the merge tables of `operators/upsert.py` (bucket-
+partitioned, see `create_bucketed_table`), the streaming `txn` sinks
+and the plain append/OPTIMIZE/DV tables. The state is readable by ANY
+Delta client — delta-spark, delta-rs, Trino, DuckDB's delta extension
+— with no dependency on this engine.
 
 Everything here is implemented from the openly published protocol
 specification (delta.io, PROTOCOL.md: "Delta Transaction Log
 Protocol") — no Delta library is imported:
 
 - ``_delta_log/{version:020d}.json`` — one commit per file, one JSON
-  action per line. Actions used: ``protocol`` (minReaderVersion=1,
-  minWriterVersion=2 — the base feature set: nothing here needs
-  deletion vectors / column mapping / generated columns), ``metaData``
+  action per line, written put-if-absent (optimistic concurrency: the
+  loser of a version race retries on the new head). Actions used:
+  ``protocol`` (minReaderVersion=1, minWriterVersion=2 — upgraded to
+  the deletionVectors feature on first DV use), ``metaData``
   (``schemaString`` is the Spark StructType JSON — Delta's schema
-  serialization IS Spark's), ``add`` (relative URL-encoded path,
-  ``partitionValues``, ``size``, ``modificationTime``, ``dataChange``,
-  ``stats`` JSON with ``numRecords``), ``remove`` (tombstone with
-  ``deletionTimestamp``), ``commitInfo`` (informational).
+  serialization IS Spark's; ``configuration`` carries table
+  properties such as a merge table's bucket key and modulus), ``add``
+  (relative URL-encoded path, ``partitionValues``, ``size``,
+  ``modificationTime``, ``dataChange``, ``stats`` JSON with
+  ``numRecords`` and min/max/nullCount), ``remove`` (tombstone with
+  ``deletionTimestamp``), ``txn`` (the idempotent-writer handshake)
+  and ``commitInfo`` (informational).
 - ``{version:020d}.checkpoint.parquet`` every ``checkpoint_interval``
   commits + ``_last_checkpoint`` ``{"version": V, "size": N}`` — the
   replay shortcut: a reader starts from the newest checkpoint at or
@@ -32,17 +36,13 @@ Protocol") — no Delta library is imported:
   supersedes earlier actions for that path; a ``remove`` tombstones it.
 
 Scale notes (100 TB):
-- The log carries FILE METADATA only — export cost is proportional to
-  files touched, never to table bytes. ``add.stats`` gives any Delta
-  reader per-file ``numRecords`` (and min/max would slot in the same
-  field) for data skipping.
-- ``export_delta_log`` derives each version's add/remove delta from the
-  merge table's own undo-log, so a commit that touched 3 of 100k
-  buckets emits 3 removes + 3 adds.
+- The log carries FILE METADATA only — commit cost is proportional to
+  files touched, never to table bytes. A MERGE that touched 3 of 100k
+  partitions emits 3 removes + 3 adds.
 - Readers never list data directories: the active file set comes
   entirely from log replay (the protocol's core scalability property —
   object-store LIST is eventually consistent and slow; the log is the
-  source of truth).
+  source of truth), and one scan reads every selected file.
 """
 
 from __future__ import annotations
@@ -61,11 +61,6 @@ from pyspark.sql.types import StringType, StructType
 DELTA_LOG_DIR = "_delta_log"
 LAST_CHECKPOINT = "_last_checkpoint"
 CHECKPOINT_INTERVAL = 10
-# Marks a _delta_log as DERIVED by export_delta_log (vs a table some
-# real Delta writer owns). The merge engine deletes a stale derived log
-# on the next merge (re-export rebuilds it) but refuses to touch data
-# files under a log it did not derive.
-EXPORT_SENTINEL = ".spark_graft_export"
 PROTOCOL_ACTION = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
 # Checkpoints must carry unexpired remove tombstones (PROTOCOL.md
 # "Checkpoints": reconciliation keeps removes until the retention window
@@ -365,19 +360,15 @@ def _dv_remove_body(
         "deletionTimestamp": ts,
         "dataChange": data_change,
     }
+    if "partitionValues" in old_add:
+        # extended file metadata: the change feed reads which partitions
+        # a commit touched from its adds AND removes
+        body["extendedFileMetadata"] = True
+        body["partitionValues"] = old_add["partitionValues"]
+        body["size"] = old_add.get("size")
     if old_add.get("deletionVector"):
         body["deletionVector"] = old_add["deletionVector"]
     return body
-
-
-def _remove_action(encoded_path: str) -> dict:
-    return {
-        "remove": {
-            "path": encoded_path,
-            "deletionTimestamp": _now_ms(),
-            "dataChange": True,
-        }
-    }
 
 
 def _metadata_action(
@@ -386,8 +377,9 @@ def _metadata_action(
     *,
     name: str | None,
     partition_columns: list[str] | None = None,
+    configuration: dict[str, str] | None = None,
 ) -> dict:
-    # Deterministic table id: exports of the same table agree across runs.
+    # Deterministic table id: the same path always names the same table.
     table_id = str(uuid.uuid5(uuid.NAMESPACE_URL, "spark-graft-delta:" + os.path.abspath(table_dir)))
     return {
         "metaData": {
@@ -397,7 +389,7 @@ def _metadata_action(
             "format": {"provider": "parquet", "options": {}},
             "schemaString": schema.json(),
             "partitionColumns": list(partition_columns or []),
-            "configuration": {},
+            "configuration": dict(configuration or {}),
             "createdTime": _now_ms(),
         }
     }
@@ -488,16 +480,20 @@ def _read_commit_actions(table_dir: str, version: int) -> list[dict]:
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def _latest_checkpoint_at_or_below(table_dir: str, version: int) -> int | None:
+def checkpoint_versions(table_dir: str) -> list[int]:
+    """Versions that have a checkpoint file, ascending."""
     d = _log_dir(table_dir)
     if not os.path.isdir(d):
-        return None
-    cps = [
+        return []
+    return sorted(
         int(f.split(".", 1)[0])
         for f in os.listdir(d)
         if f.endswith(".checkpoint.parquet")
-    ]
-    cps = [v for v in cps if v <= version]
+    )
+
+
+def _latest_checkpoint_at_or_below(table_dir: str, version: int) -> int | None:
+    cps = [v for v in checkpoint_versions(table_dir) if v <= version]
     return max(cps) if cps else None
 
 
@@ -611,7 +607,7 @@ def replay_state(
 # Reader features this engine implements beyond protocol v1. Anything
 # else (columnMapping, v2Checkpoint, timestampNtz, typeWidening, ...)
 # stays a LOUD refusal: reading past an unimplemented reader feature
-# returns wrong rows silently, the one failure mode the bridge bans.
+# returns wrong rows silently, the one failure mode the reader bans.
 SUPPORTED_READER_FEATURES = {"deletionVectors"}
 
 
@@ -777,42 +773,44 @@ def _read_fileset(
                 "__dv_row", "long"
             )
         return spark.createDataFrame([], out_schema)
-    if not pcols:
-        paths = [os.path.join(table_dir, _decode_path(p)) for p in sorted(selected)]
-        # explicit field select drops any partition-style tokens a path
-        # component (e.g. `__bucket__=3`) would otherwise surface as columns
-        return (
-            spark.read.schema(schema)
-            .option("basePath", table_dir)
-            .parquet(*paths)
-            .select(*[F.col(f.name) for f in schema.fields], *meta_cols)
-        )
-    # partitioned: group files by partitionValues tuple, read each group
-    # with the DATA schema, reattach partition columns as typed literals
-    data_schema = StructType([f for f in schema.fields if f.name not in pcols])
-    ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
-    groups: dict[tuple, list[str]] = {}
-    for p, a in selected.items():
-        key = tuple(a["partitionValues"][c] for c in pcols)
-        groups.setdefault(key, []).append(
-            os.path.join(table_dir, _decode_path(p))
-        )
-    parts: list[DataFrame] = []
-    for key in sorted(groups):
-        df = spark.read.schema(data_schema).parquet(*sorted(groups[key]))
-        df = df.select(*[F.col(f.name) for f in data_schema.fields], *meta_cols)
-        for c, v in zip(pcols, key):
-            df = df.withColumn(c, F.lit(v).cast(ptypes[c]))
-        parts.append(
-            df.select(
-                *[F.col(f.name) for f in schema.fields],
-                *(["__dv_file", "__dv_row"] if with_meta else []),
+    paths = []
+    for p in sorted(selected):
+        rel = _decode_path(p)
+        if pcols:
+            _check_partition_path(rel, selected[p].get("partitionValues") or {}, pcols)
+        paths.append(os.path.join(table_dir, rel))
+    # ONE scan over every selected file: partition columns are parsed
+    # from the Hive path segments below basePath and typed by the
+    # imposed schema (the data files do not contain them, per protocol).
+    # The explicit field select restores the schema's column order and
+    # drops any partition-style token a path carries that is not a
+    # declared partition column (e.g. `__bucket__=3` on an unpartitioned
+    # table).
+    return (
+        spark.read.schema(schema)
+        .option("basePath", table_dir)
+        .parquet(*paths)
+        .select(*[F.col(f.name) for f in schema.fields], *meta_cols)
+    )
+
+
+def _check_partition_path(rel: str, partition_values: dict, pcols: list[str]) -> None:
+    """The one-scan reader takes partition values from the file's path,
+    so a logged path must carry `col=value` for every partition column
+    with the value its partitionValues records — otherwise the scan
+    would label rows with the wrong partition. Refused on the driver."""
+    segs = {}
+    for seg in rel.split("/")[:-1]:
+        k, eq, v = seg.partition("=")
+        if eq:
+            segs[k] = urllib.parse.unquote(v)
+    for c in pcols:
+        if segs.get(c) != partition_values.get(c):
+            raise ValueError(
+                f"file {rel!r} logs {c}={partition_values.get(c)!r} but its "
+                "path does not carry that segment; refusing a scan that "
+                "would mislabel its rows"
             )
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionByName(df)
-    return out
 
 
 # Deleted-set join strategy bound: total DV cardinality at or below this
@@ -976,8 +974,11 @@ def _write_checkpoint(spark: SparkSession, table_dir: str, version: int, state: 
     part = _list_parquet(tmp)[0]
     os.replace(part, _checkpoint_path(table_dir, version))
     shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(_log_dir(table_dir), LAST_CHECKPOINT), "w", encoding="utf-8") as fh:
-        json.dump({"version": version, "size": len(rows)}, fh)
+    # _last_checkpoint only moves forward: a checkpoint written below
+    # the newest one (a history floor) must not hide the newer one
+    if version >= max(checkpoint_versions(table_dir)):
+        with open(os.path.join(_log_dir(table_dir), LAST_CHECKPOINT), "w", encoding="utf-8") as fh:
+            json.dump({"version": version, "size": len(rows)}, fh)
 
 
 def _maybe_checkpoint(
@@ -1063,13 +1064,15 @@ def create_delta_table(
     *,
     name: str | None = None,
     partition_by: list[str] | None = None,
+    configuration: dict[str, str] | None = None,
     checkpoint_interval: int = CHECKPOINT_INTERVAL,
 ) -> int:
     """Version-0 commit: protocol + metaData + the seed files.
     `partition_by` declares protocol partitioning: files land in
     Hive-style dirs, partition values live in the log (add.
     partitionValues) and NOT in the data files, and every later append
-    inherits the layout from metaData.partitionColumns."""
+    inherits the layout from metaData.partitionColumns.
+    `configuration` is the metaData table-properties map."""
     os.makedirs(table_dir, exist_ok=True)
     if delta_versions(table_dir):
         raise FileExistsError(f"Delta log already exists at {table_dir}")
@@ -1077,7 +1080,10 @@ def create_delta_table(
     actions: list[dict] = [
         {"commitInfo": {"operation": "CREATE TABLE AS SELECT", "engine": "spark-graft"}},
         dict(PROTOCOL_ACTION),
-        _metadata_action(table_dir, df.schema, name=name, partition_columns=partition_by),
+        _metadata_action(
+            table_dir, df.schema, name=name, partition_columns=partition_by,
+            configuration=configuration,
+        ),
     ]
     actions += [_add_action(table_dir, f, partition_values=pv) for f, pv in files]
     _write_commit(table_dir, 0, actions)
@@ -1360,7 +1366,6 @@ def optimize_compact(
     upstream otherwise — `operators/layout.with_quantile_buckets`).
     Layout-only like plain compaction: same rows, dataChange=false."""
     state = replay_state(spark, table_dir)
-    old_paths = sorted(state.files)
     pcols = state.metadata.get("partitionColumns") or []
     df = read_delta_table(spark, table_dir)
     if zorder_by is not None:
@@ -1382,13 +1387,39 @@ def optimize_compact(
         )
     else:
         df = df.coalesce(max(1, target_files))
-    version = delta_versions(table_dir)[-1] + 1
-    new_files = _materialize_files(df, table_dir, version, pcols or None)
+    return _commit_rewrite(
+        spark, table_dir, delta_versions(table_dir)[-1], state, df, "OPTIMIZE",
+        checkpoint_interval,
+    )
+
+
+def _commit_rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    head: int,
+    state: _LogState,
+    df: DataFrame,
+    operation: str,
+    checkpoint_interval: int,
+    metadata: dict | None = None,
+) -> int:
+    """Commit version head+1 replacing every file active in `state` by
+    `df`'s files (dataChange=false: same rows, new layout), plus an
+    optional metaData re-emit. A writer that committed head+1 first
+    makes this raise DeltaCommitConflict after removing its staged
+    files; re-run on the new head."""
+    pcols = (metadata or state.metadata).get("partitionColumns") or []
+    version = head + 1
+    new_files = _materialize_files(
+        df, table_dir, version, pcols or None, token=uuid.uuid4().hex[:12]
+    )
     actions: list[dict] = [
-        {"commitInfo": {"operation": "OPTIMIZE", "engine": "spark-graft"}}
+        {"commitInfo": {"operation": operation, "engine": "spark-graft"}}
     ]
+    if metadata is not None:
+        actions.append({"metaData": metadata})
     now = _now_ms()
-    for p in old_paths:
+    for p in sorted(state.files):
         actions.append(
             {"remove": _dv_remove_body(p, now, state.files[p], False)}
         )
@@ -1396,9 +1427,103 @@ def optimize_compact(
         a = _add_action(table_dir, f, partition_values=pv)
         a["add"]["dataChange"] = False
         actions.append(a)
-    _write_commit(table_dir, version, actions)
+    try:
+        _write_commit(table_dir, version, actions)
+    except DeltaCommitConflict:
+        for f, _pv in new_files:
+            os.remove(f)
+        raise
     _maybe_checkpoint(spark, table_dir, version, checkpoint_interval)
     return version
+
+
+# Bucket-partitioned tables (`operators/upsert.create_bucketed_table`):
+# rows land in partition `__bucket__ = pmod(xxhash64(key), n)`, and the
+# key column and modulus are table properties in metaData.configuration,
+# so every later MERGE (and the insert side of it) reproduces them.
+BUCKET_COL = "__bucket__"
+BUCKET_KEY_CONF = "spark-graft.bucketKey"
+BUCKET_COUNT_CONF = "spark-graft.numBuckets"
+
+
+def bucket_of(key_col, n_buckets: int):
+    """Deterministic bucket id for a merge key. xxhash64 is a stable
+    JVM-side hash (same value on every executor/session), so the bucket
+    assignment is reproducible across jobs — a requirement for a layout
+    that outlives the session that wrote it."""
+    return F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
+
+
+def bucket_spec(metadata: dict) -> tuple[str, int] | None:
+    """(bucket key, modulus) of a bucket-partitioned table, else None."""
+    conf = metadata.get("configuration") or {}
+    if BUCKET_KEY_CONF not in conf or BUCKET_COL not in (metadata.get("partitionColumns") or []):
+        return None
+    return conf[BUCKET_KEY_CONF], int(conf[BUCKET_COUNT_CONF])
+
+
+def _evolution_new_cols(
+    updates: DataFrame,
+    existing: set[str],
+    evolve_schema: bool,
+    evolve_cols: list[str] | None,
+) -> list[str]:
+    """Which updates columns become new TABLE columns this merge.
+    With an explicit `evolve_cols` allowlist only those are promoted
+    (and each must actually be an updates column); without one, every
+    updates column absent from the target widens the table — for
+    callers that curate their updates projection."""
+    if not evolve_schema:
+        return []
+    if evolve_cols is not None:
+        missing = [c for c in evolve_cols if c not in updates.columns]
+        if missing:
+            raise ValueError(f"evolve_cols not in updates: {missing}")
+        return [c for c in evolve_cols if c not in existing]
+    return [c for c in updates.columns if c not in existing]
+
+
+def _merged_output(
+    target: DataFrame,
+    updates: DataFrame,
+    key: str,
+    set_exprs: dict,
+    insert_missing: bool,
+    data_cols: list[str],
+    new_cols: frozenset[str] = frozenset(),
+) -> DataFrame:
+    """The MERGE join + per-column WHEN MATCHED/NOT MATCHED projection.
+    Columns in `new_cols` (schema evolution) have no stored target side:
+    the target is padded with typed nulls for them, so a set_exprs entry
+    may reference `t.<c>` uniformly whether the column is new this batch
+    or was evolved in an earlier one (the coalesce(u.c, t.c) idiom must
+    work in EVERY batch of an upgraded feed, not only the widening
+    batch). Matched/inserted rows take the update's value (or the
+    set_exprs entry); unmatched target rows read null."""
+    for c in new_cols:
+        target = target.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
+    t = target.alias("t")
+    u = updates.alias("u")
+    join_type = "full_outer" if insert_missing else "left_outer"
+    joined = t.join(u, F.col(f"t.{key}") == F.col(f"u.{key}"), join_type)
+    matched = F.col(f"u.{key}").isNotNull()
+    out_cols = []
+    for c in data_cols:
+        if c == key:
+            out_cols.append(F.coalesce(F.col(f"t.{key}"), F.col(f"u.{key}")).alias(c))
+        elif c in new_cols:
+            out_cols.append(
+                F.when(matched, set_exprs.get(c, F.col(f"u.{c}")))
+                .otherwise(F.col(f"t.{c}"))  # the typed-null pad above
+                .alias(c)
+            )
+        elif c in set_exprs:
+            out_cols.append(
+                F.when(matched, set_exprs[c]).otherwise(F.col(f"t.{c}")).alias(c)
+            )
+        else:
+            out_cols.append(F.col(f"t.{c}").alias(c))
+    return joined.select(*out_cols)
 
 
 # Last MERGE prune accounting (module-level, observability only — the
@@ -1421,11 +1546,13 @@ def _candidate_merge_paths(
 ) -> tuple[set[str], dict]:
     """Active files that MAY contain an update key — the copy-on-write
     pruning step. A file is skipped only when its log metadata PROVES no
-    update key can live in it: for a partition-column key, by its
-    partitionValues entry; otherwise by the add.stats minValues/
-    maxValues range for the key column. Files without usable stats are
-    always candidates (stats are advisory; correctness never depends on
-    them). The check is a DISTRIBUTED semi-join of the update keys
+    update key can live in it: on a table bucketed by the merge key, by
+    its `__bucket__` partition value (the touched buckets are one
+    distinct collect of at most n ints over the updates); for a
+    partition-column key, by its partitionValues entry; otherwise by
+    the add.stats minValues/maxValues range for the key column. Files
+    without usable stats are always candidates (stats are advisory;
+    correctness never depends on them). The check is a DISTRIBUTED semi-join of the update keys
     against the broadcast file ranges — the file list is already
     driver-resident (it IS the replayed log), but the update keys are
     never collected.
@@ -1451,6 +1578,21 @@ def _candidate_merge_paths(
             "degraded": degraded,
             "mode": mode,
         }
+
+    spec = bucket_spec(state.metadata)
+    if spec is not None and spec[0] == key:
+        touched = {
+            str(r[0])
+            for r in updates.select(bucket_of(F.col(key).cast(key_field.dataType), spec[1]))
+            .distinct()
+            .collect()
+        }
+        cands = {
+            p
+            for p, a in state.files.items()
+            if (a.get("partitionValues") or {}).get(BUCKET_COL) in touched
+        }
+        return cands, dict(report(cands, mode="bucket"), buckets_touched=len(touched))
 
     if key in pcols:
         rows = [(p, a.get("partitionValues", {}).get(key)) for p, a in state.files.items()]
@@ -1524,36 +1666,47 @@ def merge_delta_table(
     checkpoint_interval: int = CHECKPOINT_INTERVAL,
     max_attempts: int = 4,
 ) -> int | None:
-    """K4 through the OPEN protocol: copy-on-write MERGE INTO a native
-    Delta table — `WHEN MATCHED UPDATE SET <set_exprs>` (+ optional
-    `WHEN NOT MATCHED INSERT`), committed as remove+add actions in ONE
-    log version. Parity with the bucketed merge table's semantics
-    (`operators/upsert.py:merge_into_parquet`), expressed in the
-    protocol's own mechanisms:
+    """K4 through the OPEN protocol: copy-on-write MERGE INTO a Delta
+    table — `WHEN MATCHED UPDATE SET <set_exprs>` (+ optional `WHEN NOT
+    MATCHED INSERT`), committed as remove+add actions in ONE log
+    version. `set_exprs` sees the joined row with target columns as
+    `t.<c>` and update columns as `u.<c>`; unmatched target rows pass
+    through; inserted rows take null for columns not covered by
+    set_exprs.
 
-    - **File pruning**: only files whose key-column stats range (or
-      partitionValues, for a partition key) can contain an update key
-      are read and rewritten — O(touched files), never O(table). The
-      adds this writer stamps carry minValues/maxValues straight from
-      the parquet footers, so its own tables always prune.
+    - **File pruning**: only files that can contain an update key are
+      read and rewritten — O(touched files), never O(table). On a
+      bucket-partitioned table (`operators/upsert.create_bucketed_table`)
+      that is the files of the buckets the update keys hash into, and
+      the rewrite writes one file per touched bucket; otherwise it is
+      the key-column partitionValues or the minValues/maxValues stats
+      this writer stamps from the parquet footers.
     - **Exactly-once redelivery** via the protocol's `txn` action:
       pass (txn_app_id, txn_version); a replayed/redelivered batch at
       or below the recorded version is a no-op, checked against the
       SAME snapshot the merge will commit against (a concurrent
       committer bumping the txn makes this attempt lose the version
-      race and re-check on retry — the protocol's locked-recheck
-      equivalent of the bucketed path's post-lock marker re-read).
-    - **Schema widening** (`evolve_schema`/`evolve_cols`, same
-      allowlist semantics as the bucketed path): new columns re-emit
-      `metaData` with the widened schemaString in the same commit;
-      untouched files surface typed nulls through the imposed-schema
-      read, exactly as the protocol prescribes.
+      race and re-check on retry).
+    - **Schema widening** (`evolve_schema`; `evolve_cols` restricts it
+      to an allowlist so updates columns that are only join-side
+      helpers for set_exprs never become table columns): new columns
+      re-emit `metaData` with the widened schemaString in the same
+      commit; untouched files surface typed nulls through the
+      imposed-schema read, exactly as the protocol prescribes, and
+      earlier versions keep reading with their own narrower schema.
     - **Crash safety**: data files are staged under attempt-unique
       names BEFORE the commit JSON exists; a crash pre-commit leaves
-      the table untouched (orphan files are invisible to replay) and
-      the re-run applies cleanly. Optimistic concurrency via the
-      log's put-if-absent commit: a lost race discards this attempt's
-      staged files and retries on the new head.
+      the table untouched (orphan files are invisible to replay, and
+      `vacuum_delta`'s listing sweep reclaims them) and the re-run
+      applies cleanly. Optimistic concurrency via the log's
+      put-if-absent commit: a lost race discards this attempt's staged
+      files and retries on the new head, so racing writers serialize
+      and lose no update.
+
+    The updates plan runs twice (candidate selection, then the rewrite
+    join), so it is persisted across both jobs and dropped on return —
+    unless the caller persisted it, in which case the caller keeps
+    ownership: it is neither re-persisted nor unpersisted here.
 
     Reference anchor: the Postgres upsert the reference relies on for
     the same lifecycle (`/root/reference/database/postgres/
@@ -1562,12 +1715,9 @@ def merge_delta_table(
 
     Note on partitioned tables + `insert_missing`: an inserted row's
     partition column must get a non-null value via set_exprs (columns
-    not covered default to null, and a null partition value is
-    refused at write)."""
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        _evolution_new_cols,
-        _merged_output,
-    )
+    not covered default to null, and a null partition value is refused
+    at write) — except `__bucket__`, which is computed from the
+    configured bucket key."""
     from pyspark.sql.types import StructField
 
     if evolve_cols is not None and not evolve_schema:
@@ -1575,118 +1725,191 @@ def merge_delta_table(
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")
 
-    last_err: Exception | None = None
-    for _attempt in range(max_attempts):
-        versions = delta_versions(table_dir)
-        cp_only = not versions and _latest_checkpoint_at_or_below(table_dir, 1 << 62)
-        if not versions and not cp_only:
-            raise FileNotFoundError(f"no Delta table at {table_dir}; create first")
-        state = replay_state(spark, table_dir)
-        head = versions[-1] if versions else _latest_checkpoint_at_or_below(table_dir, 1 << 62)
-        mwv = state.protocol.get("minWriterVersion", 2)
-        wfeats = set(state.protocol.get("writerFeatures") or [])
-        # v7 is writable iff every demanded writer feature is one this
-        # merge actually honors (deletionVectors: the candidate scan is
-        # DV-applying and rewrites drop the DV). Anything else — e.g.
-        # columnMapping, rowTracking — keeps the loud refusal.
-        if mwv > 2 and not (mwv == 7 and wfeats <= {"deletionVectors"}):
-            raise ValueError(
-                "table requires writer features beyond minWriterVersion=2 "
-                f"({state.protocol}) — this writer would corrupt it"
-            )
-        if txn_app_id is not None:
-            prev = state.txns.get(txn_app_id)
-            if prev is not None and txn_version <= prev:
-                return None  # redelivered batch: the protocol's no-op
-        schema = StructType.fromJson(json.loads(state.metadata["schemaString"]))
-        pcols = state.metadata.get("partitionColumns") or []
-        new_cols = _evolution_new_cols(
-            updates, {f.name for f in schema.fields}, evolve_schema, evolve_cols
-        )
-        data_cols = [f.name for f in schema.fields] + new_cols
-        cand, prune = _candidate_merge_paths(
-            spark, table_dir, state, key, updates, pcols, schema
-        )
-        LAST_MERGE_PRUNE.clear()
-        LAST_MERGE_PRUNE.update(prune)
-        selected = {p: state.files[p] for p in cand}
-        if not selected and not insert_missing and txn_app_id is None and not new_cols:
-            return None  # provably no matched file, nothing to record
-
-        staged: list[tuple[str, dict[str, str]]] = []
-        widened = schema
-        if new_cols:
-            widened = StructType(
-                list(schema.fields)
-                + [StructField(c, updates.schema[c].dataType, True) for c in new_cols]
-            )
-        if selected or insert_missing:
-            # DV-aware candidate scan: a selected file's deleted rows
-            # must not re-enter the rewrite (they'd resurrect); the
-            # rewrite output carries no DV — purge-on-rewrite.
-            dv_sel = {p: a for p, a in selected.items() if a.get("deletionVector")}
-            plain_sel = {p: a for p, a in selected.items() if p not in dv_sel}
-            target = _read_fileset(spark, table_dir, schema, pcols, plain_sel)
-            if dv_sel:
-                target = target.unionByName(
-                    _read_fileset_with_dvs(spark, table_dir, schema, pcols, dv_sel)
+    lvl = updates.storageLevel
+    we_cached = not (lvl.useMemory or lvl.useDisk)
+    if we_cached:
+        updates.persist()
+    try:
+        last_err: Exception | None = None
+        for _attempt in range(max_attempts):
+            versions = delta_versions(table_dir)
+            cp_only = not versions and _latest_checkpoint_at_or_below(table_dir, 1 << 62)
+            if not versions and not cp_only:
+                raise FileNotFoundError(f"no Delta table at {table_dir}; create first")
+            state = replay_state(spark, table_dir)
+            head = versions[-1] if versions else _latest_checkpoint_at_or_below(table_dir, 1 << 62)
+            mwv = state.protocol.get("minWriterVersion", 2)
+            wfeats = set(state.protocol.get("writerFeatures") or [])
+            # v7 is writable iff every demanded writer feature is one this
+            # merge actually honors (deletionVectors: the candidate scan is
+            # DV-applying and rewrites drop the DV). Anything else — e.g.
+            # columnMapping, rowTracking — keeps the loud refusal.
+            if mwv > 2 and not (mwv == 7 and wfeats <= {"deletionVectors"}):
+                raise ValueError(
+                    "table requires writer features beyond minWriterVersion=2 "
+                    f"({state.protocol}) — this writer would corrupt it"
                 )
-            merged = _merged_output(
-                target, updates, key, set_exprs, insert_missing,
-                data_cols, frozenset(new_cols),
+            if txn_app_id is not None:
+                prev = state.txns.get(txn_app_id)
+                if prev is not None and txn_version <= prev:
+                    return None  # redelivered batch: the protocol's no-op
+            schema = StructType.fromJson(json.loads(state.metadata["schemaString"]))
+            pcols = state.metadata.get("partitionColumns") or []
+            spec = bucket_spec(state.metadata)
+            new_cols = _evolution_new_cols(
+                updates, {f.name for f in schema.fields}, evolve_schema, evolve_cols
             )
-            staged = _materialize_files(
-                merged, table_dir, head + 1, pcols or None,
-                token=uuid.uuid4().hex[:12],
+            data_cols = [
+                f.name for f in schema.fields if spec is None or f.name != BUCKET_COL
+            ] + new_cols
+            cand, prune = _candidate_merge_paths(
+                spark, table_dir, state, key, updates, pcols, schema
             )
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "MERGE",
-                    "operationParameters": {"predicate": f"t.{key} = u.{key}"},
-                    # prune observability (VERDICT r11 task 6): the
-                    # kept/total counters and the degraded flag ride the
-                    # commit itself, real Delta's operationMetrics shape,
-                    # so a silent full scan is visible in the artifact
-                    "operationMetrics": {
-                        "numTargetFilesTotal": prune["files_total"],
-                        "numTargetFilesScanned": prune["files_candidates"],
-                        "numTargetFilesNoStats": prune["files_no_stats"],
-                        "pruneDegraded": prune["degraded"],
-                        "pruneMode": prune["mode"],
-                    },
-                    "engine": "spark-graft",
+            LAST_MERGE_PRUNE.clear()
+            LAST_MERGE_PRUNE.update(prune)
+            selected = {p: state.files[p] for p in cand}
+            # no update key at all (bucket mode counts them): nothing to insert
+            inserts = insert_missing and prune.get("buckets_touched") != 0
+            if not selected and not inserts and txn_app_id is None and not new_cols:
+                return None  # provably no matched file, nothing to record
+
+            staged: list[tuple[str, dict[str, str]]] = []
+            widened = schema
+            if new_cols:
+                widened = StructType(
+                    list(schema.fields)
+                    + [StructField(c, updates.schema[c].dataType, True) for c in new_cols]
+                )
+            if selected or inserts:
+                # DV-aware candidate scan: a selected file's deleted rows
+                # must not re-enter the rewrite (they'd resurrect); the
+                # rewrite output carries no DV — purge-on-rewrite.
+                dv_sel = {p: a for p, a in selected.items() if a.get("deletionVector")}
+                plain_sel = {p: a for p, a in selected.items() if p not in dv_sel}
+                target = _read_fileset(spark, table_dir, schema, pcols, plain_sel)
+                if dv_sel:
+                    target = target.unionByName(
+                        _read_fileset_with_dvs(spark, table_dir, schema, pcols, dv_sel)
+                    )
+                merged = _merged_output(
+                    target, updates, key, set_exprs, insert_missing,
+                    data_cols, frozenset(new_cols),
+                )
+                if spec is not None:
+                    bkey, n_buckets = spec
+                    bkey_type = schema[bkey].dataType
+                    # one output file per touched bucket
+                    merged = merged.withColumn(
+                        BUCKET_COL, bucket_of(F.col(bkey).cast(bkey_type), n_buckets)
+                    ).repartition(BUCKET_COL)
+                staged = _materialize_files(
+                    merged, table_dir, head + 1, pcols or None,
+                    token=uuid.uuid4().hex[:12],
+                )
+            actions: list[dict] = [
+                {
+                    "commitInfo": {
+                        "operation": "MERGE",
+                        "operationParameters": {"predicate": f"t.{key} = u.{key}"},
+                        # prune observability (VERDICT r11 task 6): the
+                        # kept/total counters and the degraded flag ride the
+                        # commit itself, real Delta's operationMetrics shape,
+                        # so a silent full scan is visible in the artifact
+                        "operationMetrics": {
+                            "numTargetFilesTotal": prune["files_total"],
+                            "numTargetFilesScanned": prune["files_candidates"],
+                            "numTargetFilesNoStats": prune["files_no_stats"],
+                            "pruneDegraded": prune["degraded"],
+                            "pruneMode": prune["mode"],
+                        },
+                        "engine": "spark-graft",
+                    }
                 }
-            }
-        ]
-        if txn_app_id is not None:
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version), "lastUpdated": _now_ms()}}
-            )
-        if new_cols:
-            md = dict(state.metadata)  # keep id/createdTime: the table's identity
-            md["schemaString"] = widened.json()
-            actions.append({"metaData": md})
-        for p in sorted(selected):
-            actions.append(
-                {"remove": _dv_remove_body(p, _now_ms(), selected[p], True)}
-            )
-        actions += [_add_action(table_dir, f, partition_values=pv) for f, pv in staged]
+            ]
+            if txn_app_id is not None:
+                actions.append(
+                    {"txn": {"appId": txn_app_id, "version": int(txn_version), "lastUpdated": _now_ms()}}
+                )
+            if new_cols:
+                md = dict(state.metadata)  # keep id/createdTime: the table's identity
+                md["schemaString"] = widened.json()
+                actions.append({"metaData": md})
+            for p in sorted(selected):
+                actions.append(
+                    {"remove": _dv_remove_body(p, _now_ms(), selected[p], True)}
+                )
+            actions += [_add_action(table_dir, f, partition_values=pv) for f, pv in staged]
+            try:
+                _write_commit(table_dir, head + 1, actions)
+            except DeltaCommitConflict as e:
+                last_err = e
+                for f, _pv in staged:  # loser cleans its own staged files
+                    try:
+                        os.remove(f)
+                    except OSError:
+                        pass
+                continue
+            _maybe_checkpoint(spark, table_dir, head + 1, checkpoint_interval)
+            return head + 1
+        raise DeltaCommitConflict(
+            f"merge lost {max_attempts} optimistic version races on {table_dir}"
+        ) from last_err
+    finally:
+        if we_cached:
+            updates.unpersist()
+
+
+def readable_versions(table_dir: str) -> list[int]:
+    """Versions log replay can reconstruct: the history floor (0, or the
+    checkpoint `vacuum_history` left) through the head."""
+    versions = delta_versions(table_dir)
+    if not versions:
+        return []
+    floor = versions[0]
+    if floor > 0:
+        # below the first JSON commit only a checkpoint can start replay
+        covering = [c for c in checkpoint_versions(table_dir) if c >= floor - 1]
+        if not covering:
+            return []
+        floor = covering[0]
+    return list(range(floor, versions[-1] + 1))
+
+
+def vacuum_history(spark: SparkSession, table_dir: str, keep_last: int) -> list[int]:
+    """Retention by VERSION (VACUUM's role for time travel): keep the
+    newest `keep_last` versions before the head readable. Writes a
+    checkpoint at the new floor, deletes the JSON commits and older
+    checkpoints below it and the data files tombstoned at or below it —
+    files only older versions used. The floor is monotone by
+    construction: the commits below it are gone, so a later call with a
+    larger `keep_last` cannot lower it, and reads below it fail loudly.
+    Returns the versions that stopped being readable."""
+    versions = readable_versions(table_dir)
+    if not versions:
+        return []
+    floor = max(versions[-1] - max(keep_last, 0), versions[0])
+    if floor == versions[0]:
+        return []
+    state = replay_state(spark, table_dir, floor)
+    if floor not in checkpoint_versions(table_dir):
+        _write_checkpoint(spark, table_dir, floor, state)
+    gone = set(state.tombstones)
+    for v in range(versions[0] + 1, floor + 1):
+        gone.update(
+            a["remove"]["path"] for a in _read_commit_actions(table_dir, v) if "remove" in a
+        )
+    for v in delta_versions(table_dir):
+        if v < floor:
+            os.remove(_commit_path(table_dir, v))
+    for c in checkpoint_versions(table_dir):
+        if c < floor:
+            os.remove(_checkpoint_path(table_dir, c))
+    for path in sorted(gone - set(state.files)):
         try:
-            _write_commit(table_dir, head + 1, actions)
-        except DeltaCommitConflict as e:
-            last_err = e
-            for f, _pv in staged:  # loser cleans its own staged files
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            continue
-        _maybe_checkpoint(spark, table_dir, head + 1, checkpoint_interval)
-        return head + 1
-    raise DeltaCommitConflict(
-        f"merge lost {max_attempts} optimistic version races on {table_dir}"
-    ) from last_err
+            os.remove(os.path.join(table_dir, _decode_path(path)))
+        except FileNotFoundError:
+            pass
+    return list(range(versions[0], floor))
 
 
 # Listing-sweep safety floor (ADVICE r11 item 3): with retention_ms=0
@@ -1825,7 +2048,13 @@ def vacuum_delta(
         if r.get("deletionTimestamp", 0) > cutoff:
             protected.add(_decode_path(path))
     for root, dirs, files in os.walk(table_dir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        # Spark's own hidden-path rule: `.` names and `_` names WITHOUT an
+        # `=` are metadata (_delta_log, staging dirs); `_`-prefixed
+        # partition directories such as `__bucket__=3` hold data files
+        dirs[:] = [
+            d for d in dirs
+            if not (d.startswith(".") or (d.startswith("_") and "=" not in d))
+        ]
         for f in files:
             if not f.endswith(".parquet") or f.startswith(("_", ".")):
                 continue
@@ -1838,116 +2067,3 @@ def vacuum_delta(
             os.remove(abs_path)
             deleted.append(_encode_path(rel_fs))
     return sorted(set(deleted))
-
-
-# ---------------------------------------------------------------------------
-# Merge-table export: bucketed MERGE history -> Delta log
-# ---------------------------------------------------------------------------
-
-
-def _merge_version_fileset(
-    spark: SparkSession, table_dir: str, version: int, log: list[dict]
-) -> list[str]:
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import _asof_bucket_paths
-
-    bucket_dirs = _asof_bucket_paths(table_dir, version, log)
-    files: list[str] = []
-    for b in sorted(bucket_dirs):
-        files.extend(_list_parquet(bucket_dirs[b]))
-    return files
-
-
-def export_delta_log(
-    spark: SparkSession,
-    table_dir: str,
-    *,
-    name: str | None = None,
-    checkpoint_interval: int = CHECKPOINT_INTERVAL,
-) -> int:
-    """Mirror a bucketed MERGE table's full commit history (see
-    `operators/upsert.py`) into a conformant `_delta_log`, one Delta
-    version per merge commit. Add/remove deltas come from the merge
-    undo-log — a merge that touched B of N buckets emits O(B) actions.
-    A new metaData action is emitted at any version whose file schema
-    widens (the MERGE schema-evolution path), so Delta readers see the
-    same evolution boundary the native as-of reader enforces.
-
-    Idempotent rebuild: an existing `_delta_log` is replaced (the
-    export is derived state; the merge manifest stays authoritative).
-
-    Returns the latest Delta version (== the merge table's last seq).
-    """
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        _bucketed_n,
-        _read_commit_log,
-        history_versions,
-    )
-
-    if _bucketed_n(table_dir) is None:
-        raise ValueError(
-            f"{table_dir} is not a bucketed merge table (no _n_buckets "
-            "marker) — export derives its file sets from the bucketed "
-            "layout; for arbitrary DataFrames use create_delta_table"
-        )
-    log = _read_commit_log(table_dir)
-    versions = history_versions(table_dir)
-    if versions[0] != 0:
-        raise ValueError(
-            "export requires full history (vacuumed tables lose early "
-            f"versions; earliest available: {versions[0]})"
-        )
-    ldir = _log_dir(table_dir)
-    if os.path.isdir(ldir):
-        # Only replace a _delta_log THIS engine derived (marked by the
-        # export sentinel). A log without the sentinel belongs to a real
-        # Delta writer coexisting with the bucketed layout; destroying
-        # its transaction history would corrupt that table — the same
-        # refusal merge_into_parquet applies before touching data files
-        # under a foreign log (ADVICE r10).
-        if not os.path.exists(os.path.join(ldir, EXPORT_SENTINEL)):
-            raise FileExistsError(
-                f"{ldir} exists but was not derived by export_delta_log "
-                "(no export sentinel) — refusing to overwrite a foreign "
-                "Delta transaction log; remove it explicitly if it is "
-                "truly abandoned"
-            )
-        shutil.rmtree(ldir)
-
-    prev_files: dict[str, str] = {}  # encoded rel path -> abs path
-    prev_schema_json: str | None = None
-    for v in versions:
-        files = {
-            _encode_path(os.path.relpath(p, table_dir)): p
-            for p in _merge_version_fileset(spark, table_dir, v, log)
-        }
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "CREATE TABLE AS SELECT" if v == 0 else "MERGE",
-                    "engine": "spark-graft",
-                    "mergeSeq": v,
-                }
-            }
-        ]
-        # schema at this version, from this version's own files
-        schema = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*files.values())
-            .drop("__bucket__")
-            .schema
-        )
-        if v == 0:
-            actions.append(dict(PROTOCOL_ACTION))
-        if schema.json() != prev_schema_json:
-            actions.append(_metadata_action(table_dir, schema, name=name))
-            prev_schema_json = schema.json()
-        for gone in sorted(set(prev_files) - set(files)):
-            actions.append(_remove_action(gone))
-        for added in sorted(set(files) - set(prev_files)):
-            actions.append(_add_action(table_dir, files[added]))
-        _write_commit(table_dir, v, actions)
-        _maybe_checkpoint(spark, table_dir, v, checkpoint_interval)
-        prev_files = files
-    with open(os.path.join(ldir, EXPORT_SENTINEL), "w", encoding="utf-8") as fh:
-        fh.write("derived from the merge commit manifest; re-export to refresh\n")
-    return versions[-1]

@@ -7,7 +7,7 @@ emit one JSON line per query plus a sorted summary of outliers.
 Planning only (no job execution) — safe to run under load; plan shape is
 load-independent.
 
-Usage: python scripts/plan_audit.py [out.json]
+Usage: python scripts/plan_audit.py [out.json] [--exec-lanes]
 """
 
 from __future__ import annotations
@@ -40,22 +40,26 @@ SKIP = {
 def audit_merge_lanes(spark) -> list[dict]:
     """Audit the INTERNAL plans of the merge-table family that the
     registry-level loop must skip (their builders execute work): build a
-    tiny history-enabled merge table at sf0.001, run one merge, and
-    explain (a) the bucketed-merge rewrite input and (b) the as-of
-    overlay read — the two plans bitemporal_ticket_state /
-    ticket_fill_* pay per phase. Runs real (tiny) jobs; opt in with
-    --exec-lanes."""
+    tiny merge table at sf0.001, run one merge, and explain (a) the
+    Delta merge's rewrite input (bucket-pruned candidate scan joined
+    with the updates, repartitioned by bucket) and (b) the as-of read —
+    the two plans bitemporal_ticket_state / ticket_fill_* pay per
+    phase. Runs real (tiny) jobs; opt in with --exec-lanes."""
+    import json as _json
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     import financial_arbitrage_data_pipeline_spark.operators.upsert as U
+    from financial_arbitrage_data_pipeline_spark.sources import delta_log as DL
     from financial_arbitrage_data_pipeline_spark.sources.tables import load_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", "/root/testdata/sf0.001")
     root = tempfile.mkdtemp(prefix="sgauditmerge_")
     tdir = os.path.join(root, "t")
+    set_exprs = {"v": F.coalesce(F.col("u.v"), F.col("t.v"))}
     out = []
     try:
         orders = load_table(spark, sf_dir, "orders")
@@ -67,36 +71,28 @@ def audit_merge_lanes(spark) -> list[dict]:
                 (F.col("o_orderkey") % 7).cast("long").alias("v"),
             ),
             key="k",
-            keep_history=True,
         )
         updates = orders.select(
             F.col("o_orderkey").alias("k"),
             (F.col("o_orderkey") % 3).cast("long").alias("v"),
         )
-        # (a) the rewrite input _merge_bucketed writes
-        full = U._read_parquet(spark, tdir, evolved=False)
-        data_cols = [c for c in full.columns if c != "__bucket__"]
-        target = full.filter(
-            F.col("__bucket__").isin(list(range(16)))
-        ).drop("__bucket__")
-        merged = U._merged_output(
-            target,
-            updates,
-            "k",
-            {"v": F.coalesce(F.col("u.v"), F.col("t.v"))},
-            False,
-            data_cols,
-        ).withColumn("__bucket__", U._bucket_of(F.col("k"), 16))
-        out.append(("merge_rewrite_input", merged))
-        # (b) the as-of overlay read after a committed merge
-        U.merge_into_parquet(
-            spark,
-            tdir,
-            updates,
-            key="k",
-            set_exprs={"v": F.coalesce(F.col("u.v"), F.col("t.v"))},
+        # (a) the rewrite input merge_delta_table materializes
+        state = DL.replay_state(spark, tdir)
+        schema = StructType.fromJson(_json.loads(state.metadata["schemaString"]))
+        pcols = state.metadata["partitionColumns"]
+        cand, _ = DL._candidate_merge_paths(spark, tdir, state, "k", updates, pcols, schema)
+        target = DL._read_fileset(
+            spark, tdir, schema, pcols, {p: state.files[p] for p in cand}
         )
-        out.append(("asof_overlay_read", U.read_merge_table_asof(spark, tdir, 0)))
+        data_cols = [c for c in schema.names if c != DL.BUCKET_COL]
+        merged = DL._merged_output(target, updates, "k", set_exprs, False, data_cols)
+        merged = merged.withColumn(
+            DL.BUCKET_COL, DL.bucket_of(F.col("k"), 16)
+        ).repartition(DL.BUCKET_COL)
+        out.append(("merge_rewrite_input", merged))
+        # (b) the as-of read after a committed merge
+        U.merge_into_parquet(spark, tdir, updates, key="k", set_exprs=set_exprs)
+        out.append(("asof_read", U.read_merge_table_asof(spark, tdir, 0)))
         rows = []
         for name, df in out:
             p = spark._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001

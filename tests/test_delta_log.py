@@ -1,8 +1,9 @@
-"""Delta transaction-log bridge: protocol conformance + replay parity.
+"""Delta transaction log: protocol conformance, replay, checkpoints,
+OPTIMIZE/VACUUM and the one-scan reader.
 
-Conformance targets are the openly published Delta PROTOCOL.md fields;
-parity targets are the engine's own as-of reader (the exported log must
-reproduce exactly what the merge table's native time travel returns).
+Conformance targets are the openly published Delta PROTOCOL.md fields,
+checked on the merge table's own log (`create_bucketed_table` writes a
+`__bucket__`-partitioned Delta table).
 """
 
 from __future__ import annotations
@@ -16,26 +17,23 @@ from pyspark.sql import functions as F
 from financial_arbitrage_data_pipeline_spark.operators.upsert import (
     create_bucketed_table,
     merge_into_parquet,
-    read_merge_table_asof,
 )
 from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
     _latest_checkpoint_at_or_below,
     commit_append,
     create_delta_table,
     delta_versions,
-    export_delta_log,
     read_delta_table,
     replay_state,
 )
 
 
-def _mk_merge_table(spark, tdir, *, evolve=False):
-    """Tiny history-enabled merge table with two merges; optionally the
-    second merge widens the schema."""
+def _mk_merge_table(spark, tdir):
+    """Tiny merge table with two merges."""
     seed = spark.createDataFrame(
         [(i, i * 10, "init") for i in range(40)], "k long, v long, tag string"
     )
-    create_bucketed_table(spark, tdir, seed, key="k", n_buckets=4, keep_history=True)
+    create_bucketed_table(spark, tdir, seed, key="k", n_buckets=4)
     up1 = spark.createDataFrame(
         [(i, i * 100) for i in range(0, 40, 2)], "k long, v long"
     )
@@ -43,23 +41,13 @@ def _mk_merge_table(spark, tdir, *, evolve=False):
         spark, tdir, up1, key="k",
         set_exprs={"v": F.col("u.v"), "tag": F.lit("m1")},
     )
-    if evolve:
-        up2 = spark.createDataFrame(
-            [(i, "ex") for i in range(1, 40, 4)], "k long, venue string"
-        )
-        merge_into_parquet(
-            spark, tdir, up2, key="k",
-            set_exprs={"venue": F.coalesce(F.col("u.venue"), F.col("t.venue"))},
-            evolve_schema=True, evolve_cols=["venue"],
-        )
-    else:
-        up2 = spark.createDataFrame(
-            [(i, i * 1000) for i in range(1, 40, 4)], "k long, v long"
-        )
-        merge_into_parquet(
-            spark, tdir, up2, key="k",
-            set_exprs={"v": F.col("u.v")},
-        )
+    up2 = spark.createDataFrame(
+        [(i, i * 1000) for i in range(1, 40, 4)], "k long, v long"
+    )
+    merge_into_parquet(
+        spark, tdir, up2, key="k",
+        set_exprs={"v": F.col("u.v")},
+    )
 
 
 def _log_lines(tdir, version):
@@ -68,13 +56,14 @@ def _log_lines(tdir, version):
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def test_export_protocol_conformance(spark, tmp_path):
-    """v0 carries protocol+metaData with the PROTOCOL.md-required
-    fields; every add is relative, sized, stamped, and stats-bearing."""
+def test_merge_table_log_protocol_conformance(spark, tmp_path):
+    """A merge table's own log: v0 carries protocol+metaData with the
+    PROTOCOL.md-required fields, `__bucket__` as the partition column
+    and the bucket key/modulus as configuration; every add is relative,
+    partitioned, sized, stamped and stats-bearing; merges are DELTAS."""
     tdir = str(tmp_path / "t")
     _mk_merge_table(spark, tdir)
-    last = export_delta_log(spark, tdir)
-    assert last == 2 and delta_versions(tdir) == [0, 1, 2]
+    assert delta_versions(tdir) == [0, 1, 2]
 
     v0 = _log_lines(tdir, 0)
     protos = [a["protocol"] for a in v0 if "protocol" in a]
@@ -83,67 +72,35 @@ def test_export_protocol_conformance(spark, tmp_path):
     assert len(metas) == 1
     meta = metas[0]
     assert meta["format"] == {"provider": "parquet", "options": {}}
-    assert meta["partitionColumns"] == [] and meta["configuration"] == {}
+    assert meta["partitionColumns"] == ["__bucket__"]
+    assert meta["configuration"] == {
+        "spark-graft.bucketKey": "k",
+        "spark-graft.numBuckets": "4",
+    }
     schema_json = json.loads(meta["schemaString"])
     assert schema_json["type"] == "struct"
-    assert {f["name"] for f in schema_json["fields"]} == {"k", "v", "tag"}
+    assert {f["name"] for f in schema_json["fields"]} == {"k", "v", "tag", "__bucket__"}
 
     for ver in (0, 1, 2):
         for a in _log_lines(tdir, ver):
             if "add" in a:
                 add = a["add"]
                 assert not add["path"].startswith("/")
-                assert add["partitionValues"] == {}
+                bucket = add["partitionValues"]["__bucket__"]
+                assert 0 <= int(bucket) < 4
+                assert add["path"].startswith(f"__bucket__%3D{bucket}/")
                 assert add["size"] > 0 and add["modificationTime"] > 0
                 assert add["dataChange"] is True
                 assert json.loads(add["stats"])["numRecords"] >= 0
             if "remove" in a:
                 assert a["remove"]["deletionTimestamp"] > 0
+                assert "__bucket__" in a["remove"]["partitionValues"]
 
     # later commits are DELTAS: v1/v2 emit removes for replaced buckets
     v1 = _log_lines(tdir, 1)
     assert any("remove" in a for a in v1) and any("add" in a for a in v1)
     # no repeated metaData when the schema did not change
     assert not any("metaData" in a for a in v1)
-
-
-def test_export_replay_matches_native_asof(spark, tmp_path):
-    """Log replay at every version == the native as-of reader."""
-    tdir = str(tmp_path / "t")
-    _mk_merge_table(spark, tdir)
-    export_delta_log(spark, tdir)
-    for v in (0, 1, 2):
-        got = sorted(
-            read_delta_table(spark, tdir, version=v).collect(),
-            key=lambda r: r["k"],
-        )
-        want = sorted(
-            read_merge_table_asof(spark, tdir, version=v).collect(),
-            key=lambda r: r["k"],
-        )
-        assert [r.asDict() for r in got] == [r.asDict() for r in want], f"v{v}"
-
-
-def test_export_schema_evolution_boundary(spark, tmp_path):
-    """A widening merge emits a NEW metaData action at that version;
-    pre-evolution files replay with typed nulls for the new column."""
-    tdir = str(tmp_path / "t")
-    _mk_merge_table(spark, tdir, evolve=True)
-    export_delta_log(spark, tdir)
-    assert not any("metaData" in a for a in _log_lines(tdir, 1))
-    metas2 = [a["metaData"] for a in _log_lines(tdir, 2) if "metaData" in a]
-    assert len(metas2) == 1
-    names = {f["name"] for f in json.loads(metas2[0]["schemaString"])["fields"]}
-    assert "venue" in names
-
-    head = read_delta_table(spark, tdir)
-    assert "venue" in head.columns
-    got = {r["k"]: r["venue"] for r in head.collect()}
-    for k in range(40):
-        assert got[k] == ("ex" if k % 4 == 1 else None)
-    # pre-evolution version replays WITHOUT the later column
-    v1 = read_delta_table(spark, tdir, version=1)
-    assert "venue" not in v1.columns
 
 
 def test_checkpoint_written_and_sufficient(spark, tmp_path):
@@ -320,45 +277,11 @@ def test_replay_read_pushes_filters_and_prunes_columns(spark, tmp_path):
     assert "ReadSchema: struct<k:bigint,v:bigint>" in plan
 
 
-def test_export_idempotent_rebuild(spark, tmp_path):
-    """Re-export replaces the derived log and converges to the same
-    active file set."""
-    tdir = str(tmp_path / "t")
-    _mk_merge_table(spark, tdir)
-    export_delta_log(spark, tdir)
-    first = set(replay_state(spark, tdir).files)
-    export_delta_log(spark, tdir)
-    assert set(replay_state(spark, tdir).files) == first
-
-
-def test_merge_after_export_drops_stale_derived_log(spark, tmp_path):
-    """A merge following an export invalidates the DERIVED log (it
-    would describe a superseded file set); a foreign _delta_log without
-    the export sentinel refuses the non-transactional merge path."""
-    tdir = str(tmp_path / "t")
-    _mk_merge_table(spark, tdir)
-    export_delta_log(spark, tdir)
-    up = spark.createDataFrame([(3, 999)], "k long, v long")
-    merge_into_parquet(spark, tdir, up, key="k", set_exprs={"v": F.col("u.v")})
-    assert not os.path.isdir(os.path.join(tdir, "_delta_log"))
-    # re-export resumes cleanly and covers the third merge
-    assert export_delta_log(spark, tdir) == 3
-
-    foreign = str(tmp_path / "foreign")
-    _mk_merge_table(spark, foreign)
-    os.makedirs(os.path.join(foreign, "_delta_log"))
-    with pytest.raises(RuntimeError, match="did not derive"):
-        merge_into_parquet(
-            spark, foreign, up, key="k", set_exprs={"v": F.col("u.v")}
-        )
-
-
 def test_commit_conflict_and_loud_guards(spark, tmp_path):
     """(a) committing an already-taken version raises DeltaCommitConflict
     instead of silently replacing it (put-if-absent, the protocol's
-    commit atomicity); (b) exporting a non-bucketed dir refuses loudly;
-    (c) a null partition value refuses loudly instead of landing as the
-    __HIVE_DEFAULT_PARTITION__ literal."""
+    commit atomicity); (b) a null partition value refuses loudly instead
+    of landing as the __HIVE_DEFAULT_PARTITION__ literal."""
     from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
         DeltaCommitConflict,
         _read_commit_actions,
@@ -371,11 +294,6 @@ def test_commit_conflict_and_loud_guards(spark, tmp_path):
     with pytest.raises(DeltaCommitConflict, match="version 0"):
         _write_commit(tdir, 0, [{"commitInfo": {"operation": "EVIL"}}])
     assert _read_commit_actions(tdir, 0) == before  # untouched
-
-    plain = str(tmp_path / "plain")
-    spark.createDataFrame([(1,)], "k long").write.parquet(plain)
-    with pytest.raises(ValueError, match="not a bucketed merge table"):
-        export_delta_log(spark, plain)
 
     with pytest.raises(NotImplementedError, match="null partition value"):
         create_delta_table(
@@ -464,13 +382,12 @@ def test_model_fuzz_lifecycle(spark, tmp_path, seed):
 
 def test_real_delta_reader_if_available(spark, tmp_path):
     """Auto-unskip interop gate (MIGRATION.md runbook): when a real
-    delta-spark is importable, it must read our exported table
+    delta-spark is importable, it must read our merge table
     byte-for-byte. Skipped self-documentingly in containers without
     the connector."""
     pytest.importorskip("delta")
     tdir = str(tmp_path / "t")
     _mk_merge_table(spark, tdir)
-    export_delta_log(spark, tdir)
     real = spark.read.format("delta").load(tdir)
     ours = read_delta_table(spark, tdir)
     assert sorted(map(tuple, real.collect())) == sorted(map(tuple, ours.collect()))
@@ -557,6 +474,61 @@ def test_vacuum_listing_sweep_reclaims_checkpoint_expired_orphans(
         assert os.path.exists(os.path.join(tdir, DL._decode_path(p)))
     got = sorted(r["k"] for r in DL.read_delta_table(spark, tdir).collect())
     assert got == expect
+
+
+def test_vacuum_listing_sweep_enters_underscore_partition_dirs(spark, tmp_path):
+    """Spark's hidden-path rule skips `_`/`.` names only when they are
+    not partition directories: an orphan parquet file in `__bucket__=0/`
+    (what a merge that crashed before its commit leaves behind), older
+    than the retention, is reclaimed by the listing sweep; the log and
+    the active files are left alone."""
+    tdir = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, i % 2) for i in range(10)], "k long, __bucket__ int")
+    create_delta_table(spark, tdir, df, partition_by=["__bucket__"])
+    orphan = os.path.join(tdir, "__bucket__=0", "part-orphan.snappy.parquet")
+    spark.createDataFrame([(99,)], "k long").toPandas().to_parquet(orphan)
+    old = os.path.getmtime(orphan) - 7200
+    os.utime(orphan, (old, old))
+
+    from financial_arbitrage_data_pipeline_spark.sources.delta_log import vacuum_delta
+
+    deleted = vacuum_delta(spark, tdir, retention_ms=3_600_000, force_listing_sweep=True)
+    assert deleted == ["__bucket__%3D0/part-orphan.snappy.parquet"]
+    assert not os.path.exists(orphan)
+    assert sorted(r["k"] for r in read_delta_table(spark, tdir).collect()) == list(range(10))
+
+
+def test_partitioned_read_plans_one_scan_without_union(spark, tmp_path):
+    """A read of a 16-partition table is ONE file scan (partition values
+    parsed from the Hive paths), not a union of per-partition scans."""
+    tdir = str(tmp_path / "t")
+    df = spark.range(64).selectExpr("id AS k", "CAST(id % 16 AS INT) AS p")
+    create_delta_table(spark, tdir, df, partition_by=["p"])
+    assert len(replay_state(spark, tdir).files) >= 16
+    out = read_delta_table(spark, tdir)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert "Union" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted((r["k"], r["p"]) for r in out.collect()) == [
+        (i, i % 16) for i in range(64)
+    ]
+
+
+def test_partitioned_read_refuses_path_without_its_partition_segment(spark, tmp_path):
+    """The one-scan reader takes partition values from the path, so a
+    logged file whose path does not carry its `col=value` segment is
+    refused on the driver instead of being read with the wrong value."""
+    tdir = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, g string")
+    create_delta_table(spark, tdir, df, partition_by=["g"])
+    lines = _log_lines(tdir, 0)
+    for a in lines:
+        if "add" in a:
+            a["add"]["partitionValues"] = {"g": "zz"}
+    with open(os.path.join(tdir, "_delta_log", f"{0:020d}.json"), "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in lines) + "\n")
+    with pytest.raises(ValueError, match="does not carry"):
+        read_delta_table(spark, tdir)
 
 
 def test_stats_filter_skips_files_and_returns_exact_rows(spark, tmp_path):

@@ -2,10 +2,9 @@
 — VERDICT r10 task 2: copy-on-write rewrite of matched files,
 remove+add in one commit, `txn`-based exactly-once redelivery, and
 metaData re-emit for schema widening, with crash-injection and
-redelivery tests mirroring the bucketed table's
-(`tests/test_upsert.py`). Plus the two ADVICE r10 delta_log fixes:
-checkpoints carry unexpired remove tombstones, and export refuses to
-destroy a foreign _delta_log.
+redelivery tests on plain Delta tables (`tests/test_upsert.py` covers
+the bucket-partitioned merge tables). Plus the ADVICE r10 fix:
+checkpoints carry unexpired remove tombstones.
 
 Reference anchor for the lifecycle: the reference's Postgres upsert
 (`/root/reference/database/postgres/writer.py:351-407`).
@@ -221,9 +220,9 @@ def test_delta_merge_schema_widening_and_time_travel(spark, tmp_path):
 
 
 def test_merge_into_parquet_routes_delta_target_natively(spark, tmp_path):
-    """K4 dispatch: a _delta_log WITHOUT the export sentinel is a live
-    Delta table — merge_into_parquet merges THROUGH the log (formerly a
-    loud refusal), honoring applied_batch_id via the txn action."""
+    """merge_into_parquet on any Delta table — not only a bucketed merge
+    table — merges THROUGH the log, honoring applied_batch_id via the
+    txn action."""
     from financial_arbitrage_data_pipeline_spark.operators.upsert import (
         merge_into_parquet,
     )
@@ -285,35 +284,6 @@ def test_checkpoint_carries_tombstones_for_vacuum(spark, tmp_path):
     # current version still reads exactly
     got = read_delta_table(spark, str(td)).agg(F.sum("v")).collect()[0][0]
     assert got == sum(10 * i for i in range(100)) + 300
-
-
-def test_export_refuses_foreign_delta_log(spark, tmp_path):
-    """ADVICE r10: export_delta_log must not rmtree a _delta_log it did
-    not derive (no export sentinel) — that would destroy a real Delta
-    writer's transaction history."""
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        create_bucketed_table,
-    )
-    from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
-        export_delta_log,
-    )
-
-    td = tmp_path / "t"
-    create_bucketed_table(
-        spark,
-        str(td),
-        spark.range(0, 10).select(F.col("id").alias("k"), F.col("id").alias("v")),
-        key="k",
-        keep_history=True,
-    )
-    # plant a foreign _delta_log (no sentinel)
-    ldir = os.path.join(str(td), "_delta_log")
-    os.makedirs(ldir)
-    with open(os.path.join(ldir, f"{0:020d}.json"), "w") as fh:
-        fh.write('{"commitInfo":{"operation":"foreign"}}\n')
-    with pytest.raises(FileExistsError, match="foreign|not derived"):
-        export_delta_log(spark, str(td))
-    assert os.path.exists(os.path.join(ldir, f"{0:020d}.json"))
 
 
 def test_merge_prune_counters_and_degrade_observable(spark, tmp_path):

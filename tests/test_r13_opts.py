@@ -46,9 +46,10 @@ def test_suffix_ranks_early_exit_matches_bruteforce(spark):
 
 
 def test_merge_bucketed_respects_caller_persist(spark, sf_dir):
-    """_merge_bucketed persists the updates plan across its two jobs and
-    unpersists it — but a caller's OWN persist must survive the merge
-    (ownership contract: we neither re-persist nor unpersist theirs)."""
+    """The merge persists the updates plan across its two jobs (bucket
+    selection, rewrite) and unpersists it — but a caller's OWN persist
+    must survive the merge (ownership contract: we neither re-persist
+    nor unpersist theirs)."""
     from financial_arbitrage_data_pipeline_spark.operators.upsert import (
         create_bucketed_table,
         merge_into_parquet,
@@ -88,8 +89,8 @@ def test_merge_bucketed_respects_caller_persist(spark, sf_dir):
 
 
 def test_create_bucketed_table_empty_seed_still_reads(spark):
-    """The take(1) emptiness pre-probe is gone; an empty seed must still
-    produce a readable layout (schema parked in __bucket__=0)."""
+    """An empty seed commits the schema and no data files; the table
+    reads back empty with the seed's columns."""
     from financial_arbitrage_data_pipeline_spark.operators.upsert import (
         create_bucketed_table,
         read_merge_table,

@@ -9,7 +9,7 @@ import os
 import subprocess
 import sys
 
-from financial_arbitrage_data_pipeline_spark.session import POSTURE
+from financial_arbitrage_data_pipeline_spark.session import POSTURE, driver_memory
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,3 +48,17 @@ def test_configure_matches_get_spark_posture(spark):
     got = {key: vanilla.conf.get(key) for key in POSTURE}
     want = {key: spark.conf.get(key) for key in POSTURE}
     assert got == want
+
+
+def test_default_driver_memory_fits_physical_ram(monkeypatch):
+    """Without an override the driver heap is derived from the machine:
+    never more than its physical RAM (a constant 16g exceeds it on
+    smaller machines), never more than 16g."""
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem = driver_memory()
+    assert mem.endswith("g")
+    assert 1 <= int(mem[:-1]) <= 16
+    assert int(mem[:-1]) * 2**30 <= phys
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert driver_memory() == "3g"

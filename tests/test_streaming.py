@@ -333,11 +333,13 @@ def test_redelivered_replay_contains_cross_batch_duplicates(spark, sf_dir, tmp_p
 
 def test_pair_performance_upserter_skips_redelivered_batches(spark, sf_dir, tmp_path):
     """The at-least-once guard, end to end: applying the same batch id
-    twice (and any batch id at or below the marker) merges exactly once;
-    a NEW batch id still merges. Uses the SHIPPED batch handler."""
+    twice (and any batch id at or below the committed one) merges
+    exactly once; a NEW batch id still merges. Uses the SHIPPED batch
+    handler."""
     from financial_arbitrage_data_pipeline_spark.operators.streaming_queries import (
         make_pair_perf_upserter,
     )
+    from financial_arbitrage_data_pipeline_spark.operators.upsert import read_merge_table
 
     table = str(tmp_path / "pair_perf")
     upsert = make_pair_perf_upserter(spark, table)
@@ -347,16 +349,16 @@ def test_pair_performance_upserter_skips_redelivered_batches(spark, sf_dir, tmp_
     )
 
     upsert(batch, 0)
-    once = {r.pair_id: r.total_trades for r in spark.read.parquet(table).collect()}
+    once = {r.pair_id: r.total_trades for r in read_merge_table(spark, table).collect()}
     assert once == {7: 2, 8: 1}
 
     upsert(batch, 0)  # redelivery of the same batch id
     upsert(batch, -1)  # and of an older one
-    again = {r.pair_id: r.total_trades for r in spark.read.parquet(table).collect()}
+    again = {r.pair_id: r.total_trades for r in read_merge_table(spark, table).collect()}
     assert again == once  # nothing double-applied
 
     upsert(batch, 1)  # a genuinely new batch DOES merge
-    final = {r.pair_id: r.total_trades for r in spark.read.parquet(table).collect()}
+    final = {r.pair_id: r.total_trades for r in read_merge_table(spark, table).collect()}
     assert final == {7: 4, 8: 2}
 
 
@@ -540,6 +542,7 @@ def test_book_depth_upserter_additive_and_redelivery_safe(spark, sf_dir, tmp_pat
     from financial_arbitrage_data_pipeline_spark.operators.streaming_queries import (
         make_book_depth_upserter,
     )
+    from financial_arbitrage_data_pipeline_spark.operators.upsert import read_merge_table
 
     table = str(tmp_path / "book_depth")
     upsert = make_book_depth_upserter(spark, table)
@@ -557,7 +560,7 @@ def test_book_depth_upserter_additive_and_redelivery_safe(spark, sf_dir, tmp_pat
     def state():
         return {
             (r.market_id, r.side, r.level): r.net
-            for r in spark.read.parquet(table).collect()
+            for r in read_merge_table(spark, table).collect()
         }
 
     once = state()

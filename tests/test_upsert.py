@@ -1,19 +1,92 @@
-"""Unit tests for the parquet MERGE primitive (K4/J4) beyond the
-oracle-checked lifecycle query."""
+"""Unit tests for the MERGE primitive (K4/J4) beyond the oracle-checked
+lifecycle queries. Every table here is a `create_bucketed_table` merge
+table: a Delta table partitioned by `__bucket__`."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from financial_arbitrage_data_pipeline_spark.operators import upsert as U
 from financial_arbitrage_data_pipeline_spark.operators.upsert import merge_into_parquet
+from financial_arbitrage_data_pipeline_spark.sources import delta_log as DL
+
+
+class Boom(RuntimeError):
+    pass
 
 
 def _seed(spark, path):
-    spark.createDataFrame(
-        [(1, 10, "a"), (2, 20, "b")], "id long, v long, tag string"
-    ).write.mode("overwrite").parquet(path)
+    U.create_bucketed_table(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(1, 10, "a"), (2, 20, "b")], "id long, v long, tag string"
+        ),
+        key="id",
+        n_buckets=4,
+    )
 
 
+def _seed_bucketed(spark, path, n_buckets=8, n_rows=64):
+    df = spark.range(n_rows).select(
+        F.col("id"), (F.col("id") * 10).alias("v"), F.lit("x").alias("tag")
+    )
+    U.create_bucketed_table(spark, path, df, key="id", n_buckets=n_buckets)
+
+
+def _bucketed_state(spark, path):
+    return {r.id: r.v for r in U.read_merge_table(spark, path).collect()}
+
+
+def _snap(spark, target):
+    return {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
+
+
+def _buckets_of(spark, keys, n):
+    return {
+        r[0]
+        for r in spark.createDataFrame([(k,) for k in keys], "k long")
+        .select(DL.bucket_of(F.col("k"), n))
+        .collect()
+    }
+
+
+def _merge_metrics(path, version):
+    [info] = [
+        a["commitInfo"]
+        for a in DL._read_commit_actions(path, version)
+        if "commitInfo" in a
+    ]
+    return info["operationMetrics"]
+
+
+def _parquet_on_disk(path):
+    out = set()
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "_delta_log"]
+        for f in files:
+            if f.endswith(".parquet"):
+                out.add(os.path.relpath(os.path.join(root, f), path))
+    return out
+
+
+def _logged_files(spark, path):
+    """Every data file any retained commit references (active or
+    tombstoned), as relative filesystem paths."""
+    out = set()
+    for v in DL.delta_versions(path):
+        state = DL.replay_state(spark, path, v)
+        out |= {DL._decode_path(p) for p in state.files}
+        out |= {DL._decode_path(p) for p in state.tombstones}
+    return out
+
+
+# ---------------------------------------------------------------------------
+# MERGE semantics
+# ---------------------------------------------------------------------------
 def test_merge_updates_matched_rows_only(spark, tmp_path):
     path = str(tmp_path / "t")
     _seed(spark, path)
@@ -21,7 +94,7 @@ def test_merge_updates_matched_rows_only(spark, tmp_path):
     merge_into_parquet(
         spark, path, updates, key="id", set_exprs={"v": F.col("t.v") + F.col("u.dv")}
     )
-    rows = {r.id: (r.v, r.tag) for r in spark.read.parquet(path).collect()}
+    rows = {r.id: (r.v, r.tag) for r in U.read_merge_table(spark, path).collect()}
     assert rows == {1: (10, "a"), 2: (25, "b")}
 
 
@@ -37,163 +110,79 @@ def test_merge_insert_missing(spark, tmp_path):
         set_exprs={"v": F.coalesce(F.col("t.v"), F.lit(0)) + F.col("u.dv")},
         insert_missing=True,
     )
-    rows = {r.id: (r.v, r.tag) for r in spark.read.parquet(path).collect()}
+    rows = {r.id: (r.v, r.tag) for r in U.read_merge_table(spark, path).collect()}
     assert rows == {1: (10, "a"), 2: (20, "b"), 3: (7, None)}
 
 
 def test_merge_is_idempotent_on_empty_updates(spark, tmp_path):
+    """An empty-updates merge without an applied batch id commits
+    nothing — with or without insert_missing."""
     path = str(tmp_path / "t")
     _seed(spark, path)
     updates = spark.createDataFrame([], "id long, dv long")
-    merge_into_parquet(
-        spark, path, updates, key="id", set_exprs={"v": F.col("t.v") + F.col("u.dv")}
-    )
-    assert spark.read.parquet(path).count() == 2
-
-
-def test_merge_extra_files_installed_with_swap(spark, tmp_path):
-    """extra_files land inside the swapped directory in the same rename
-    as the data (the applied-batch idempotence anchor), and Spark's
-    reader ignores the underscore-prefixed marker."""
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        merge_into_parquet,
-    )
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame([(1, 10)], "k long, v long").write.parquet(target)
-    ups = spark.createDataFrame([(1, 5)], "k long, d long")
-    merge_into_parquet(
-        spark,
-        target,
-        ups,
-        key="k",
-        set_exprs={"v": F.col("t.v") + F.col("u.d")},
-        extra_files={"_last_applied_batch": "7"},
-    )
-    with open(os.path.join(target, "_last_applied_batch")) as fh:
-        assert fh.read() == "7"
-    [row] = spark.read.parquet(target).collect()
-    assert (row.k, row.v) == (1, 15)
-
-
-def test_merge_recovers_from_crashed_prior_run(spark, tmp_path):
-    """Crash-residue handling: a leftover .__merge_old__ alongside a live
-    target (crash after the tmp→target rename but before cleanup) is
-    swept; a .__merge_old__ with NO target (crash between the two
-    renames) is restored as the target. Either way the next merge runs
-    and lands the update."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    updates = spark.createDataFrame([(1, 1)], "id long, dv long")
-    upd = {"v": F.col("t.v") + F.col("u.dv")}
-
-    # residue case 1: stale old + stale tmp beside a live target
-    shutil.copytree(path, path + ".__merge_old__")
-    os.makedirs(path + ".__merge_tmp__", exist_ok=True)
-    merge_into_parquet(spark, path, updates, key="id", set_exprs=upd)
-    assert not os.path.exists(path + ".__merge_old__")
-    assert not os.path.exists(path + ".__merge_tmp__")
-    rows = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {1: 11, 2: 20}
-
-    # residue case 2: crash window — old exists, target is gone
-    os.rename(path, path + ".__merge_old__")
-    merge_into_parquet(spark, path, updates, key="id", set_exprs=upd)
-    rows = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {1: 12, 2: 20}
-
-
-# ---------------------------------------------------------------------------
-# Bucket-scoped merge (the scale path: rewrite only touched buckets)
-# ---------------------------------------------------------------------------
-def _bucket_files(path):
-    """{relpath: bytes} for every parquet data file under each bucket dir."""
-    import os
-
-    out = {}
-    for root, _dirs, files in os.walk(path):
-        if "__bucket__=" not in root:
-            continue
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, path)] = fh.read()
-    return out
-
-
-def _seed_bucketed(spark, path, n_buckets=8, n_rows=64):
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        create_bucketed_table,
-    )
-
-    df = spark.range(n_rows).select(
-        F.col("id"), (F.col("id") * 10).alias("v"), F.lit("x").alias("tag")
-    )
-    create_bucketed_table(spark, path, df, key="id", n_buckets=n_buckets)
+    for insert in (False, True):
+        merge_into_parquet(
+            spark, path, updates, key="id",
+            set_exprs={"v": F.col("t.v") + F.col("u.dv")},
+            insert_missing=insert,
+        )
+    assert DL.delta_versions(path) == [0]
+    assert U.read_merge_table(spark, path).count() == 2
 
 
 def test_bucketed_merge_semantics(spark, tmp_path):
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        read_merge_table,
-    )
-
     path = str(tmp_path / "bt")
     _seed_bucketed(spark, path)
     updates = spark.createDataFrame([(3, 1), (7, 2)], "id long, dv long")
     merge_into_parquet(
         spark, path, updates, key="id", set_exprs={"v": F.col("t.v") + F.col("u.dv")}
     )
-    rows = {r.id: r.v for r in read_merge_table(spark, path).collect()}
+    rows = _bucketed_state(spark, path)
     assert len(rows) == 64
     assert rows[3] == 31 and rows[7] == 72
     assert rows[0] == 0 and rows[63] == 630
 
 
 def test_bucketed_merge_untouched_buckets_byte_identical(spark, tmp_path):
-    """The write-amplification contract: a merge rewrites ONLY the bucket
-    directories its update keys hash into; every other bucket's data
-    files are bit-for-bit untouched."""
-    import os
-
+    """The write-amplification contract: a merge reads and rewrites ONLY
+    the buckets its update keys hash into — the commit's
+    numTargetFilesScanned equals the number of touched buckets (one file
+    per bucket) — and every other bucket's data files are bit-for-bit
+    untouched."""
     path = str(tmp_path / "bt")
     _seed_bucketed(spark, path)
-    before = _bucket_files(path)
-    updates = spark.createDataFrame([(3, 1)], "id long, dv long")
+
+    def bucket_bytes():
+        out = {}
+        for rel in _parquet_on_disk(path):
+            with open(os.path.join(path, rel), "rb") as fh:
+                out[rel] = fh.read()
+        return out
+
+    before = bucket_bytes()
+    keys = [3, 11, 12]
+    touched = _buckets_of(spark, keys, 8)
+    assert 1 < len(touched) < 8
+    updates = spark.createDataFrame([(k, 1) for k in keys], "id long, dv long")
     merge_into_parquet(
         spark, path, updates, key="id", set_exprs={"v": F.col("t.v") + F.col("u.dv")}
     )
-    after = _bucket_files(path)
+    metrics = _merge_metrics(path, 1)
+    assert metrics["pruneMode"] == "bucket"
+    assert metrics["numTargetFilesTotal"] == 8
+    assert metrics["numTargetFilesScanned"] == len(touched)
 
-    from pyspark.sql import functions as SF
-
-    [touched] = [
-        r[0]
-        for r in spark.range(1)
-        .select(SF.pmod(SF.xxhash64(SF.lit(3).cast("long")), SF.lit(8)).cast("int"))
-        .collect()
-    ]
-    touched_prefix = f"__bucket__={touched}"
-    untouched_before = {k: v for k, v in before.items() if not k.startswith(touched_prefix)}
-    untouched_after = {k: v for k, v in after.items() if not k.startswith(touched_prefix)}
+    after = bucket_bytes()
+    prefixes = tuple(f"__bucket__={b}{os.sep}" for b in touched)
+    untouched_before = {k: v for k, v in before.items() if not k.startswith(prefixes)}
+    untouched_after = {k: v for k, v in after.items() if not k.startswith(prefixes)}
     assert untouched_before == untouched_after  # names AND bytes identical
-    assert any(k.startswith(touched_prefix) for k in after)
-    changed = {k for k in before if k.startswith(touched_prefix)}
-    assert {k for k in after if k.startswith(touched_prefix)} != changed or any(
-        before[k] != after.get(k) for k in changed
-    )
+    # one new file per touched bucket
+    new = set(after) - set(before)
+    assert len(new) == len(touched) and all(k.startswith(prefixes) for k in new)
 
 
 def test_bucketed_merge_insert_missing_lands_in_right_bucket(spark, tmp_path):
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        read_merge_table,
-    )
-
     path = str(tmp_path / "bt")
     _seed_bucketed(spark, path, n_rows=4)
     updates = spark.createDataFrame([(100, 7)], "id long, dv long")
@@ -205,46 +194,51 @@ def test_bucketed_merge_insert_missing_lands_in_right_bucket(spark, tmp_path):
         set_exprs={"v": F.coalesce(F.col("t.v"), F.lit(0)) + F.col("u.dv")},
         insert_missing=True,
     )
-    rows = {r.id: (r.v, r.tag) for r in read_merge_table(spark, path).collect()}
+    rows = {r.id: (r.v, r.tag) for r in U.read_merge_table(spark, path).collect()}
     assert rows[100] == (7, None)
     assert len(rows) == 5
+    [b] = _buckets_of(spark, [100], 8)
+    only_b = DL.read_delta_table(spark, path, partition_filter={"__bucket__": [str(b)]})
+    assert 100 in {r.id for r in only_b.collect()}
+    adds = [a["add"] for a in DL._read_commit_actions(path, 1) if "add" in a]
+    assert [a["partitionValues"] for a in adds] == [{"__bucket__": str(b)}]
 
 
 def test_bucketed_merge_empty_updates_still_advances_marker(spark, tmp_path):
-    import os
-
+    """An empty batch with an applied batch id still records the id (a
+    txn-only commit), so its redelivery is skipped."""
     path = str(tmp_path / "bt")
     _seed_bucketed(spark, path, n_rows=4)
     updates = spark.createDataFrame([], "id long, dv long")
-    merge_into_parquet(
-        spark,
-        path,
-        updates,
-        key="id",
-        set_exprs={"v": F.col("t.v") + F.col("u.dv")},
-        extra_files={"_last_applied_batch": "42"},
+    for _ in range(2):  # the second call is a redelivery
+        merge_into_parquet(
+            spark,
+            path,
+            updates,
+            key="id",
+            set_exprs={"v": F.col("t.v") + F.col("u.dv")},
+            applied_batch_id=42,
+        )
+    assert DL.delta_versions(path) == [0, 1]
+    assert DL.last_txn_version(spark, path, U._APPLIED_BATCH_APP) == 42
+    assert not any(
+        "add" in a or "remove" in a for a in DL._read_commit_actions(path, 1)
     )
-    with open(os.path.join(path, "_last_applied_batch")) as fh:
-        assert fh.read() == "42"
-    assert spark.read.parquet(path).count() == 4
+    assert U.read_merge_table(spark, path).count() == 4
 
 
 def test_bucketed_and_full_rewrite_merge_agree(spark, tmp_path):
-    """Property: the bucket-scoped path and the whole-table-rewrite path
-    are the same MERGE — identical final table for identical inputs
-    (updates hitting several buckets, inserts, and untouched rows)."""
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        create_bucketed_table,
-        read_merge_table,
-    )
-
+    """Property: the bucket-pruned merge and a whole-table rewrite (the
+    same MERGE on a one-file unpartitioned Delta table) produce the
+    identical table for identical inputs (updates hitting several
+    buckets, inserts, and untouched rows)."""
     df = spark.range(200).select(
         F.col("id"), (F.col("id") * 3).alias("v"), F.lit("t").alias("tag")
     )
     plain = str(tmp_path / "plain")
     bucketed = str(tmp_path / "bucketed")
-    df.write.parquet(plain)
-    create_bucketed_table(spark, bucketed, df, key="id", n_buckets=8)
+    DL.create_delta_table(spark, plain, df.coalesce(1))
+    U.create_bucketed_table(spark, bucketed, df, key="id", n_buckets=8)
 
     updates = spark.createDataFrame(
         [(7, 100), (63, 200), (64, 300), (500, 400)], "id long, dv long"
@@ -254,184 +248,118 @@ def test_bucketed_and_full_rewrite_merge_agree(spark, tmp_path):
         merge_into_parquet(
             spark, path, updates, key="id", set_exprs=exprs, insert_missing=True
         )
+    assert _merge_metrics(plain, 1)["numTargetFilesScanned"] == 1  # the whole table
+    assert _merge_metrics(bucketed, 1)["pruneMode"] == "bucket"
 
-    a = {(r.id, r.v, r.tag) for r in spark.read.parquet(plain).collect()}
-    b = {(r.id, r.v, r.tag) for r in read_merge_table(spark, bucketed).collect()}
+    a = {(r.id, r.v, r.tag) for r in DL.read_delta_table(spark, plain).collect()}
+    b = {(r.id, r.v, r.tag) for r in U.read_merge_table(spark, bucketed).collect()}
     assert a == b
     assert (500, 400, None) in a
 
 
-def test_bucketed_merge_recovers_bucket_stranded_in_old(spark, tmp_path):
-    """Crash simulation: a prior merge died between its two renames,
-    leaving `__bucket__=<i>.__old__` as the ONLY copy of that bucket.
-    The next merge must restore it before scanning — no rows lost, and
-    the new update applies on top of the restored data."""
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        read_merge_table,
-    )
-
+# ---------------------------------------------------------------------------
+# Crash safety and concurrency: the log commit is the only commit point
+# ---------------------------------------------------------------------------
+def test_merge_recovers_from_crashed_prior_run(spark, tmp_path, monkeypatch):
+    """A merge that dies before its commit leaves staged files in the
+    touched bucket directories but no log entry: readers never see them,
+    the next merge runs normally, and VACUUM's listing sweep reclaims
+    the orphans from the `__bucket__=` directories."""
     path = str(tmp_path / "bt")
-    _seed_bucketed(spark, path)  # ids 0..63, v = id*10
-    # find the bucket dir holding id=3 and strand it in .__old__
-    [b3] = [
-        r[0]
-        for r in spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit(3).cast("long")), F.lit(8)).cast("int"))
-        .collect()
-    ]
-    dst = os.path.join(path, f"__bucket__={b3}")
-    os.rename(dst, dst + ".__old__")
+    _seed_bucketed(spark, path)
+    before = _bucketed_state(spark, path)
+    upd = {"v": F.col("t.v") + F.col("u.dv")}
+    updates = spark.createDataFrame([(1, 1), (2, 1)], "id long, dv long")
 
-    updates = spark.createDataFrame([(3, 1)], "id long, dv long")
-    merge_into_parquet(
-        spark, path, updates, key="id", set_exprs={"v": F.col("t.v") + F.col("u.dv")}
-    )
-    rows = {r.id: r.v for r in read_merge_table(spark, path).collect()}
-    assert len(rows) == 64  # nothing lost
-    assert rows[3] == 31  # restored AND updated
+    def die(*_a, **_k):
+        raise Boom("simulated crash before the commit")
 
+    with monkeypatch.context() as m:
+        m.setattr(DL, "_write_commit", die)
+        with pytest.raises(Boom):
+            merge_into_parquet(spark, path, updates, key="id", set_exprs=upd)
+    orphans = _parquet_on_disk(path) - _logged_files(spark, path)
+    assert orphans and all(o.startswith("__bucket__=") for o in orphans)
+    assert DL.delta_versions(path) == [0]
+    assert _bucketed_state(spark, path) == before
 
-# ---------------------------------------------------------------------------
-# Round-5: cross-bucket atomicity via the commit manifest (K4 hardening)
-# ---------------------------------------------------------------------------
-def _bucketed_state(spark, path):
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        read_merge_table,
-    )
+    merge_into_parquet(spark, path, updates, key="id", set_exprs=upd)
+    after = _bucketed_state(spark, path)
+    assert after[1] == 11 and after[2] == 21 and len(after) == 64
 
-    return {r.id: r.v for r in read_merge_table(spark, path).collect()}
+    deleted = DL.vacuum_delta(spark, path, retention_ms=0, force_listing_sweep=True)
+    assert {DL._decode_path(p) for p in deleted} >= orphans
+    assert not (_parquet_on_disk(path) & orphans)
+    assert _bucketed_state(spark, path) == after
 
 
-def test_crash_between_bucket_swaps_rolls_back_then_replays_exactly_once(
-    spark, tmp_path
+def test_crash_before_commit_leaves_table_unchanged_then_replays_exactly_once(
+    spark, tmp_path, monkeypatch
 ):
-    """THE K4 atomicity contract: kill the merge between two bucket
-    swaps → the table must read as if the merge never ran (all-or-
-    nothing), the applied-batch marker must NOT be installed, and the
-    at-least-once redelivery must land the batch exactly once — no lost
-    rows, no double-apply."""
-    import os
-
-    import pytest as _pytest
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert
-
+    """THE K4 atomicity contract: kill a multi-bucket merge after its
+    files are staged but before its commit → the table reads as if the
+    merge never ran (all-or-nothing), the applied batch id is NOT
+    recorded, and the at-least-once redelivery lands the batch exactly
+    once — no lost rows, no double-apply."""
     path = str(tmp_path / "bt")
     _seed_bucketed(spark, path)  # ids 0..63, v = id*10
     before = _bucketed_state(spark, path)
-
     # updates spanning several buckets, additive (double-apply detectable)
-    updates = spark.createDataFrame(
-        [(i, 1) for i in range(0, 64, 7)], "id long, dv long"
-    )
-    marker = {"_last_applied_batch": "42"}
+    updates = spark.createDataFrame([(i, 1) for i in range(0, 64, 7)], "id long, dv long")
+    upd = {"v": F.col("t.v") + F.col("u.dv")}
 
-    class Boom(RuntimeError):
-        pass
+    def die(*_a, **_k):
+        raise Boom("simulated crash before the commit")
 
-    swapped = []
-
-    def crash_after_first(bucket):
-        swapped.append(bucket)
-        if len(swapped) == 1:
-            raise Boom("simulated crash between bucket swaps")
-
-    upsert._post_swap_hook = crash_after_first
-    try:
-        with _pytest.raises(Boom):
-            merge_into_parquet(
-                spark,
-                path,
-                updates,
-                key="id",
-                set_exprs={"v": F.col("t.v") + F.col("u.dv")},
-                extra_files=marker,
-            )
-    finally:
-        upsert._post_swap_hook = None
-
-    # crash left a swapped bucket + intent file but NO commit manifest
-    assert os.path.exists(os.path.join(path, "_merge_pending"))
-    assert not os.path.exists(os.path.join(path, "_last_applied_batch"))
-
-    # reader sees the PRE-merge state: the one swapped bucket rolled back
+    with monkeypatch.context() as m:
+        m.setattr(DL, "_write_commit", die)
+        with pytest.raises(Boom):
+            merge_into_parquet(spark, path, updates, "id", upd, applied_batch_id=42)
+    assert DL.last_txn_version(spark, path, U._APPLIED_BATCH_APP) is None
     assert _bucketed_state(spark, path) == before
 
-    # redelivery (same batch, marker unset → re-applies): exactly once
-    merge_into_parquet(
-        spark,
-        path,
-        updates,
-        key="id",
-        set_exprs={"v": F.col("t.v") + F.col("u.dv")},
-        extra_files=marker,
-    )
-    after = _bucketed_state(spark, path)
+    for _ in range(2):  # redelivery, then a second redelivery
+        merge_into_parquet(spark, path, updates, "id", upd, applied_batch_id=42)
     expected = dict(before)
     for i in range(0, 64, 7):
         expected[i] += 1
-    assert after == expected  # +1 exactly once, all 64 rows present
-    with open(os.path.join(path, "_last_applied_batch")) as fh:
-        assert fh.read() == "42"
-    assert not os.path.exists(os.path.join(path, "_merge_pending"))
+    assert _bucketed_state(spark, path) == expected  # +1 exactly once
+    assert DL.delta_versions(path) == [0, 1]
+    assert DL.last_txn_version(spark, path, U._APPLIED_BATCH_APP) == 42
 
 
-def test_crash_after_commit_rolls_forward_and_skips_redelivery(spark, tmp_path):
-    """Crash AFTER the commit manifest lands but before cleanup: recovery
-    must roll FORWARD — reinstall the applied-batch marker from the
-    manifest, drop the .__old__ backups — so a redelivered batch sees the
-    marker and is skipped (no double-apply)."""
-    import json
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert
-
+def test_crash_after_commit_rolls_forward_and_skips_redelivery(
+    spark, tmp_path, monkeypatch
+):
+    """Crash AFTER the commit JSON lands (here: in the post-commit
+    checkpoint step): the merge is committed — readers see it, and the
+    redelivered batch sees its txn and is skipped (no double-apply)."""
     path = str(tmp_path / "bt")
     _seed_bucketed(spark, path)
-
     updates = spark.createDataFrame([(3, 1), (11, 2)], "id long, dv long")
-    merge_into_parquet(
-        spark,
-        path,
-        updates,
-        key="id",
-        set_exprs={"v": F.col("t.v") + F.col("u.dv")},
-        extra_files={"_last_applied_batch": "7"},
-    )
+    upd = {"v": F.col("t.v") + F.col("u.dv")}
+
+    def die(*_a, **_k):
+        raise Boom("simulated crash after the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(DL, "_maybe_checkpoint", die)
+        with pytest.raises(Boom):
+            merge_into_parquet(spark, path, updates, "id", upd, applied_batch_id=7)
     committed = _bucketed_state(spark, path)
+    assert committed[3] == 31 and committed[11] == 112
 
-    # reconstruct the crash window: commit manifest present, cleanup not
-    # run — pending intent back in place, marker deleted, stale .__old__
-    with open(os.path.join(path, "_commit_manifest")) as fh:
-        manifest = json.load(fh)
-    with open(os.path.join(path, "_merge_pending"), "w") as fh:
-        json.dump(manifest, fh)
-    os.remove(os.path.join(path, "_last_applied_batch"))
-    for swap in manifest["swaps"]:
-        os.makedirs(
-            os.path.join(path, f"__bucket__={swap['bucket']}.__old__"),
-            exist_ok=True,
-        )
-
-    upsert.recover_merge_table(path)
-
-    # rolled forward: marker reinstalled from manifest, backups gone
-    with open(os.path.join(path, "_last_applied_batch")) as fh:
-        assert fh.read() == "7"
-    assert not os.path.exists(os.path.join(path, "_merge_pending"))
-    assert not any(e.endswith(".__old__") for e in os.listdir(path))
+    merge_into_parquet(spark, path, updates, "id", upd, applied_batch_id=7)
     assert _bucketed_state(spark, path) == committed
+    assert DL.delta_versions(path) == [0, 1]
 
 
-def test_pair_perf_upserter_skips_after_rolled_forward_crash(spark, tmp_path):
-    """End-to-end through the SHIPPED streaming batch handler: after a
-    committed-but-uncleaned merge (marker missing on disk), the handler's
-    recovery must reinstall the marker and skip the redelivered batch."""
-    import json
-    import os
-
+def test_pair_perf_upserter_skips_after_rolled_forward_crash(
+    spark, tmp_path, monkeypatch
+):
+    """End-to-end through the SHIPPED streaming batch handler: a batch
+    whose merge committed but whose process died right after is skipped
+    on redelivery — its txn action is in the log."""
     from financial_arbitrage_data_pipeline_spark.operators.streaming_queries import (
         make_pair_perf_upserter,
     )
@@ -442,542 +370,103 @@ def test_pair_perf_upserter_skips_after_rolled_forward_crash(spark, tmp_path):
         [(1, 100, "purchase", 2.5), (2, 100, "purchase", 1.0)],
         "event_id long, user_id long, event_type string, value double",
     )
-    upsert_batch(batch, 0)
-    once = {
-        r.pair_id: (r.total_trades, r.total_volume, r.total_cost_cents)
-        for r in spark.read.parquet(table).collect()
-    }
 
-    # crash window: marker lost, manifest + pending agree (committed)
-    with open(os.path.join(table, "_commit_manifest")) as fh:
-        manifest = json.load(fh)
-    with open(os.path.join(table, "_merge_pending"), "w") as fh:
-        json.dump(manifest, fh)
-    os.remove(os.path.join(table, "_last_applied_batch"))
+    def die(*_a, **_k):
+        raise Boom("simulated crash after the commit")
 
+    with monkeypatch.context() as m:
+        m.setattr(DL, "_maybe_checkpoint", die)
+        with pytest.raises(Boom):
+            upsert_batch(batch, 0)
+
+    def totals():
+        return {
+            r.pair_id: (r.total_trades, r.total_volume, r.total_cost_cents)
+            for r in U.read_merge_table(spark, table).collect()
+        }
+
+    once = totals()
+    assert once[100][0] == 2
     upsert_batch(batch, 0)  # redelivery must be SKIPPED, not re-merged
-    again = {
-        r.pair_id: (r.total_trades, r.total_volume, r.total_cost_cents)
-        for r in spark.read.parquet(table).collect()
-    }
-    assert again == once
+    assert totals() == once
 
 
-def test_delta_merge_into_path_when_available(spark, tmp_path):
-    """Strategy 1 of merge_into_parquet — true transactional Delta
-    `MERGE INTO` — skip-gated on the delta-spark package so the first
-    environment that ships it exercises the path instead of leaving it
-    forever untested. Mirrors test_merge_updates_matched_rows_only +
-    insert_missing on a real Delta table, marker installed via
-    extra_files."""
-    import os
+def test_racing_merges_retry_and_lose_no_update(spark, tmp_path, monkeypatch):
+    """Optimistic concurrency: a second writer commits while the first
+    has already staged its files for the same version. The first loses
+    the put-if-absent race, removes its staged files, retries on the new
+    head — and both additive updates land."""
+    path = str(tmp_path / "bt")
+    _seed_bucketed(spark, path, n_rows=16)
+    add = {"v": F.col("t.v") + F.col("u.dv")}
+    first = spark.createDataFrame([(i, 1) for i in range(16)], "id long, dv long")
+    second = spark.createDataFrame([(i, 100) for i in range(0, 16, 2)], "id long, dv long")
 
-    import pytest as _pytest
+    real = DL._materialize_files
+    raced = []
 
-    from financial_arbitrage_data_pipeline_spark.operators import upsert
+    def racing_materialize(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:  # the other writer commits in this window
+            raced.append(True)
+            merge_into_parquet(spark, path, second, "id", add)
+        return out
 
-    if not upsert._HAS_DELTA:
-        _pytest.skip(
-            "delta-spark not installed in this container; the bucketed "
-            "parquet MERGE (strategy 2) carries the oracle-checked "
-            "coverage — see merge_into_parquet's docstring"
-        )
+    monkeypatch.setattr(DL, "_materialize_files", racing_materialize)
+    merge_into_parquet(spark, path, first, "id", add)
+    monkeypatch.setattr(DL, "_materialize_files", real)
 
-    path = str(tmp_path / "dt")
-    spark.createDataFrame(
-        [(1, 10, "a"), (2, 20, "b")], "id long, v long, tag string"
-    ).write.format("delta").save(path)
-    assert os.path.isdir(os.path.join(path, "_delta_log"))
-
-    updates = spark.createDataFrame([(2, 5)], "id long, dv long")
-    merge_into_parquet(
-        spark,
-        path,
-        updates,
-        key="id",
-        set_exprs={"v": F.col("t.v") + F.col("u.dv")},
-        extra_files={"_last_applied_batch": "11"},
-    )
-    rows = {
-        r.id: (r.v, r.tag)
-        for r in spark.read.format("delta").load(path).collect()
-    }
-    assert rows == {1: (10, "a"), 2: (25, "b")}
-    with open(os.path.join(path, "_last_applied_batch")) as fh:
-        assert fh.read() == "11"
+    got = _bucketed_state(spark, path)
+    assert got == {i: i * 10 + 1 + (100 if i % 2 == 0 else 0) for i in range(16)}
+    assert DL.delta_versions(path) == [0, 1, 2]
+    # the loser cleaned its staged files: nothing on disk outside the log
+    assert _parquet_on_disk(path) <= _logged_files(spark, path)
 
 
-def test_concurrent_merge_rejected_while_holder_is_alive(spark, tmp_path):
-    """Single-writer discipline: a second writer must fail loudly while
-    a LIVE pid holds the lock — a live holder is never preempted, not
-    even by break_lock-free recovery."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-    updates = spark.createDataFrame([(1, 11)], "k long, v long")
-
-    # simulate another live writer: a lock naming a pid that exists
-    # (this test process) but is not the acquiring logic's own check
-    with open(U._lock_path(target), "w") as fh:
-        json.dump({"pid": os.getppid(), "host": "test"}, fh)
-    import pytest as _pytest
-
-    with _pytest.raises(U.ConcurrentMergeError, match="merge already in progress"):
-        U.merge_into_parquet(
-            spark, target, updates, "k", {"v": F.col("u.v")}
-        )
-
-    # default-args recovery must also leave the live holder alone
-    U.recover_merge_table(target)
-    assert os.path.exists(U._lock_path(target))
-
-    # the declared single owner can still claim explicitly
-    U.recover_merge_table(target, break_lock=True)
-    U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")})
-    got = {
-        r.k: r.v for r in U.read_merge_table(spark, target).collect()
-    }
-    assert got == {1: 11, 2: 20}
-    # lock released after a successful merge
-    assert not os.path.exists(U._lock_path(target))
-
-
-def test_dead_holder_lock_self_clears_without_break_lock(spark, tmp_path):
-    """r5 task 5: a crashed lock holder (owner pid provably dead) must
-    NOT require callers to know about break_lock=True — the next merge
-    reclaims the lock and proceeds, and a default-args reader recovers
-    the pending crash state to the last committed table."""
-    import json
-    import os
-    import subprocess
-
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, 10), (2, 20), (3, 30), (4, 40)], "k long, v long"
-    )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-    updates = spark.createDataFrame(
-        [(1, 11), (2, 21), (3, 31), (4, 41)], "k long, v long"
-    )
-
-    # kill a lock-holding merge mid-swap: the injected crash leaves the
-    # pending intent file; then plant a lock owned by a genuinely dead
-    # pid (a finished subprocess), as if the merge process itself died
-    calls = []
-
-    def boom(bucket):
-        calls.append(bucket)
-        if len(calls) == 2:
-            raise RuntimeError("injected crash between swaps")
-
-    U._post_swap_hook = boom
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            U.merge_into_parquet(
-                spark, target, updates, "k", {"v": F.col("u.v")}
-            )
-    finally:
-        U._post_swap_hook = None
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    with open(U._lock_path(target), "w") as fh:
-        json.dump({"pid": proc.pid, "host": "test"}, fh)
-    assert os.path.exists(os.path.join(target, U._PENDING_FILE))
-
-    # a plain reader — NO break_lock — sees the last committed state
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {1: 10, 2: 20, 3: 30, 4: 40}
-    assert not os.path.exists(os.path.join(target, U._PENDING_FILE))
-    assert not os.path.exists(U._lock_path(target))
-
-    # and the next merge — NO break_lock — reopens the table cleanly
-    U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")})
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {1: 11, 2: 21, 3: 31, 4: 41}
-
-
-def test_reader_recovery_never_rolls_back_a_live_merge(spark, tmp_path):
-    """While the writer lock is held, a concurrent reader running
-    recovery must NOT roll back the in-flight pending state."""
-    import json
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+def test_applied_batch_id_rechecked_under_the_merge_lock(spark, tmp_path, monkeypatch):
+    """The redelivered-batch check is atomic with the commit: a zombie
+    driver whose merge of batch 7 is already staged when a failover
+    driver commits batch 7 loses the version race, re-checks the txn on
+    the new head and becomes a no-op instead of double-counting."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(1, 10)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
-    # a live merge: lock held by THIS process, intent file present.
-    # (Unparseable lock content is also treated as live — conservative.)
-    with open(U._lock_path(target), "w") as fh:
-        json.dump({"pid": os.getpid(), "host": "test"}, fh)
-    pending = {"merge_id": "m1", "swaps": [], "extra_files": {}}
-    with open(os.path.join(target, U._PENDING_FILE), "w") as fh:
-        fh.write(json.dumps(pending))
-
-    U.recover_merge_table(target)  # reader path: must be a no-op
-    assert os.path.exists(os.path.join(target, U._PENDING_FILE))
-
-    # unparseable lock content must also be treated as a live holder
-    with open(U._lock_path(target), "w") as fh:
-        fh.write("pid=not-json")
-    U.recover_merge_table(target)
-    assert os.path.exists(os.path.join(target, U._PENDING_FILE))
-
-    U.recover_merge_table(target, break_lock=True)  # owner claims + recovers
-    assert not os.path.exists(os.path.join(target, U._PENDING_FILE))
-    assert not os.path.exists(U._lock_path(target))
-
-
-def test_lock_released_when_merge_fails_midway(spark, tmp_path):
-    """A merge that dies mid-swap leaves its pending state for recovery
-    but NEVER a dangling lock (the finally releases it), so the owner's
-    next attempt proceeds after recovery."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, 10), (2, 20), (3, 30), (4, 40)], "k long, v long"
-    )
     U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-    updates = spark.createDataFrame(
-        [(1, 11), (2, 21), (3, 31), (4, 41)], "k long, v long"
-    )
+    updates = spark.createDataFrame([(1, 5)], "k long, dv long")
+    add = {"v": F.col("t.v") + F.col("u.dv")}
 
-    calls = []
+    real = DL._materialize_files
+    raced = []
 
-    def boom(bucket):
-        calls.append(bucket)
-        if len(calls) == 2:
-            raise RuntimeError("injected crash between swaps")
+    def failover_commits_first(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:
+            raced.append(True)
+            merge_into_parquet(spark, target, updates, "k", add, applied_batch_id=7)
+        return out
 
-    U._post_swap_hook = boom
-    try:
-        import pytest as _pytest
+    monkeypatch.setattr(DL, "_materialize_files", failover_commits_first)
+    merge_into_parquet(spark, target, updates, "k", add, applied_batch_id=7)
+    monkeypatch.setattr(DL, "_materialize_files", real)
+    assert _snap(spark, target) == {1: 15}  # applied once, by the failover
+    assert DL.delta_versions(target) == [0, 1]
 
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            U.merge_into_parquet(
-                spark, target, updates, "k", {"v": F.col("u.v")}
-            )
-    finally:
-        U._post_swap_hook = None
-    assert not os.path.exists(U._lock_path(target))
-    # recovery rolls the half-applied merge back; re-merge lands cleanly
-    U.recover_merge_table(target)
-    U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")})
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {1: 11, 2: 21, 3: 31, 4: 41}
+    # a genuinely new batch applies and advances the recorded id
+    merge_into_parquet(spark, target, updates, "k", add, applied_batch_id=8)
+    assert _snap(spark, target) == {1: 20}
+    assert DL.last_txn_version(spark, target, U._APPLIED_BATCH_APP) == 8
 
 
-def test_rebucket_preserves_data_and_changes_modulus(spark, tmp_path):
-    """rebucket_merge_table: data byte-identical, new modulus effective
-    (bucket dirs match pmod(xxhash64(key), new_n)), root metadata
-    (applied-batch marker) carried over, and merges after the rebucket
-    land correctly at the new granularity."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i * 10) for i in range(50)], "k long, v long"
-    )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-    U._install_root_files(target, {"_last_applied_batch": "7"})
-
-    U.rebucket_merge_table(spark, target, "k", n_buckets=16)
-
-    assert U._bucketed_n(target) == 16
-    with open(os.path.join(target, "_last_applied_batch")) as fh:
-        assert fh.read() == "7"
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {i: i * 10 for i in range(50)}
-    # layout really uses the new modulus
-    df = spark.read.parquet(target)
-    mism = df.filter(
-        F.col("__bucket__")
-        != F.pmod(F.xxhash64(F.col("k")), F.lit(16)).cast("int")
-    )
-    assert mism.count() == 0
-    # lock released; merge at the new granularity works
-    assert not os.path.exists(U._lock_path(target))
-    updates = spark.createDataFrame([(3, 999)], "k long, v long")
-    U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")})
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got[3] == 999 and got[4] == 40
-
-
-def test_rebucket_crash_between_renames_is_recoverable(spark, tmp_path):
-    """If the process dies after parking the old layout but before the
-    new one lands, a plain reader restores the parked layout — no data
-    loss, no missing table."""
-    import os
-    import shutil
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-
-    # simulate the crash window: old parked, target gone, tmp half-baked
-    old = target + ".__merge_old__"
-    os.rename(target, old)
-    os.makedirs(target + ".__merge_tmp__", exist_ok=True)
-
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {1: 10, 2: 20}
-    assert not os.path.exists(old)
-    # the stale tmp is swept by the next merge/rebucket, not by readers
-    U.rebucket_merge_table(spark, target, "k", n_buckets=8)
-    assert U._bucketed_n(target) == 8
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {1: 10, 2: 20}
-
-
-def test_rebucket_rejects_unbucketed_and_concurrent_writer(spark, tmp_path):
-    import json
-    import os
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    plain = str(tmp_path / "plain")
-    spark.createDataFrame([(1, 1)], "k long, v long").write.parquet(plain)
-    with _pytest.raises(ValueError, match="not a bucketed merge table"):
-        U.rebucket_merge_table(spark, plain, "k", 8)
-
-    target = str(tmp_path / "t")
-    U.create_bucketed_table(
-        spark, target,
-        spark.createDataFrame([(1, 1)], "k long, v long"), "k", n_buckets=2,
-    )
-    with open(U._lock_path(target), "w") as fh:
-        json.dump({"pid": os.getppid(), "host": "test"}, fh)
-    with _pytest.raises(U.ConcurrentMergeError):
-        U.rebucket_merge_table(spark, target, "k", 8)
-    os.remove(U._lock_path(target))
-
-
-def test_rebucket_retries_after_crash_past_second_rename(spark, tmp_path):
-    """ADVICE r6: a prior rewrite that died AFTER the second rename but
-    BEFORE rmtree(old) leaves a stale non-empty .__merge_old__ next to a
-    LIVE target. Recovery never touches it (target exists), so without
-    the pre-swap sweep every rebucket retry would die on
-    os.rename(target, old) → ENOTEMPTY."""
-    import os
-    import shutil
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i * 7) for i in range(20)], "k long, v long"
-    )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-
-    # simulate: old generation parked and orphaned while the target lives
-    old = target + ".__merge_old__"
-    shutil.copytree(target, old)
-
-    U.rebucket_merge_table(spark, target, "k", n_buckets=8)
-    assert U._bucketed_n(target) == 8
-    assert not os.path.exists(old)
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {i: i * 7 for i in range(20)}
-
-
-def test_reclaimed_lock_is_held_through_reader_recovery(spark, tmp_path):
-    """ADVICE r6: reclaim + recover must be atomic w.r.t. new writers —
-    while a reader is recovering a dead owner's crash state it must HOLD
-    the writer lock, so a writer starting in that window fails loudly
-    instead of writing pending state the reader would roll back."""
-    import json
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
-
-    # dead-owner lock + an uncommitted pending intent (crash mid-merge)
-    with open(U._lock_path(target), "w") as fh:
-        json.dump({"pid": 2**22 + 12345, "host": "test"}, fh)
-    with open(os.path.join(target, U._PENDING_FILE), "w") as fh:
-        json.dump({"merge_id": "dead", "swaps": []}, fh)
-
-    observed = {}
-    real_recover = U._recover_unlocked
-
-    def spying_recover(td):
-        # the lock file must exist and name THIS pid while recovery runs
-        observed["lock_exists"] = os.path.exists(U._lock_path(td))
-        if observed["lock_exists"]:
-            with open(U._lock_path(td)) as fh:
-                observed["owner"] = json.load(fh)["pid"]
-        return real_recover(td)
-
-    U._recover_unlocked = spying_recover
-    try:
-        U.recover_merge_table(target)
-    finally:
-        U._recover_unlocked = real_recover
-
-    assert observed["lock_exists"], "recovery ran without holding the lock"
-    assert observed["owner"] == os.getpid()
-    # and the lock is released afterwards; pending state was cleaned
-    assert not os.path.exists(U._lock_path(target))
-    assert not os.path.exists(os.path.join(target, U._PENDING_FILE))
-
-
-def test_no_lock_reader_recovery_also_holds_the_lock(spark, tmp_path):
-    """ADVICE r7: the atomic reclaim+recover discipline must cover the
-    NO-LOCK branch too — when no lock file exists at the check, a writer
-    could acquire the lock and write _merge_pending before the reader's
-    _recover_unlocked runs, and the unlocked reader would roll back that
-    live merge. So a default-args reader must win the O_EXCL create and
-    hold the lock through recovery even when no lock existed."""
-    import json
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
-    assert not os.path.exists(U._lock_path(target))  # the no-lock branch
-
-    observed = {}
-    real_recover = U._recover_unlocked
-
-    def spying_recover(td):
-        observed["lock_exists"] = os.path.exists(U._lock_path(td))
-        if observed["lock_exists"]:
-            with open(U._lock_path(td)) as fh:
-                observed["owner"] = json.load(fh)["pid"]
-        return real_recover(td)
-
-    U._recover_unlocked = spying_recover
-    try:
-        U.recover_merge_table(target)
-    finally:
-        U._recover_unlocked = real_recover
-
-    assert observed["lock_exists"], "no-lock recovery ran without the lock"
-    assert observed["owner"] == os.getpid()
-    assert not os.path.exists(U._lock_path(target))  # released afterwards
-
-    # a writer arriving while a reader's transient recovery-hold is live
-    # WAITS it out rather than raising ConcurrentMergeError: simulate the
-    # hold with this process's pid + the recovery tag, release it from a
-    # timer thread, and assert the merge succeeds.
-    import threading
-
-    from pyspark.sql import functions as F
-
-    with open(U._lock_path(target), "w") as fh:
-        json.dump(
-            {"pid": os.getpid(), "host": "test", "recovery": True}, fh
-        )
-    releaser = threading.Timer(
-        0.3, lambda: os.remove(U._lock_path(target))
-    )
-    releaser.start()
-    try:
-        U.merge_into_parquet(
-            spark, target,
-            spark.createDataFrame([(1, 99)], "k long, v long"),
-            "k", {"v": F.col("u.v")},
-        )
-    finally:
-        releaser.cancel()
-    got = {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-    assert got == {1: 99, 2: 20}
-
-
-def test_vacuum_floor_is_monotone(spark, tmp_path):
-    """ADVICE r7: a later vacuum with a LARGER keep_last computes a
-    smaller cutoff; writing that smaller floor would re-advertise
-    versions whose archives the earlier vacuum already deleted, turning
-    read_merge_table_asof into an internal 'was vacuumed' error instead
-    of the version-not-readable error. The recorded floor never moves
-    backward."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i) for i in range(10)], "k long, v long"
-    )
-    U.create_bucketed_table(
-        spark, target, base, "k", n_buckets=2, keep_history=True
-    )
-    for n in range(4):
-        U.merge_into_parquet(
-            spark, target,
-            spark.createDataFrame([(1, 100 + n)], "k long, v long"),
-            "k", {"v": F.col("u.v")},
-        )
-    assert U.history_versions(target) == [0, 1, 2, 3, 4]
-    # aggressive vacuum first: floor rises to 3
-    assert U.vacuum_merge_history(target, keep_last=1) == [1, 2, 3]
-    assert U.history_versions(target) == [3, 4]
-    # then a LAXER vacuum (keep_last=3 → cutoff 1 < floor 3): must not
-    # lower the floor — versions 1..2 are physically gone
-    assert U.vacuum_merge_history(target, keep_last=3) == []
-    assert U.history_versions(target) == [3, 4]
-    # and the gone versions fail with the version-not-readable error,
-    # not the internal vacuumed-archive error
-    with _pytest.raises(ValueError, match="not readable"):
-        U.read_merge_table_asof(spark, target, 2)
-    got = {r.k: r.v for r in U.read_merge_table_asof(spark, target, 3).collect()}
-    assert got[1] == 102
-
-
-def _snap(spark, U, target):
-    return {r.k: r.v for r in U.read_merge_table(spark, target).collect()}
-
-
+# ---------------------------------------------------------------------------
+# History: time travel, change feed, retention
+# ---------------------------------------------------------------------------
 def test_history_asof_reconstructs_every_version(spark, tmp_path):
-    """Time travel (r7): with keep_history, each committed merge archives
-    the replaced buckets as an undo log; read_merge_table_asof(v) must
-    reproduce the exact table state after commit v, for every v,
-    including buckets first CREATED by a later merge (absent in earlier
-    versions)."""
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+    """read_merge_table_asof(v) reproduces the exact table state after
+    commit v, for every v, including keys first INSERTED by a later
+    merge (absent in earlier versions)."""
     target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i * 10) for i in range(20)], "k long, v long"
-    )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4, keep_history=True)
-    snapshots = {0: _snap(spark, U, target)}
+    base = spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long")
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
+    snapshots = {0: _snap(spark, target)}
 
     batches = [
         [(3, 333)],                 # update one bucket
@@ -989,133 +478,91 @@ def test_history_asof_reconstructs_every_version(spark, tmp_path):
         U.merge_into_parquet(
             spark, target, upd, "k", {"v": F.col("u.v")}, insert_missing=True
         )
-        snapshots[n] = _snap(spark, U, target)
+        snapshots[n] = _snap(spark, target)
 
     assert U.history_versions(target) == [0, 1, 2, 3]
     for v, expected in snapshots.items():
-        got = {
-            r.k: r.v
-            for r in U.read_merge_table_asof(spark, target, v).collect()
-        }
+        got = {r.k: r.v for r in U.read_merge_table_asof(spark, target, v).collect()}
         assert got == expected, f"version {v}"
-    # version 3 == current read; key 100 absent before version 2
     assert 100 not in snapshots[1] and snapshots[2][100] == 1000
-    # out-of-range versions fail loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not readable"):
+    with pytest.raises(ValueError, match="not readable"):
         U.read_merge_table_asof(spark, target, 4)
 
 
-def test_history_archive_is_crash_safe_and_exactly_once(spark, tmp_path):
-    """Kill the merge AFTER its commit point but BEFORE cleanup: the
-    archive must land exactly once through reader recovery — the commit
-    log gains ONE entry, the replaced bucket's pre-merge copy is in
-    _versions, and every as-of version still reconstructs."""
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+def test_history_archive_is_crash_safe_and_exactly_once(spark, tmp_path, monkeypatch):
+    """A merge that dies right after its commit adds exactly ONE version
+    to the history; every version still reconstructs and the next merge
+    takes the next version number."""
     target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i * 10) for i in range(20)], "k long, v long"
+    base = spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long")
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
+    v0 = _snap(spark, target)
+
+    def die(*_a, **_k):
+        raise Boom("simulated crash after the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(DL, "_maybe_checkpoint", die)
+        with pytest.raises(Boom):
+            U.merge_into_parquet(
+                spark, target, spark.createDataFrame([(5, 55)], "k long, v long"),
+                "k", {"v": F.col("u.v")},
+            )
+    v1 = _snap(spark, target)
+    assert U.history_versions(target) == [0, 1] and v1[5] == 55
+    U.merge_into_parquet(
+        spark, target, spark.createDataFrame([(5, 56)], "k long, v long"),
+        "k", {"v": F.col("u.v")},
     )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4, keep_history=True)
-    v0 = _snap(spark, U, target)
-    U.merge_into_parquet(spark, target, spark.createDataFrame([(5, 55)], "k long, v long"),
-                         "k", {"v": F.col("u.v")})
-    v1 = _snap(spark, U, target)
-
-    # crash injection: die right after the LAST bucket swap — commit
-    # manifest not yet written? We need post-commit: inject via a swap
-    # hook that lets the swap finish, then simulate death before
-    # cleanup by doing the swap + commit manually.
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    # hand-run a merge's swap+commit then "die": bucket of key 5
-    b = spark.createDataFrame([(5,)], "k long").select(
-        U._bucket_of(F.col("k"), 4).alias("b")
-    ).collect()[0].b
-    live = _os.path.join(target, f"__bucket__={b}")
-    import shutil as _shutil
-
-    _shutil.copytree(live, live + ".__new__")
-    manifest = {
-        "merge_id": _uuid.uuid4().hex,
-        "swaps": [{"bucket": int(b), "had_prev": True}],
-        "extra_files": {},
-    }
-    U._install_root_files(target, {U._PENDING_FILE: _json.dumps(manifest)})
-    _os.rename(live, live + ".__old__")
-    _os.rename(live + ".__new__", live)
-    U._install_root_files(target, {U._COMMIT_FILE: _json.dumps(manifest)})
-    # process "dies" here: pending present, commit present, .__old__ left
-
-    # a plain reader triggers roll-forward: archive + log, exactly once
-    got = _snap(spark, U, target)
-    assert got == v1  # content unchanged (we swapped in an identical copy)
-    log = U._read_commit_log(target)
-    assert [e["seq"] for e in log] == [1, 2]
-    assert log[-1]["merge_id"] == manifest["merge_id"]
-    assert _os.path.isdir(
-        _os.path.join(target, "_versions", "2", f"__bucket__={b}")
-    )
-    assert not _os.path.exists(live + ".__old__")
-    # a second recovery pass is a no-op (idempotent)
-    U.recover_merge_table(target)
-    assert [e["seq"] for e in U._read_commit_log(target)] == [1, 2]
-    # and both historical versions still reconstruct
+    assert U.history_versions(target) == [0, 1, 2]
     got0 = {r.k: r.v for r in U.read_merge_table_asof(spark, target, 0).collect()}
     got1 = {r.k: r.v for r in U.read_merge_table_asof(spark, target, 1).collect()}
     assert got0 == v0 and got1 == v1
 
 
-def test_history_vacuum_truncates_and_rebucket_refuses(spark, tmp_path):
-    from pyspark.sql import functions as F
-    import pytest as _pytest
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+def test_vacuum_floor_is_monotone(spark, tmp_path):
+    """vacuum_merge_history checkpoints at the floor and drops the
+    commits below it, so a later vacuum with a LARGER keep_last cannot
+    lower the floor (the versions below it are physically gone), reads
+    below the floor fail with the version-not-readable error, and the
+    only data files left are those versions at or above the floor use."""
     target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i) for i in range(10)], "k long, v long"
-    )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=2, keep_history=True)
-    for n in range(3):
+    base = spark.createDataFrame([(i, i) for i in range(10)], "k long, v long")
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
+    for n in range(4):
         U.merge_into_parquet(
             spark, target,
             spark.createDataFrame([(1, 100 + n)], "k long, v long"),
             "k", {"v": F.col("u.v")},
         )
-    assert U.history_versions(target) == [0, 1, 2, 3]
-    removed = U.vacuum_merge_history(target, keep_last=1)
-    assert removed == [1, 2]
-    assert U.history_versions(target) == [2, 3]
-    with _pytest.raises(ValueError, match="not readable"):
-        U.read_merge_table_asof(spark, target, 0)
-    # still-retained versions read fine
-    got = {r.k: r.v for r in U.read_merge_table_asof(spark, target, 2).collect()}
-    assert got[1] == 101
-    with _pytest.raises(ValueError, match="keeps merge history"):
-        U.rebucket_merge_table(spark, target, "k", 8)
+    assert U.history_versions(target) == [0, 1, 2, 3, 4]
+    # aggressive vacuum first: floor rises to 3
+    assert U.vacuum_merge_history(spark, target, keep_last=1) == [0, 1, 2]
+    assert U.history_versions(target) == [3, 4]
+    # then a LAXER vacuum (keep_last=3 → cutoff 1 < floor 3): no-op
+    assert U.vacuum_merge_history(spark, target, keep_last=3) == []
+    assert U.history_versions(target) == [3, 4]
+    with pytest.raises(ValueError, match="not readable"):
+        U.read_merge_table_asof(spark, target, 2)
+    got = {r.k: r.v for r in U.read_merge_table_asof(spark, target, 3).collect()}
+    assert got[1] == 102
+    assert _snap(spark, target)[1] == 103
+    used = {
+        DL._decode_path(p)
+        for v in (3, 4)
+        for p in DL.replay_state(spark, target, v).files
+    }
+    assert _parquet_on_disk(target) == used
 
 
-def test_change_feed_detects_update_and_insert_delta_sized(spark, tmp_path):
+def test_change_feed_detects_update_and_insert_delta_sized(spark, tmp_path, monkeypatch):
     """merge_table_changes: between two versions it must emit exactly
     the changed keys — updates with both images, inserts with a null
-    old image — and nothing for untouched keys, reading only touched
-    buckets."""
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+    old image — and nothing for untouched keys, reading only the buckets
+    the intervening commits touched."""
     target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i * 10) for i in range(20)], "k long, v long"
-    )
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4, keep_history=True)
+    base = spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long")
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
     U.merge_into_parquet(
         spark, target,
         spark.createDataFrame([(3, 333)], "k long, v long"),
@@ -1127,10 +574,23 @@ def test_change_feed_detects_update_and_insert_delta_sized(spark, tmp_path):
         "k", {"v": F.col("u.v")}, insert_missing=True,
     )
 
+    filters = []
+    real_read = U.read_delta_table
+
+    def spy(*args, **kwargs):
+        filters.append(kwargs.get("partition_filter"))
+        return real_read(*args, **kwargs)
+
+    monkeypatch.setattr(U, "read_delta_table", spy)
     feed = {
         r.k: (r.change_type, r.old, r.new)
         for r in U.merge_table_changes(spark, target, 1, 2, "k").collect()
     }
+    touched = {str(b) for b in _buckets_of(spark, [3, 100], 4)}
+    assert filters and all(set(f["__bucket__"]) == touched for f in filters)
+    assert len(touched) < 4
+    monkeypatch.setattr(U, "read_delta_table", real_read)
+
     assert set(feed) == {3, 100}
     ct, old, new = feed[3]
     assert ct == "update" and old.v == 333 and new.v == 3333
@@ -1143,10 +603,7 @@ def test_change_feed_detects_update_and_insert_delta_sized(spark, tmp_path):
         for r in U.merge_table_changes(spark, target, 0, 2, "k").collect()
     }
     assert feed0[3][1].v == 30 and feed0[3][2].v == 3333
-    # validation
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="from_version < to_version"):
+    with pytest.raises(ValueError, match="from_version < to_version"):
         U.merge_table_changes(spark, target, 2, 1, "k")
 
 
@@ -1154,13 +611,10 @@ def test_streaming_upserter_with_history_gives_per_batch_time_travel(
     spark, tmp_path, sf_dir
 ):
     """Integration: the SHIPPED streaming pair-perf upserter
-    (foreachBatch MERGE, exactly-once marker) over a HISTORY-ENABLED
-    table yields one committed version per non-empty micro-batch, and
-    read_merge_table_asof(k) equals the batch recompute over the first
-    k chunks — continuous aggregate + time travel composed."""
-    from pyspark.sql import functions as F
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
+    (foreachBatch MERGE, exactly-once txn) yields one committed version
+    per non-empty micro-batch, and read_merge_table_asof(k) equals the
+    batch recompute over the first k chunks — continuous aggregate +
+    time travel composed."""
     from financial_arbitrage_data_pipeline_spark.operators.streaming_queries import (
         make_pair_perf_upserter,
     )
@@ -1170,18 +624,6 @@ def test_streaming_upserter_with_history_gives_per_batch_time_travel(
     n_chunks = 3
     ingest.write_replay_chunks(spark, sf_dir, replay_dir, n_chunks=n_chunks)
     table = str(tmp_path / "pair_perf")
-    # pre-create WITH history; the upserter keeps an existing table
-    U.create_bucketed_table(
-        spark,
-        table,
-        spark.createDataFrame(
-            [],
-            "pair_id long, total_trades long, total_volume long,"
-            " total_cost_cents long",
-        ),
-        key="pair_id",
-        keep_history=True,
-    )
     q = (
         ingest.replay_stream(spark, replay_dir)
         .writeStream.foreachBatch(make_pair_perf_upserter(spark, table))
@@ -1233,146 +675,111 @@ def test_streaming_upserter_with_history_gives_per_batch_time_travel(
     assert {r.pair_id for r in feed.collect()} == set(later)
 
 
-def test_applied_batch_id_rechecked_under_the_merge_lock(spark, tmp_path):
-    """ADVICE r8: the redelivered-batch check must be atomic with the
-    merge. merge_into_parquet(applied_batch_id=N) re-reads the marker
-    AFTER the lock is held and no-ops if another driver already applied
-    batch >= N — so a zombie driver can't double-count an additive batch
-    a failover driver merged between the caller's pre-check and the
-    merge."""
-    import os
+def test_asof_vacuum_merge_triangle_fuzz(spark, tmp_path):
+    """VERDICT r9 task 7: property-fuzz the reader/vacuum/merge
+    interleavings. A reader holding an as-of plan while merges advance
+    the head and vacuums delete older versions' files must FAIL LOUDLY
+    or return exactly the version's content — never a mix of versions."""
+    import random
 
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
+    from py4j.protocol import Py4JJavaError
 
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, 10)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-    updates = spark.createDataFrame([(1, 5)], "k long, dv long")
+    def build(tag):
+        target = str(tmp_path / f"t_{tag}")
+        base = spark.createDataFrame([(i, 0) for i in range(24)], "k long, v long")
+        U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
+        for ver in (1, 2, 3):
+            advance(target, ver, step=ver)
+        return target
 
-    # simulate the failover driver having merged batch 7 already
-    with open(os.path.join(target, "_last_applied_batch"), "w") as fh:
-        fh.write("7")
+    def advance(target, ver, step=2):
+        U.merge_into_parquet(
+            spark,
+            target,
+            spark.createDataFrame(
+                [(i, ver * 100 + i) for i in range(0, 24, step)], "k long, dv long"
+            ),
+            key="k",
+            set_exprs={"v": F.col("u.dv")},
+        )
 
-    add = {"v": F.col("t.v") + F.col("u.dv")}
-    # zombie replaying batch 7 (or anything older): must be a no-op
-    U.merge_into_parquet(
-        spark, target, updates, "k", add,
-        extra_files={"_last_applied_batch": "7"}, applied_batch_id=7,
-    )
-    assert {r.k: r.v for r in U.read_merge_table(spark, target).collect()} == {1: 10}
-    # and the lock must have been released by the no-op path
-    assert not os.path.exists(U._lock_path(target))
-
-    # a genuinely new batch applies and advances the marker
-    U.merge_into_parquet(
-        spark, target, updates, "k", add,
-        extra_files={"_last_applied_batch": "8"}, applied_batch_id=8,
-    )
-    assert {r.k: r.v for r in U.read_merge_table(spark, target).collect()} == {1: 15}
-    with open(os.path.join(target, "_last_applied_batch")) as fh:
-        assert fh.read().strip() == "8"
-
-
-def test_recovery_holder_detection_parses_lock_json(spark, tmp_path):
-    """ADVICE r8: a holder whose host string merely CONTAINS the token
-    '"recovery"' is not a recovery holder — the writer must raise
-    immediately (real conflict), not wait out the 5 s recovery grace.
-    Unparseable lock content keeps the conservative immediate-raise."""
-    import json
-    import os
-    import time as _time
-
-    import pytest as _pytest
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, 10)], "k long, v long")
-    U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
-    updates = spark.createDataFrame([(1, 11)], "k long, v long")
-
-    for content in (
-        json.dumps({"pid": os.getppid(), "host": 'x "recovery" y'}),
-        '{"pid": 1, "host": "partial-flu',  # truncated mid-write
-    ):
-        with open(U._lock_path(target), "w") as fh:
-            fh.write(content)
-        t0 = _time.monotonic()
-        with _pytest.raises(U.ConcurrentMergeError):
-            U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")})
-        assert _time.monotonic() - t0 < 2.0  # no recovery-grace spin
-        os.remove(U._lock_path(target))
+    rnd = random.Random(9)
+    loud = consistent = 0
+    for trial in range(6):
+        target = build(trial)
+        expected = {
+            r.k: r.v for r in U.read_merge_table_asof(spark, target, 2).collect()
+        }
+        df = U.read_merge_table_asof(spark, target, 2)
+        actions = []
+        next_ver = 4
+        for _ in range(2):  # mutate AFTER the plan exists, before the action
+            a = rnd.choice(["merge", "vacuum", "none"])
+            actions.append(a)
+            if a == "merge":
+                advance(target, next_ver)
+                next_ver += 1
+            elif a == "vacuum":
+                U.vacuum_merge_history(spark, target, keep_last=0)
+        try:
+            got = {r.k: r.v for r in df.collect()}
+        except (Py4JJavaError, Exception) as exc:  # noqa: BLE001
+            msg = str(exc)
+            assert (
+                "FileNotFound" in msg
+                or "does not exist" in msg
+                or "PATH_NOT_FOUND" in msg
+                or "FILE_NOT_EXIST" in msg.upper()
+            ), msg[:500]
+            loud += 1
+            continue
+        assert got == expected, (
+            f"trial {trial} actions {actions}: MIXED VERSIONS "
+            f"(diff keys: { {k for k in got if got[k] != expected.get(k)} })"
+        )
+        consistent += 1
+    # the fuzz must have exercised both legal outcomes across trials
+    assert loud + consistent == 6
+    assert consistent >= 1 and loud >= 1
 
 
-def test_schema_evolution_widens_without_rewriting_untouched_buckets(
-    spark, tmp_path
-):
+# ---------------------------------------------------------------------------
+# Schema evolution
+# ---------------------------------------------------------------------------
+def test_schema_evolution_widens_without_rewriting_untouched_buckets(spark, tmp_path):
     """VERDICT r9 task 6: an evolving merge adds the source's new column
     to the table — matched rows take the value, untouched rows read
     null — while untouched buckets keep their pre-evolution files
     byte-identical (the widening is metadata + touched buckets only)."""
-    import os
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
     target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i * 10) for i in range(40)], "k long, v long"
-    )
+    base = spark.createDataFrame([(i, i * 10) for i in range(40)], "k long, v long")
     U.create_bucketed_table(spark, target, base, "k", n_buckets=8)
 
-    # snapshot per-bucket file bytes before evolving
     def bucket_files():
         out = {}
         for e in os.listdir(target):
-            if e.startswith("__bucket__=") and not e.endswith(".__old__"):
+            if e.startswith("__bucket__="):
                 d = os.path.join(target, e)
-                out[e] = {
-                    f: os.path.getmtime(os.path.join(d, f))
-                    for f in os.listdir(d)
-                }
+                out[e] = {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
         return out
 
     before = bucket_files()
-
     updates = spark.createDataFrame(
         [(3, 99, "alpha"), (17, 77, "beta")], "k long, v long, tag string"
     )
     U.merge_into_parquet(
-        spark,
-        target,
-        updates,
-        key="k",
-        set_exprs={"v": F.col("u.v")},
-        evolve_schema=True,
+        spark, target, updates, key="k", set_exprs={"v": F.col("u.v")}, evolve_schema=True
     )
-    got = {
-        r.k: (r.v, r.tag)
-        for r in U.read_merge_table(spark, target).collect()
-    }
+    got = {r.k: (r.v, r.tag) for r in U.read_merge_table(spark, target).collect()}
     assert got[3] == (99, "alpha") and got[17] == (77, "beta")
-    # every untouched row reads the new column as null
-    assert all(
-        tag is None for k, (v, tag) in got.items() if k not in (3, 17)
-    )
+    assert all(tag is None for k, (v, tag) in got.items() if k not in (3, 17))
     assert len(got) == 40
 
-    # untouched buckets: identical file sets, untouched mtimes
     after = bucket_files()
-    from financial_arbitrage_data_pipeline_spark.operators.upsert import (
-        _bucket_of,
-    )
-
-    touched = {
-        r[0]
-        for r in spark.createDataFrame([(3,), (17,)], "k long")
-        .select(_bucket_of(F.col("k"), 8))
-        .collect()
-    }
+    touched = _buckets_of(spark, [3, 17], 8)
     untouched_same = 0
     for name, files in before.items():
-        b = int(name.split("=")[1])
-        if b in touched:
+        if int(name.split("=")[1]) in touched:
             continue
         assert after[name] == files, name
         untouched_same += 1
@@ -1380,46 +787,27 @@ def test_schema_evolution_widens_without_rewriting_untouched_buckets(
 
     # a second NON-evolving merge still works on the widened table
     U.merge_into_parquet(
-        spark,
-        target,
-        spark.createDataFrame([(3, 1)], "k long, dv long"),
-        key="k",
-        set_exprs={"v": F.col("t.v") + F.col("u.dv")},
+        spark, target, spark.createDataFrame([(3, 1)], "k long, dv long"),
+        key="k", set_exprs={"v": F.col("t.v") + F.col("u.dv")},
     )
-    got2 = {
-        r.k: (r.v, r.tag)
-        for r in U.read_merge_table(spark, target).collect()
-    }
+    got2 = {r.k: (r.v, r.tag) for r in U.read_merge_table(spark, target).collect()}
     assert got2[3] == (100, "alpha")  # evolved column survives
 
 
 def test_schema_evolution_time_travel_reads_old_schema(spark, tmp_path):
     """A pre-evolution version's as-of read presents the OLD schema (its
-    file set contains only pre-evolution files); post-evolution versions
-    read widened with nulls."""
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+    metaData predates the widening); post-evolution versions read
+    widened with nulls."""
     target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(i, i) for i in range(20)], "k long, v long"
-    )
-    U.create_bucketed_table(
-        spark, target, base, "k", n_buckets=4, keep_history=True
-    )
+    base = spark.createDataFrame([(i, i) for i in range(20)], "k long, v long")
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
     U.merge_into_parquet(
-        spark,
-        target,
-        spark.createDataFrame([(1, 100)], "k long, v long"),
-        key="k",
-        set_exprs={"v": F.col("u.v")},
+        spark, target, spark.createDataFrame([(1, 100)], "k long, v long"),
+        key="k", set_exprs={"v": F.col("u.v")},
     )  # version 1, old schema
     U.merge_into_parquet(
-        spark,
-        target,
-        spark.createDataFrame([(2, 200, "x")], "k long, v long, tag string"),
-        key="k",
-        set_exprs={"v": F.col("u.v")},
-        evolve_schema=True,
+        spark, target, spark.createDataFrame([(2, 200, "x")], "k long, v long, tag string"),
+        key="k", set_exprs={"v": F.col("u.v")}, evolve_schema=True,
     )  # version 2, widened
 
     v1 = U.read_merge_table_asof(spark, target, 1)
@@ -1433,172 +821,33 @@ def test_schema_evolution_time_travel_reads_old_schema(spark, tmp_path):
     assert rows[1] == (100, None)
 
 
-def test_schema_evolution_crash_rolls_forward_with_marker(spark, tmp_path):
-    """The evolving merge rides the unchanged manifest protocol: a crash
-    after the commit point rolls FORWARD — including the evolution
-    marker, which lives in the manifest's extra_files — so a recovered
-    table reads widened."""
-    import os
-
-    import pytest as _pytest
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+def test_schema_evolution_crash_rolls_forward_with_marker(spark, tmp_path, monkeypatch):
+    """The evolving merge rides the same single commit: a crash before it
+    lands leaves the old schema and data untouched, and a clean retry
+    widens the table exactly once."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(i, i) for i in range(20)], "k long, v long")
     U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
+    updates = spark.createDataFrame([(1, 11, "a"), (2, 22, "b")], "k long, v long, tag string")
 
-    updates = spark.createDataFrame(
-        [(1, 11, "a"), (2, 22, "b")], "k long, v long, tag string"
-    )
+    def die(*_a, **_k):
+        raise Boom("simulated crash before the commit")
 
-    # crash INSIDE the swap loop, after the last touched bucket swap but
-    # before cleanup: the commit manifest may or may not have landed; use
-    # the post-swap hook to die after the final swap (commit point not
-    # yet reached -> rollback; then a clean retry applies exactly once)
-    n_touched = (
-        updates.select(U._bucket_of(F.col("k"), 4)).distinct().count()
-    )
-    seen = []
-
-    def die_after_last(bucket):
-        seen.append(bucket)
-        if len(seen) == n_touched:
-            raise RuntimeError("injected crash after last swap")
-
-    U._post_swap_hook = die_after_last
-    try:
-        with _pytest.raises(RuntimeError, match="injected crash"):
+    with monkeypatch.context() as m:
+        m.setattr(DL, "_write_commit", die)
+        with pytest.raises(Boom):
             U.merge_into_parquet(
-                spark, target, updates, "k",
-                {"v": F.col("u.v")}, evolve_schema=True,
+                spark, target, updates, "k", {"v": F.col("u.v")}, evolve_schema=True
             )
-    finally:
-        U._post_swap_hook = None
-    U.recover_merge_table(target, break_lock=True)
-    # pre-commit crash: rolled back — no marker, old schema intact
-    assert not U._evolved(target)
     assert "tag" not in U.read_merge_table(spark, target).columns
+    assert _snap(spark, target)[1] == 1
 
-    # clean retry lands the evolution exactly once
-    U.merge_into_parquet(
-        spark, target, updates, "k", {"v": F.col("u.v")}, evolve_schema=True
-    )
-    assert U._evolved(target)
-    assert sorted(U._evolved_cols(target)) == ["tag"]
+    U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")}, evolve_schema=True)
+    metas = [a for a in DL._read_commit_actions(target, 1) if "metaData" in a]
+    assert len(metas) == 1
     got = {r.k: (r.v, r.tag) for r in U.read_merge_table(spark, target).collect()}
     assert got[1] == (11, "a") and got[2] == (22, "b")
     assert got[5] == (5, None)
-
-
-def _evo_expected(spark, target, version):
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    return {
-        r.k: r.v for r in U.read_merge_table_asof(spark, target, version).collect()
-    }
-
-
-def test_asof_vacuum_merge_triangle_fuzz(spark, tmp_path):
-    """VERDICT r9 task 7: property-fuzz the reader/vacuum/merge
-    interleavings. A reader holding an as-of plan while a vacuum deletes
-    that version's archives and a merge advances head must FAIL LOUDLY
-    or return exactly the version's content — never a mix of versions.
-    The test seam injects the race at the exact point between the
-    reader's commit-log read and its path resolution; post-construction
-    races are exercised by mutating after the plan exists."""
-    import random
-
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
-    def build(tag):
-        target = str(tmp_path / f"t_{tag}")
-        base = spark.createDataFrame(
-            [(i, 0) for i in range(24)], "k long, v long"
-        )
-        U.create_bucketed_table(
-            spark, target, base, "k", n_buckets=4, keep_history=True
-        )
-        for ver in (1, 2, 3):
-            U.merge_into_parquet(
-                spark,
-                target,
-                spark.createDataFrame(
-                    [(i, ver * 100 + i) for i in range(0, 24, ver)],
-                    "k long, dv long",
-                ),
-                key="k",
-                set_exprs={"v": F.col("u.dv")},
-            )
-        return target
-
-    def advance(target, ver):
-        U.merge_into_parquet(
-            spark,
-            target,
-            spark.createDataFrame(
-                [(i, ver * 100 + i) for i in range(0, 24, 2)], "k long, dv long"
-            ),
-            key="k",
-            set_exprs={"v": F.col("u.dv")},
-        )
-
-    rnd = random.Random(9)
-    loud = consistent = 0
-    for trial in range(6):
-        target = build(trial)
-        expected = _evo_expected(spark, target, 2)
-        next_ver = [4]
-
-        actions = []
-
-        def racy_action():
-            a = rnd.choice(["merge", "vacuum", "none"])
-            actions.append(a)
-            if a == "merge":
-                advance(target, next_ver[0])
-                next_ver[0] += 1
-            elif a == "vacuum":
-                U.vacuum_merge_history(target, keep_last=1)
-
-        # race 1: inject between the reader's log read and resolution
-        U._asof_resolve_hook = racy_action
-        try:
-            try:
-                df = U.read_merge_table_asof(spark, target, 2)
-            except (ValueError, U.ConcurrentMergeError):
-                loud += 1  # vacuumed archive / unstable log: loud is legal
-                continue
-            finally:
-                U._asof_resolve_hook = None
-            # race 2: mutate AFTER the plan exists, before the action
-            racy_action()
-            racy_action()
-            try:
-                got = {r.k: r.v for r in df.collect()}
-            except (Py4JJavaError, Exception) as exc:  # noqa: BLE001
-                msg = str(exc)
-                assert (
-                    "FileNotFound" in msg
-                    or "does not exist" in msg
-                    or "PATH_NOT_FOUND" in msg
-                    or "FILE_NOT_EXIST" in msg.upper()
-                ), msg[:500]
-                loud += 1
-                continue
-            assert got == expected, (
-                f"trial {trial} actions {actions}: MIXED VERSIONS "
-                f"(diff keys: { {k for k in got if got[k] != expected.get(k)} })"
-            )
-            consistent += 1
-        finally:
-            U._asof_resolve_hook = None
-    # the fuzz must have exercised both legal outcomes across trials
-    assert loud + consistent == 6
-    assert consistent >= 1
 
 
 def test_change_feed_across_schema_evolution_boundary(spark, tmp_path):
@@ -1606,26 +855,19 @@ def test_change_feed_across_schema_evolution_boundary(spark, tmp_path):
     conforms with typed nulls, so a touched row reads as an 'update'
     whose old image has tag=null and whose new image carries the
     value."""
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(i, i) for i in range(12)], "k long, v long")
-    U.create_bucketed_table(
-        spark, target, base, "k", n_buckets=4, keep_history=True
-    )
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
     U.merge_into_parquet(
-        spark, target,
-        spark.createDataFrame([(1, 100)], "k long, v long"),
+        spark, target, spark.createDataFrame([(1, 100)], "k long, v long"),
         key="k", set_exprs={"v": F.col("u.v")},
     )  # v1
     U.merge_into_parquet(
-        spark, target,
-        spark.createDataFrame([(2, 200, "x")], "k long, v long, tag string"),
+        spark, target, spark.createDataFrame([(2, 200, "x")], "k long, v long, tag string"),
         key="k", set_exprs={"v": F.col("u.v")}, evolve_schema=True,
     )  # v2, widened
 
-    feed = U.merge_table_changes(spark, target, 1, 2, key="k").collect()
-    rows = {r.k: r for r in feed}
+    rows = {r.k: r for r in U.merge_table_changes(spark, target, 1, 2, key="k").collect()}
     assert set(rows) == {2}
     r = rows[2]
     assert r.change_type == "update"
@@ -1634,17 +876,13 @@ def test_change_feed_across_schema_evolution_boundary(spark, tmp_path):
 
 
 def test_evolve_cols_allowlist_keeps_helpers_join_side(spark, tmp_path):
-    """ADVICE r9: with evolve_cols, updates columns that exist only as
-    set_exprs helpers (here `dv`) are NOT persisted into the table
-    schema — only the allowlisted column widens."""
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+    """With evolve_cols, updates columns that exist only as set_exprs
+    helpers (here `dv`) are NOT persisted into the table schema — only
+    the allowlisted column widens."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(i, i) for i in range(10)], "k long, v long")
     U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
-    updates = spark.createDataFrame(
-        [(3, 5, "kalshi")], "k long, dv long, venue string"
-    )
+    updates = spark.createDataFrame([(3, 5, "kalshi")], "k long, dv long, venue string")
     U.merge_into_parquet(
         spark, target, updates, key="k",
         set_exprs={"v": F.col("t.v") + F.col("u.dv")},
@@ -1659,14 +897,7 @@ def test_evolve_cols_allowlist_keeps_helpers_join_side(spark, tmp_path):
 
 def test_evolve_cols_validation(spark, tmp_path):
     """evolve_cols must name real updates columns and requires
-    evolve_schema=True; a Delta-looking target refuses the evolution
-    path loudly instead of silently dropping it (ADVICE r9)."""
-    import os
-
-    import pytest
-
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+    evolve_schema=True."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(1, 1)], "k long, v long")
     U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
@@ -1682,24 +913,15 @@ def test_evolve_cols_validation(spark, tmp_path):
             set_exprs={"v": F.col("u.v")},
             evolve_schema=True, evolve_cols=["venue"],
         )
-    if U._HAS_DELTA:  # pragma: no cover - container has no delta
-        delta_target = str(tmp_path / "d")
-        os.makedirs(os.path.join(delta_target, "_delta_log"))
-        with pytest.raises(NotImplementedError):
-            U.merge_into_parquet(
-                spark, delta_target, updates, key="k",
-                set_exprs={"v": F.col("u.v")}, evolve_schema=True,
-            )
+    assert DL.delta_versions(target) == [0]
 
 
 def test_evolved_col_coalesce_applies_in_every_batch(spark, tmp_path):
-    """ADVICE r9 (streaming_schema_drift): the coalesce(u.c, t.c)
-    set_exprs idiom must apply the evolved column in the WIDENING batch
-    (t.c is a typed-null pad) AND in every later batch — a key first
-    touched by a post-widening batch still gets its value, and a later
-    batch with a null update value preserves the stored one."""
-    from financial_arbitrage_data_pipeline_spark.operators import upsert as U
-
+    """streaming_schema_drift's idiom: the coalesce(u.c, t.c) set_exprs
+    must apply the evolved column in the WIDENING batch (t.c is a
+    typed-null pad) AND in every later batch — a key first touched by a
+    post-widening batch still gets its value, and a later batch with a
+    null update value preserves the stored one."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(i, 0) for i in range(6)], "k long, n long")
     U.create_bucketed_table(spark, target, base, "k", n_buckets=2)
@@ -1733,3 +955,79 @@ def test_evolved_col_coalesce_applies_in_every_batch(spark, tmp_path):
     assert got[2] == (1, "iex")
     assert got[7] == (1, "kalshi")
     assert got[0] == (0, None)
+
+
+# ---------------------------------------------------------------------------
+# Re-bucketing
+# ---------------------------------------------------------------------------
+def test_rebucket_preserves_data_and_changes_modulus(spark, tmp_path):
+    """rebucket_merge_table: one commit; data identical, new modulus
+    effective (every file's bucket matches pmod(xxhash64(key), new_n)),
+    the applied batch id carried over (it lives in the log), as-of
+    reads from before the rebucket still match, and merges after it
+    prune at the new granularity."""
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame([(i, i * 10) for i in range(50)], "k long, v long")
+    U.create_bucketed_table(spark, target, base, "k", n_buckets=4)
+    U.merge_into_parquet(
+        spark, target, spark.createDataFrame([(5, 1)], "k long, dv long"),
+        "k", {"v": F.col("t.v") + F.col("u.dv")}, applied_batch_id=7,
+    )
+    before = {v: _snap(spark, target) for v in (1,)}
+    v0 = {r.k: r.v for r in U.read_merge_table_asof(spark, target, 0).collect()}
+
+    U.rebucket_merge_table(spark, target, "k", n_buckets=16)
+
+    assert DL.delta_versions(target) == [0, 1, 2]
+    state = DL.replay_state(spark, target)
+    assert DL.bucket_spec(state.metadata) == ("k", 16)
+    assert DL.last_txn_version(spark, target, U._APPLIED_BATCH_APP) == 7
+    assert _snap(spark, target) == before[1]
+    full = DL.read_delta_table(spark, target)
+    mism = full.filter(F.col("__bucket__") != DL.bucket_of(F.col("k"), 16))
+    assert mism.count() == 0
+    assert {r.k: r.v for r in U.read_merge_table_asof(spark, target, 0).collect()} == v0
+    assert {r.k: r.v for r in U.read_merge_table_asof(spark, target, 1).collect()} == before[1]
+
+    updates = spark.createDataFrame([(3, 999)], "k long, v long")
+    U.merge_into_parquet(spark, target, updates, "k", {"v": F.col("u.v")})
+    got = _snap(spark, target)
+    assert got[3] == 999 and got[4] == 40
+    metrics = _merge_metrics(target, 3)
+    assert metrics["pruneMode"] == "bucket" and metrics["numTargetFilesScanned"] == 1
+
+
+def test_rebucket_rejects_unbucketed_and_concurrent_writer(spark, tmp_path, monkeypatch):
+    """Re-bucketing refuses a table that is not a bucketed merge table,
+    and refuses to commit over a merge that committed while it was
+    rewriting (DeltaCommitConflict; its staged files are removed and the
+    merge is kept)."""
+    plain = str(tmp_path / "plain")
+    DL.create_delta_table(spark, plain, spark.createDataFrame([(1, 1)], "k long, v long"))
+    with pytest.raises(ValueError, match="not a bucketed merge table"):
+        U.rebucket_merge_table(spark, plain, "k", 8)
+
+    target = str(tmp_path / "t")
+    U.create_bucketed_table(
+        spark, target, spark.createDataFrame([(1, 1), (2, 2)], "k long, v long"), "k", n_buckets=2,
+    )
+    real = DL._materialize_files
+    raced = []
+
+    def merge_meanwhile(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:  # a merge commits while the rebucket is staged
+            raced.append(True)
+            U.merge_into_parquet(
+                spark, target, spark.createDataFrame([(1, 5)], "k long, v long"),
+                "k", {"v": F.col("u.v")},
+            )
+        return out
+
+    monkeypatch.setattr(DL, "_materialize_files", merge_meanwhile)
+    with pytest.raises(DL.DeltaCommitConflict):
+        U.rebucket_merge_table(spark, target, "k", 8)
+    monkeypatch.setattr(DL, "_materialize_files", real)
+    assert DL.bucket_spec(DL.replay_state(spark, target).metadata) == ("k", 2)
+    assert _snap(spark, target) == {1: 5, 2: 2}
+    assert _parquet_on_disk(target) <= _logged_files(spark, target)
