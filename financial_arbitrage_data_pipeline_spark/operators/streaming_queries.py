@@ -233,9 +233,9 @@ WHERE (yes_ok OR no_ok)
 )
 def streaming_arbitrage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The continuous scan run as a real stream: replay → enrich → quotes
-    → broadcast pair join → applyInPandasWithState latest-per-key fold
-    with the freshness gate → per-batch decision emissions → last
-    emission per pair. Because the fold is by (event_time, event_id), the
+    → broadcast pair join → latest-per-key streaming aggregation
+    (max(struct) per venue) → freshness-gated decision → per-batch
+    emissions → last emission per pair. Because the fold is by (event_time, event_id), the
     final per-pair state — and therefore this result — is independent of
     how the replay is chunked into micro-batches; the oracle is the
     equivalent one-shot SQL over the same input."""

@@ -149,11 +149,15 @@ def winnow_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= _MAX_DF)
         .select("h")
     )
-    postings = postings.join(rare, "h")
+    # Both joins pinned SHUFFLE_HASH like every other O(docs) join side
+    # (SCALE.md §39): the rare-hash set and the posting list grow with
+    # the corpus, and a size estimate under the broadcast threshold
+    # collects them through the driver — the sf1 broadcast OOM class.
+    postings = postings.join(rare.hint("shuffle_hash"), "h")
     a = postings.select(F.col("doc_id").alias("doc_a"), "h")
     b = postings.select(F.col("doc_id").alias("doc_b"), "h")
     return (
-        a.join(b, "h")
+        a.join(b.hint("shuffle_hash"), "h")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared_fps"))

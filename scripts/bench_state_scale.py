@@ -2,9 +2,10 @@
 """State-store SCALE proof for the T3 latest-per-key lane: the committed
 latency bench measured only sf0.1's ~1.5k key cardinality. This bench
 replays the REAL lane (quotes → broadcast pair join →
-`scan.opportunity_stream`, the applyInPandasWithState latest-per-key
-scan) on the RocksDB state store provider at 1× / 10× / 100× the sf0.1
-key count (100× = sf10's cardinality) and records, per scale point:
+`scan.opportunity_stream`, the native streaming-aggregation
+latest-per-key scan) on the RocksDB state store provider at 1× / 10× /
+100× the sf0.1 key count (100× = sf10's cardinality) and records, per
+scale point:
 
 - per-batch addBatch latency (p50 over the availableNow replay),
 - state size from Spark's own stateOperators metrics (numRowsTotal +
@@ -162,7 +163,7 @@ def main() -> int:
     with open(art, encoding="utf-8") as fh:
         data = json.load(fh)
     data["state_scale"] = {
-        "lane": "opportunity_stream (applyInPandasWithState on RocksDB, latest-per-key)",
+        "lane": "opportunity_stream (streaming max(struct) aggregation on RocksDB, latest-per-key)",
         "rows_per_key": rows_per_key,
         "rows": rows,
         "note": (

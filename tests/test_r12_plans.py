@@ -74,12 +74,18 @@ def test_kalshi_family_parses_snapshot_once(name, spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name", ["minhash_lsh_dedup", "simhash_dedup", "minhash_estimate_quality"]
+    "name",
+    [
+        "minhash_lsh_dedup",
+        "simhash_dedup",
+        "minhash_estimate_quality",
+        "winnow_match_pairs",
+    ],
 )
 def test_dedup_band_self_joins_never_broadcast(name, spark, sf_dir):
     # every join in these plans has an O(docs) build side (bands/pairs
-    # tables, 4 rows per doc) — r11's sf1 OOM class; all pinned
-    # SHUFFLE_HASH in r12. No BroadcastHashJoin may appear at all.
+    # tables, 4 rows per doc; winnowing postings) — r11's sf1 OOM class;
+    # all pinned SHUFFLE_HASH. No BroadcastHashJoin may appear at all.
     p = plan_of(spark, name, sf_dir)
     assert "ShuffledHashJoin" in p
     assert "BroadcastHashJoin" not in p, f"{name}: band join broadcast again"

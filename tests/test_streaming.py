@@ -135,6 +135,48 @@ def test_unmapped_pair_never_enters_state(spark, tmp_path):
     assert emissions.count() == 0 and final.count() == 0
 
 
+def _plan_node_names(node) -> list[str]:
+    kids = node.children()
+    return [node.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_node_names(kids.apply(i))
+    ]
+
+
+def test_scan_lane_is_a_native_state_store_aggregation(spark, tmp_path):
+    """The lane's executed plan is an engine streaming aggregation — a
+    StateStoreSave and no Python exec node, so no Python worker runs —
+    and update mode emits exactly one row per pair a batch touches."""
+    qdir = str(tmp_path / "quotes")
+    sink = str(tmp_path / "sink")
+    _write_quote_chunks(
+        qdir,
+        [
+            [(1, "kalshi", 0.45, 0.47, 1_000_000, 1),
+             (2, "kalshi", 0.45, 0.47, 1_000_000, 2)],
+            [(1, "polymarket", 0.40, 0.60, 2_000_000, 3),
+             (1, "polymarket", 0.41, 0.60, 2_500_000, 4)],
+        ],
+    )
+    quotes = (
+        spark.readStream.schema(scan.QUOTE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(qdir)
+    )
+    pairs = spark.createDataFrame([(1,), (2,)], "pair_id long")
+    q = scan.start_scan_lane(
+        scan.opportunity_stream(quotes, pairs), sink, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination()
+    names = _plan_node_names(q._jsq.streamingQuery().lastExecution().executedPlan())
+    assert "StateStoreSave" in names, names
+    python = [n for n in names if "Python" in n or "Pandas" in n or "Arrow" in n]
+    assert not python, names
+    rows = spark.read.parquet(sink).collect()
+    assert sorted((r.batch_id, r.pair_id) for r in rows) == [(0, 1), (0, 2), (1, 1)]
+    (last,) = [r for r in rows if r.batch_id == 1]
+    assert last.has_opp and last.poly_price == 0.41  # the batch's latest quote
+
+
 def test_bifurcation_both_lanes(spark, sf_dir, tmp_path):
     """T4: one replay source feeds the storage lane (partitioned
     market_snapshot table) and the trading lane (stateful scan); both
