@@ -34,7 +34,6 @@ from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
     commit_append,
     create_delta_table,
     delta_versions,
-    last_txn_version,
     read_delta_table,
 )
 from financial_arbitrage_data_pipeline_spark.sources.tables import load_table
@@ -206,18 +205,19 @@ def streaming_delta_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING lane lands in a Delta table with the protocol's
     own exactly-once mechanism: `foreachBatch` stamps every append
     commit with a `txn` action (appId = a stable query id, version =
-    batchId) and consults `last_txn_version` first — the idempotent-
-    writer handshake real Delta streaming sinks use. After the replay
-    completes, the LAST micro-batch is redelivered verbatim (the crash-
-    restart case: the sink's commit raced the checkpoint), and the txn
-    guard turns it into a no-op instead of duplicate rows. The landed
+    batchId), and the append no-ops a batch whose txn is already in the
+    snapshot it would commit on — the idempotent-writer handshake real
+    Delta streaming sinks use. After the replay completes, the LAST
+    micro-batch is redelivered verbatim (the crash-restart case: the
+    sink's commit raced the checkpoint), and the txn guard turns it
+    into a no-op instead of duplicate rows. The landed
     table is then read back through pure log replay and aggregated; the
     oracle over the ORIGINAL events proves nothing was lost at batch
     boundaries and the redelivered batch landed exactly once.
 
     Scale: each micro-batch is one blind-append commit (O(batch files)
-    metadata, no reconciliation); the txn lookup is a log replay —
-    O(checkpoint interval) JSONs at any commit count."""
+    metadata, no reconciliation); the txn lookup rides the commit's own
+    log replay — O(checkpoint interval) JSONs at any commit count."""
     from financial_arbitrage_data_pipeline_spark.operators.streaming_queries import (
         _replay,
         _workdir,
@@ -237,12 +237,11 @@ def streaming_delta_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if not delta_versions(tdir):
                 create_delta_table(spark, tdir, batch.limit(0))
-            if (last_txn_version(spark, tdir, app_id) or -1) >= batch_id:
-                return  # already committed: redelivery is a no-op
-            commit_append(
+            # None: the txn is already recorded, a redelivery no-op
+            if commit_append(
                 spark, tdir, batch, txn_app_id=app_id, txn_version=batch_id
-            )
-            seen.append((batch_id, batch_df))
+            ) is not None:
+                seen.append((batch_id, batch_df))
 
         q = (
             ingest.replay_stream(spark, replay_dir)

@@ -50,16 +50,15 @@ from ..sources.delta_log import (
     BUCKET_COL,
     BUCKET_COUNT_CONF,
     BUCKET_KEY_CONF,
-    CHECKPOINT_INTERVAL,
-    _commit_rewrite,
+    _commit,
     _read_commit_actions,
+    _rewrite_build,
+    _snapshot_df,
     bucket_of,
     bucket_spec,
     create_delta_table,
-    delta_versions,
     merge_delta_table,
     read_delta_table,
-    replay_state,
 )
 # A merge table's history is its Delta log's: the readable versions and
 # version-based retention are the log's own functions under these names.
@@ -246,36 +245,31 @@ def rebucket_merge_table(
     re-bucketed ones (dataChange=false: same rows, new layout) and
     re-emit metaData with the new key and modulus. Every earlier
     version stays readable from the log, so time travel and the change
-    feed span the rebucket. A writer that commits first makes this
-    raise DeltaCommitConflict (its staged files are removed); re-run it
-    on the new head. Cost is one full-table read+write — the same as
-    Delta/Iceberg OPTIMIZE-style rewrites — after which every MERGE is
-    again proportional to touched buckets at the new granularity."""
+    feed span the rebucket. A writer that commits first makes the
+    rewrite rebuild on the new head, so its update is kept. Cost is one
+    full-table read+write — the same as Delta/Iceberg OPTIMIZE-style
+    rewrites — after which every MERGE is again proportional to touched
+    buckets at the new granularity."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    versions = delta_versions(target_dir)
-    state = replay_state(spark, target_dir) if versions else None
-    if state is None or bucket_spec(state.metadata) is None:
-        raise ValueError(
-            f"{target_dir} is not a bucketed merge table; use create_bucketed_table"
+
+    def build(state, version, token):
+        if bucket_spec(state.metadata) is None:
+            raise ValueError(
+                f"{target_dir} is not a bucketed merge table; use create_bucketed_table"
+            )
+        md = dict(state.metadata)
+        md["configuration"] = dict(
+            md.get("configuration") or {},
+            **{BUCKET_KEY_CONF: key, BUCKET_COUNT_CONF: str(n_buckets)},
         )
-    head = versions[-1]
-    data = read_delta_table(spark, target_dir, version=head).drop(BUCKET_COL)
-    md = dict(state.metadata)
-    md["configuration"] = dict(
-        md.get("configuration") or {},
-        **{BUCKET_KEY_CONF: key, BUCKET_COUNT_CONF: str(n_buckets)},
-    )
-    _commit_rewrite(
-        spark,
-        target_dir,
-        head,
-        state,
-        data.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).repartition(BUCKET_COL),
-        "REBUCKET",
-        CHECKPOINT_INTERVAL,
-        metadata=md,
-    )
+        data = _snapshot_df(spark, target_dir, state).drop(BUCKET_COL)
+        rebucketed = data.withColumn(
+            BUCKET_COL, bucket_of(F.col(key), n_buckets)
+        ).repartition(BUCKET_COL)
+        return _rewrite_build(target_dir, state, rebucketed, version, token, md)
+
+    _commit(spark, target_dir, "REBUCKET", build)
 
 
 def apply_fills(

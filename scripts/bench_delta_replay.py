@@ -81,14 +81,13 @@ def real_tier(spark, commit_counts, interval) -> list[dict]:
                     spark,
                     tdir,
                     orders.filter(F.col("o_orderkey") % n_commits == 0),
-                    checkpoint_interval=cp_interval,
+                    configuration={"delta.checkpointInterval": str(cp_interval)},
                 )
                 for i in range(1, n_commits):
                     commit_append(
                         spark,
                         tdir,
                         orders.filter(F.col("o_orderkey") % n_commits == i),
-                        checkpoint_interval=cp_interval,
                     )
                 dirs[label] = tdir
             walls = {"cp": [], "full": []}

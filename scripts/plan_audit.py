@@ -45,12 +45,10 @@ def audit_merge_lanes(spark) -> list[dict]:
     with the updates, repartitioned by bucket) and (b) the as-of read —
     the two plans bitemporal_ticket_state / ticket_fill_* pay per
     phase. Runs real (tiny) jobs; opt in with --exec-lanes."""
-    import json as _json
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     import financial_arbitrage_data_pipeline_spark.operators.upsert as U
     from financial_arbitrage_data_pipeline_spark.sources import delta_log as DL
@@ -78,17 +76,11 @@ def audit_merge_lanes(spark) -> list[dict]:
         )
         # (a) the rewrite input merge_delta_table materializes
         state = DL.replay_state(spark, tdir)
-        schema = StructType.fromJson(_json.loads(state.metadata["schemaString"]))
-        pcols = state.metadata["partitionColumns"]
-        cand, _ = DL._candidate_merge_paths(spark, tdir, state, "k", updates, pcols, schema)
-        target = DL._read_fileset(
-            spark, tdir, schema, pcols, {p: state.files[p] for p in cand}
+        cand, _ = DL._candidate_merge_paths(spark, state, "k", updates)
+        merged = DL._merge_rewrite(
+            spark, tdir, state, {p: state.files[p] for p in cand},
+            updates, "k", set_exprs, False, [],
         )
-        data_cols = [c for c in schema.names if c != DL.BUCKET_COL]
-        merged = DL._merged_output(target, updates, "k", set_exprs, False, data_cols)
-        merged = merged.withColumn(
-            DL.BUCKET_COL, DL.bucket_of(F.col("k"), 16)
-        ).repartition(DL.BUCKET_COL)
         out.append(("merge_rewrite_input", merged))
         # (b) the as-of read after a committed merge
         U.merge_into_parquet(spark, tdir, updates, key="k", set_exprs=set_exprs)

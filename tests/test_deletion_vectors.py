@@ -133,13 +133,11 @@ def test_delete_from_delta_table_predicate_and_partitioned(spark, tmp_path):
 def test_dv_survives_checkpoint_and_json_pruning(spark, tmp_path):
     td = str(tmp_path / "t")
     DL.create_delta_table(
-        spark, td, spark.range(0, 50).selectExpr("id as k"), checkpoint_interval=2
+        spark, td, spark.range(0, 50).selectExpr("id as k"),
+        configuration={"delta.checkpointInterval": "2"},
     )
     DL.delete_from_delta_table(spark, td, "k % 5 = 0")
-    v = DL.commit_append(
-        spark, td, spark.range(100, 110).selectExpr("id as k"),
-        checkpoint_interval=2,
-    )
+    v = DL.commit_append(spark, td, spark.range(100, 110).selectExpr("id as k"))
     # v2 crossed the interval -> checkpoint; delete the earlier JSONs
     assert DL._latest_checkpoint_at_or_below(td, v) == v
     for ver in DL.delta_versions(td):

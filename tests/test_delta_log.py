@@ -109,12 +109,13 @@ def test_checkpoint_written_and_sufficient(spark, tmp_path):
     and equals the full-history replay."""
     tdir = str(tmp_path / "t")
     df0 = spark.createDataFrame([(0, "a")], "k long, s string")
-    create_delta_table(spark, tdir, df0, checkpoint_interval=5)
+    create_delta_table(
+        spark, tdir, df0, configuration={"delta.checkpointInterval": "5"}
+    )
     for i in range(1, 8):
         commit_append(
             spark, tdir,
             spark.createDataFrame([(i, f"s{i}")], "k long, s string"),
-            checkpoint_interval=5,
         )
     cp = _latest_checkpoint_at_or_below(tdir, 7)
     assert cp == 5
@@ -150,13 +151,12 @@ def test_txn_action_survives_checkpoint_pruning(spark, tmp_path):
         spark,
         tdir,
         spark.createDataFrame([(0,)], "k long"),
-        checkpoint_interval=5,
+        configuration={"delta.checkpointInterval": "5"},
     )
     for i in range(1, 8):
         commit_append(
             spark, tdir,
             spark.createDataFrame([(i,)], "k long"),
-            checkpoint_interval=5,
             txn_app_id="sinkA", txn_version=i,
         )
     assert last_txn_version(spark, tdir, "sinkA") == 7
@@ -304,6 +304,171 @@ def test_commit_conflict_and_loud_guards(spark, tmp_path):
         )
 
 
+# ---------------------------------------------------------------------------
+# Concurrent writers: every writer rebuilds on the head it lost to
+# ---------------------------------------------------------------------------
+def _unreferenced_files(spark, tdir, suffix):
+    """Files on disk with `suffix` that no retained commit references
+    (as a data file, or as the deletion-vector file of an add)."""
+    from financial_arbitrage_data_pipeline_spark.sources import delta_log as DL
+    from financial_arbitrage_data_pipeline_spark.sources.deletion_vectors import (
+        dv_absolute_path,
+    )
+
+    referenced = set()
+    for v in delta_versions(tdir):
+        state = replay_state(spark, tdir, v)
+        for p, add in {**state.files, **state.tombstones}.items():
+            referenced.add(os.path.abspath(os.path.join(tdir, DL._decode_path(p))))
+            if add.get("deletionVector"):
+                referenced.add(os.path.abspath(dv_absolute_path(tdir, add["deletionVector"])))
+    on_disk = set()
+    for root, dirs, files in os.walk(tdir):
+        dirs[:] = [d for d in dirs if d != "_delta_log"]
+        on_disk |= {os.path.abspath(os.path.join(root, f)) for f in files if f.endswith(suffix)}
+    return on_disk - referenced
+
+
+def _rows(spark, tdir):
+    return sorted(tuple(r) for r in read_delta_table(spark, tdir).collect())
+
+
+def test_racing_appends_both_land_exactly_once(spark, tmp_path, monkeypatch):
+    """Two blind appends race for version 1: B commits it while A's
+    files are already staged. A loses the put-if-absent race, deletes
+    its staged files and commits v2 — both batches are present exactly
+    once, neither caller raises, and no file on disk is outside the
+    log (the staged names never alias across attempts)."""
+    from financial_arbitrage_data_pipeline_spark.sources import delta_log as DL
+
+    tdir = str(tmp_path / "t")
+    create_delta_table(spark, tdir, spark.createDataFrame([(0, "seed")], "k long, s string"))
+    a = spark.createDataFrame([(i, "A") for i in (1, 2, 3)], "k long, s string")
+    b = spark.createDataFrame([(i, "B") for i in (100, 101, 102)], "k long, s string")
+
+    real = DL._materialize_files
+    raced = []
+
+    def b_commits_meanwhile(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:
+            raced.append(True)
+            assert commit_append(spark, tdir, b) == 1
+        return out
+
+    monkeypatch.setattr(DL, "_materialize_files", b_commits_meanwhile)
+    assert commit_append(spark, tdir, a) == 2
+    monkeypatch.setattr(DL, "_materialize_files", real)
+
+    assert _rows(spark, tdir) == [
+        (0, "seed"), (1, "A"), (2, "A"), (3, "A"), (100, "B"), (101, "B"), (102, "B")
+    ]
+    assert delta_versions(tdir) == [0, 1, 2]
+    assert not _unreferenced_files(spark, tdir, ".parquet")
+
+
+def test_dv_delete_overlapping_optimize_rebuilds_on_the_compacted_head(
+    spark, tmp_path, monkeypatch
+):
+    """A DELETE whose row scan ran against v0 loses v1 to an OPTIMIZE
+    that compacted the files it marked. It must not commit its DV on
+    top of the compaction (that re-adds the compacted-away file and
+    duplicates rows): it deletes its DV file and re-runs on the
+    compacted head."""
+    from financial_arbitrage_data_pipeline_spark.sources import deletion_vectors as DVM
+    from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
+        delete_from_delta_table,
+        optimize_compact,
+    )
+
+    tdir = str(tmp_path / "t")
+    create_delta_table(spark, tdir, spark.range(0, 10, numPartitions=2).selectExpr("id as k"))
+    real = DVM.write_dv_file
+    raced = []
+
+    def optimize_meanwhile(*args, **kwargs):
+        if not raced:
+            raced.append(True)
+            assert optimize_compact(spark, tdir) == 1
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(DVM, "write_dv_file", optimize_meanwhile)
+    assert delete_from_delta_table(spark, tdir, "k = 3") == 2
+    monkeypatch.setattr(DVM, "write_dv_file", real)
+
+    assert _rows(spark, tdir) == [(k,) for k in range(10) if k != 3]
+    assert len(replay_state(spark, tdir).files) == 1  # the compacted file, with its DV
+    assert not _unreferenced_files(spark, tdir, ".bin")
+
+
+def test_txn_append_redelivered_during_the_race_is_a_no_op(spark, tmp_path, monkeypatch):
+    """A zombie sink's append of batch 5 is staged when a failover sink
+    commits batch 5 with the same txn appId. The zombie loses the
+    version race, finds the txn recorded on the new head and returns
+    None — the batch lands once, and the zombie's files are gone."""
+    from financial_arbitrage_data_pipeline_spark.sources import delta_log as DL
+
+    tdir = str(tmp_path / "t")
+    create_delta_table(spark, tdir, spark.createDataFrame([(0, "seed")], "k long, s string"))
+    batch = spark.createDataFrame([(7, "x"), (8, "y")], "k long, s string")
+
+    real = DL._materialize_files
+    raced = []
+
+    def failover_commits_first(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not raced:
+            raced.append(True)
+            assert commit_append(spark, tdir, batch, txn_app_id="sink", txn_version=5) == 1
+        return out
+
+    monkeypatch.setattr(DL, "_materialize_files", failover_commits_first)
+    assert commit_append(spark, tdir, batch, txn_app_id="sink", txn_version=5) is None
+    monkeypatch.setattr(DL, "_materialize_files", real)
+
+    assert _rows(spark, tdir) == [(0, "seed"), (7, "x"), (8, "y")]
+    assert delta_versions(tdir) == [0, 1]
+    assert DL.last_txn_version(spark, tdir, "sink") == 5
+    assert not _unreferenced_files(spark, tdir, ".parquet")
+
+
+def test_concurrent_appends_from_threads_all_land_once(spark, tmp_path):
+    """Stress: six appending threads (more than the cores of a small
+    box) against one table, with a short interpreter switch interval.
+    Every writer commits its own version (none gives up: each lost race
+    is another writer's commit, so a writer loses at most five, fewer
+    than COMMIT_ATTEMPTS), every row lands exactly once, and no staged
+    file or commit temp file survives outside the log."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from financial_arbitrage_data_pipeline_spark.sources.delta_log import COMMIT_ATTEMPTS
+
+    tdir = str(tmp_path / "t")
+    create_delta_table(spark, tdir, spark.createDataFrame([(0, 0)], "w long, k long"))
+    n_writers = 6
+    assert n_writers <= COMMIT_ATTEMPTS
+
+    def append(w):
+        rows = [(w, k) for k in range(3)]
+        return commit_append(spark, tdir, spark.createDataFrame(rows, "w long, k long"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(n_writers) as pool:
+            futures = [pool.submit(append, w) for w in range(1, n_writers + 1)]
+            versions = sorted(f.result(timeout=600) for f in futures)
+    finally:
+        sys.setswitchinterval(old)
+    assert versions == list(range(1, n_writers + 1))
+    assert _rows(spark, tdir) == [(0, 0)] + [
+        (w, k) for w in range(1, n_writers + 1) for k in range(3)
+    ]
+    assert not _unreferenced_files(spark, tdir, ".parquet")
+    assert not [f for f in os.listdir(os.path.join(tdir, "_delta_log")) if ".tmp." in f]
+
+
 @pytest.mark.parametrize("seed", range(6))
 def test_model_fuzz_lifecycle(spark, tmp_path, seed):
     """Model-based fuzz: a random sequence of append/optimize/vacuum
@@ -337,7 +502,7 @@ def test_model_fuzz_lifecycle(spark, tmp_path, seed):
         spark,
         tdir,
         spark.createDataFrame(rows, "k long, v long"),
-        checkpoint_interval=interval,
+        configuration={"delta.checkpointInterval": str(interval)},
     )
     model += rows
     history[0] = list(model)
@@ -349,17 +514,13 @@ def test_model_fuzz_lifecycle(spark, tmp_path, seed):
                 spark,
                 tdir,
                 spark.createDataFrame(rows, "k long, v long"),
-                checkpoint_interval=interval,
                 txn_app_id="fz",
                 txn_version=step,
             )
             model += rows
             history[ver] = list(model)
         elif op < 0.8:
-            ver = optimize_compact(
-                spark, tdir, target_files=rng.choice([1, 2]),
-                checkpoint_interval=interval,
-            )
+            ver = optimize_compact(spark, tdir, target_files=rng.choice([1, 2]))
             history[ver] = list(model)
         else:
             vacuum_delta(spark, tdir, retention_ms=0)

@@ -31,13 +31,15 @@ from financial_arbitrage_data_pipeline_spark.sources.delta_log import (
 )
 
 
-def _seed(spark, td, n=100, files=4):
+def _seed(spark, td, n=100, files=4, configuration=None):
     df = spark.range(0, n).select(
         F.col("id").alias("k"),
         (F.col("id") * 10).alias("v"),
         F.lit("pending").alias("status"),
     )
-    create_delta_table(spark, str(td), df.repartitionByRange(files, "k"))
+    create_delta_table(
+        spark, str(td), df.repartitionByRange(files, "k"), configuration=configuration
+    )
 
 
 def test_delta_merge_semantics(spark, tmp_path):
@@ -255,15 +257,14 @@ def test_checkpoint_carries_tombstones_for_vacuum(spark, tmp_path):
     — after pre-checkpoint JSON commits are deleted, VACUUM still
     reclaims files tombstoned before the checkpoint."""
     td = tmp_path / "t"
-    _seed(spark, td, n=100, files=2)
+    _seed(spark, td, n=100, files=2, configuration={"delta.checkpointInterval": "2"})
     # two merges rewrite files (removes at v1, v2); checkpoint at v2
     for i, ver in ((1, 1), (2, 2)):
         ups = spark.range(0, 100).select(
             F.col("id").alias("k"), F.lit(i).cast("long").alias("dv")
         )
         got = merge_delta_table(
-            spark, str(td), ups, "k", {"v": F.col("t.v") + F.col("u.dv")},
-            checkpoint_interval=2,
+            spark, str(td), ups, "k", {"v": F.col("t.v") + F.col("u.dv")}
         )
         assert got == ver
     assert os.path.exists(dl._checkpoint_path(str(td), 2))

@@ -998,10 +998,11 @@ def test_rebucket_preserves_data_and_changes_modulus(spark, tmp_path):
 
 
 def test_rebucket_rejects_unbucketed_and_concurrent_writer(spark, tmp_path, monkeypatch):
-    """Re-bucketing refuses a table that is not a bucketed merge table,
-    and refuses to commit over a merge that committed while it was
-    rewriting (DeltaCommitConflict; its staged files are removed and the
-    merge is kept)."""
+    """Re-bucketing refuses a table that is not a bucketed merge table.
+    A merge that commits while the rebucket is rewriting makes the
+    rebucket lose the version race, remove its staged files and rebuild
+    on the new head: the merge's update is kept and the new modulus
+    lands."""
     plain = str(tmp_path / "plain")
     DL.create_delta_table(spark, plain, spark.createDataFrame([(1, 1)], "k long, v long"))
     with pytest.raises(ValueError, match="not a bucketed merge table"):
@@ -1025,9 +1026,9 @@ def test_rebucket_rejects_unbucketed_and_concurrent_writer(spark, tmp_path, monk
         return out
 
     monkeypatch.setattr(DL, "_materialize_files", merge_meanwhile)
-    with pytest.raises(DL.DeltaCommitConflict):
-        U.rebucket_merge_table(spark, target, "k", 8)
+    U.rebucket_merge_table(spark, target, "k", 8)
     monkeypatch.setattr(DL, "_materialize_files", real)
-    assert DL.bucket_spec(DL.replay_state(spark, target).metadata) == ("k", 2)
+    assert DL.delta_versions(target) == [0, 1, 2]  # merge v1, rebucket v2
+    assert DL.bucket_spec(DL.replay_state(spark, target).metadata) == ("k", 8)
     assert _snap(spark, target) == {1: 5, 2: 2}
     assert _parquet_on_disk(target) <= _logged_files(spark, target)
