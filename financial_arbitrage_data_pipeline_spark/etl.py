@@ -16,10 +16,24 @@ Reference signatures being reproduced:
   timestamp tz-converted to America/Chicago (`etl/query.py:107,178`).
 
 The engine form: `ticker_data()` returns the DataFrame (composable,
-collect-free); `get_ticker_data()` is the thin pandas-presentation
-wrapper matching the reference's return type. Filters land on the
-snapshot scan (partition pruning on source/ticker when the table is
-partitioned as ingest.start_storage_lane writes it).
+collect-free, globally sorted by `orderBy("ts")`); `get_ticker_data()`
+is the thin pandas-presentation wrapper matching the reference's return
+type. The wrapper collects the UNSORTED series and sorts the pandas
+frame on the driver (stable, on `ts`): the result is whole on the driver
+anyway, and a Spark range sort would add a sampling job that re-scans
+the snapshots and re-parses every JSON book, plus a shuffle.
+`pair_history()`/`get_pair_history()` split the same way on
+`bucket_us`. Filters land on the snapshot scan: on the table
+ingest.start_storage_lane writes (partitioned by `source` only), the
+source predicate prunes partitions and the ticker predicate is a pushed
+row filter.
+
+The venue normalization, the `period` downsample aggregates and
+market.margin_buckets are built as SQL expression strings (the same
+trees as the operators/orderbook.py Column helpers), so a request costs
+a few py4j round trips per projection instead of one per Column node.
+Caller-supplied values (ticker, exchange, dates, period, pair key) stay
+Column literals or are `int()`-checked; none is spliced into SQL text.
 """
 
 from __future__ import annotations
@@ -27,10 +41,10 @@ from __future__ import annotations
 from datetime import datetime
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators import orderbook as ob
+from .schemas import KALSHI_BOOK, POLYMARKET_BOOK
 from .sources.tables import load_table
 
 CHICAGO = "America/Chicago"
@@ -91,8 +105,10 @@ def build_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def available_tickers(snapshots: DataFrame, source: str | None = None) -> DataFrame:
     """Distinct tickers per source (`etl/query.py:22-75`, Flux
-    `unique(column:"ticker")`). On the partitioned snapshot table this is
-    metadata-cheap: distinct over the two partition columns."""
+    `unique(column:"ticker")`). Not metadata-only: on the snapshot table
+    (partitioned by `source` only) it is a scan of the `ticker` column,
+    pruned to one source partition when `source` is given, plus one
+    shuffle for the distinct — two jobs per collect. Unsorted."""
     df = snapshots.select("ticker", "source")
     if source is not None:
         df = df.filter(F.col("source") == source)
@@ -103,24 +119,73 @@ def available_tickers(snapshots: DataFrame, source: str | None = None) -> DataFr
 # get_ticker_data (§3.4)
 # ---------------------------------------------------------------------------
 
+_KALSHI_BOOK_DDL = KALSHI_BOOK.simpleString()
+_POLYMARKET_BOOK_DDL = POLYMARKET_BOOK.simpleString()
 
-def _normalized_prices(source: str) -> list[Column]:
-    """Venue-specific yes/no normalization from the parsed book."""
+
+def _normalized_prices(source: str) -> list[str]:
+    """Venue-specific yes/no normalization from the parsed book, as expr
+    strings with the trees of the orderbook.py helpers: Kalshi is
+    parse_kalshi_book → best_bid_cents → cents_to_dollars → yes_to_no;
+    Polymarket is parse_polymarket_book → poly_midpoint → yes_to_no →
+    direction_swap. One py4j round trip per column."""
     if source == "kalshi":
-        book = ob.parse_kalshi_book("full_orderbook")
-        yes = ob.cents_to_dollars(ob.best_bid_cents(book.getField("yes")))
-        return [yes.alias("yes_price"), ob.yes_to_no(yes).alias("no_price")]
-    book = ob.parse_polymarket_book("full_orderbook").getField("orderbook")
-    bids, asks = book.getField("bids"), book.getField("asks")
+        book = f"from_json(full_orderbook, '{_KALSHI_BOOK_DDL}')"
+        yes = f"CAST(array_max(transform({book}.yes, x -> x[0])) AS DOUBLE) / 100.0D"
+        return [f"{yes} AS yes_price", f"1.0D - ({yes}) AS no_price"]
+    book = f"from_json(full_orderbook, '{_POLYMARKET_BOOK_DDL}').orderbook"
     # yes_mid = midpoint of best bid / best ask (P4), no = 1 - yes (P6,
     # `etl/query.py:220`), orientation swap at yes_mid > 0.5 (P7)
-    yes_mid = ob.poly_midpoint(bids, asks)
-    no_mid = ob.yes_to_no(yes_mid)
-    swapped = ob.direction_swap(yes_mid, no_mid)
-    return [
-        swapped.getField("yes_price").alias("yes_price"),
-        swapped.getField("no_price").alias("no_price"),
-    ]
+    yes_mid = (
+        f"(element_at({book}.bids, 1).price + element_at({book}.asks, 1).price) / 2.0D"
+    )
+    no_mid = f"1.0D - ({yes_mid})"
+    swapped = (
+        f"CASE WHEN ({yes_mid}) > 0.5D"
+        f" THEN struct(({no_mid}) AS yes_price, ({yes_mid}) AS no_price)"
+        f" ELSE struct(({yes_mid}) AS yes_price, ({no_mid}) AS no_price) END"
+    )
+    return [f"({swapped}).yes_price AS yes_price", f"({swapped}).no_price AS no_price"]
+
+
+def _ticker_series(
+    snapshots: DataFrame,
+    ticker: str,
+    exchange: str,
+    start_date: datetime | str | None = None,
+    end_date: datetime | str | None = None,
+    start_hours: int = 0,
+    end_hours: int = 0,
+    period: str | None = None,
+) -> DataFrame:
+    """ticker_data without the sort: filter (F3/F4, pushed to the scan) →
+    parse+normalize (P3-P7/P11) → optional tumbling-window last-value
+    downsample (A6). Returns (ts, yes_price, no_price) in no order."""
+    df = snapshots.filter(
+        (F.col("ticker") == ticker) & (F.col("source") == exchange)
+    )
+    if start_date is not None:
+        start = F.lit(start_date).cast("timestamp") + F.expr(
+            f"INTERVAL {int(start_hours)} HOURS"
+        )
+        df = df.filter(F.col("ts") >= start)
+    if end_date is not None:
+        end = F.lit(end_date).cast("timestamp") + F.expr(f"INTERVAL {int(end_hours)} HOURS")
+        df = df.filter(F.col("ts") <= end)
+
+    norm = df.selectExpr("ts", *_normalized_prices(exchange))
+    if period is None:
+        return norm
+    # aggregateWindow(every: period, fn: last, createEmpty: false); the
+    # caller's period string stays a Column literal inside window()
+    return (
+        norm.groupBy(F.window("ts", period).alias("win"))
+        .agg(
+            F.expr("max_by(yes_price, struct(ts AS ts)) AS yes_price"),
+            F.expr("max_by(no_price, struct(ts AS ts)) AS no_price"),
+        )
+        .selectExpr("win.start AS ts", "yes_price", "no_price")
+    )
 
 
 def ticker_data(
@@ -135,33 +200,11 @@ def ticker_data(
 ) -> DataFrame:
     """The composable core of get_ticker_data: filter (F3/F4, pushed to
     the scan) → parse+normalize (P3-P7/P11) → optional tumbling-window
-    last-value downsample (A6) → time sort (W1). Returns
-    (ts, yes_price, no_price)."""
-    df = snapshots.filter(
-        (F.col("ticker") == ticker) & (F.col("source") == exchange)
-    )
-    if start_date is not None:
-        start = F.lit(start_date).cast("timestamp") + F.expr(
-            f"INTERVAL {int(start_hours)} HOURS"
-        )
-        df = df.filter(F.col("ts") >= start)
-    if end_date is not None:
-        end = F.lit(end_date).cast("timestamp") + F.expr(f"INTERVAL {int(end_hours)} HOURS")
-        df = df.filter(F.col("ts") <= end)
-
-    norm = df.select("ts", *_normalized_prices(exchange))
-    if period is not None:
-        # aggregateWindow(every: period, fn: last, createEmpty: false)
-        ordkey = F.struct(F.col("ts").alias("ts"))
-        norm = (
-            norm.groupBy(F.window("ts", period).alias("win"))
-            .agg(
-                F.max_by("yes_price", ordkey).alias("yes_price"),
-                F.max_by("no_price", ordkey).alias("no_price"),
-            )
-            .select(F.col("win.start").alias("ts"), "yes_price", "no_price")
-        )
-    return norm.orderBy("ts")
+    last-value downsample (A6) → time sort (W1), a Spark `orderBy("ts")`.
+    Returns (ts, yes_price, no_price)."""
+    return _ticker_series(
+        snapshots, ticker, exchange, start_date, end_date, start_hours, end_hours, period
+    ).orderBy("ts")
 
 
 def get_ticker_data(
@@ -172,8 +215,12 @@ def get_ticker_data(
 ) -> pd.DataFrame:
     """Reference-shaped result: pandas DataFrame indexed by timestamp in
     America/Chicago (`etl/query.py:178,254-258`). Presentation only —
-    analytical composition should use ticker_data()."""
-    pdf = ticker_data(snapshots, ticker, exchange, **kwargs).toPandas()
+    analytical composition should use ticker_data(). Collects the
+    unsorted series and sorts it on the driver (stable, on `ts`): the
+    same rows in the same order as ticker_data(), one job for a raw
+    series and two for a `period` one."""
+    pdf = _ticker_series(snapshots, ticker, exchange, **kwargs).toPandas()
+    pdf = pdf.sort_values("ts", kind="stable", ignore_index=True)
     pdf["timestamp"] = (
         pdf["ts"].dt.tz_localize("UTC").dt.tz_convert(CHICAGO)
     )
@@ -183,6 +230,28 @@ def get_ticker_data(
 # ---------------------------------------------------------------------------
 # get_pair_history — the cross-venue composition users build by hand
 # ---------------------------------------------------------------------------
+
+
+def _pair_buckets(
+    spark: SparkSession,
+    sf_dir: str,
+    pair_key: int,
+    period_s: int = 3600,
+    start_us: int | None = None,
+    end_us: int | None = None,
+) -> DataFrame:
+    """pair_history without the sort, in no order."""
+    from .operators.market import margin_buckets
+
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") == pair_key)
+    ts_us = F.expr("ts div 1000")
+    if start_us is not None:
+        ev = ev.filter(ts_us >= start_us)
+    if end_us is not None:
+        ev = ev.filter(ts_us <= end_us)
+    return margin_buckets(ev, period_us=int(period_s) * 1_000_000).selectExpr(
+        "bucket_us", "kalshi_yes_bid", "poly_yes", "margin_yes"
+    )
 
 
 def pair_history(
@@ -199,19 +268,10 @@ def pair_history(
     two separate `get_ticker_data` pulls plus pandas (`etl/query.py`
     gives them one venue at a time). Same venue-conditional max_by core
     as the `pair_margin_timeline` query, parameterized and pre-filtered
-    so the pair predicate and time range push to the scan."""
-    from .operators.market import margin_buckets
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") == pair_key)
-    ts_us = F.expr("ts div 1000")
-    if start_us is not None:
-        ev = ev.filter(ts_us >= start_us)
-    if end_us is not None:
-        ev = ev.filter(ts_us <= end_us)
-    return (
-        margin_buckets(ev, period_us=period_s * 1_000_000)
-        .select("bucket_us", "kalshi_yes_bid", "poly_yes", "margin_yes")
-        .orderBy("bucket_us")
+    so the pair predicate and time range push to the scan. Sorted by a
+    Spark `orderBy("bucket_us")`."""
+    return _pair_buckets(spark, sf_dir, pair_key, period_s, start_us, end_us).orderBy(
+        "bucket_us"
     )
 
 
@@ -219,8 +279,11 @@ def get_pair_history(
     spark: SparkSession, sf_dir: str, pair_key: int, **kwargs
 ) -> pd.DataFrame:
     """Reference-shaped presentation of pair_history: pandas indexed by
-    the bucket timestamp in America/Chicago, like get_ticker_data."""
-    pdf = pair_history(spark, sf_dir, pair_key, **kwargs).toPandas()
+    the bucket timestamp in America/Chicago, like get_ticker_data. Sorts
+    the collected buckets on the driver (stable, on `bucket_us`); two
+    jobs per call."""
+    pdf = _pair_buckets(spark, sf_dir, pair_key, **kwargs).toPandas()
+    pdf = pdf.sort_values("bucket_us", kind="stable", ignore_index=True)
     ts = pd.to_datetime(pdf["bucket_us"], unit="us", utc=True)
     pdf["timestamp"] = ts.dt.tz_convert(CHICAGO)
     return pdf.drop(columns=["bucket_us"]).set_index("timestamp")

@@ -566,31 +566,37 @@ def margin_buckets(ev: DataFrame, period_us: int = 3_600_000_000) -> DataFrame:
     pair_margin_timeline query and etl.pair_history: per (pair, bucket),
     the last quote of EACH venue (the same venue-conditional max_by as
     arbitrage_scan, keyed one level finer), buckets where both venues
-    quoted, margin = (k-p)/p. One scan + one shuffle on (pair, bucket)."""
-    cents = F.round(F.col("value") * 100).cast("long")
-    is_kalshi = F.col("event_type").isin("click", "view")
-    ts_us = F.expr("ts div 1000")
-    bucket = ts_us - ts_us % period_us
-    order_key = F.struct(F.col("ts").alias("ts"), F.col("event_id").alias("event_id"))
-    return (
-        ev.groupBy(F.col("user_id").alias("pair_key"), bucket.alias("bucket_us"))
-        .agg(
-            F.max_by(
-                ob.cents_to_dollars(cents % 97 + 1), F.when(is_kalshi, order_key)
-            ).alias("kalshi_yes_bid"),
-            F.max_by(
-                ob.cents_to_dollars(cents % 99 + 1), F.when(~is_kalshi, order_key)
-            ).alias("poly_yes"),
+    quoted, margin = (k-p)/p. One scan + one shuffle on (pair, bucket).
+    Expressions are expr strings (the trees of the orderbook.py
+    cents_to_dollars helper; one py4j round trip per column); the
+    bucket width is `int()`-checked before it enters the text."""
+    p = int(period_us)
+    cents = "CAST(round(value * 100) AS BIGINT)"
+    is_kalshi = "event_type IN ('click', 'view')"
+    order_key = "struct(ts AS ts, event_id AS event_id)"
+
+    def last(price_mod: int, when: str, alias: str) -> Column:
+        return F.expr(
+            f"max_by(CAST({cents} % {price_mod} + 1 AS DOUBLE) / 100.0D,"
+            f" CASE WHEN {when} THEN {order_key} END) AS {alias}"
         )
-        .filter(F.col("kalshi_yes_bid").isNotNull() & F.col("poly_yes").isNotNull())
-        .select(
+
+    return (
+        ev.groupBy(
+            F.expr("user_id AS pair_key"),
+            F.expr(f"(ts div 1000) - (ts div 1000) % {p} AS bucket_us"),
+        )
+        .agg(
+            last(97, is_kalshi, "kalshi_yes_bid"),
+            last(99, f"NOT ({is_kalshi})", "poly_yes"),
+        )
+        .filter("kalshi_yes_bid IS NOT NULL AND poly_yes IS NOT NULL")
+        .selectExpr(
             "pair_key",
             "bucket_us",
             "kalshi_yes_bid",
             "poly_yes",
-            ((F.col("kalshi_yes_bid") - F.col("poly_yes")) / F.col("poly_yes")).alias(
-                "margin_yes"
-            ),
+            "(kalshi_yes_bid - poly_yes) / poly_yes AS margin_yes",
         )
     )
 

@@ -8,12 +8,20 @@ Planning only (no job execution) — safe to run under load; plan shape is
 load-independent.
 
 Usage: python scripts/plan_audit.py [out.json] [--exec-lanes]
+       python scripts/plan_audit.py --capture <suffix> [query ...]
+
+--capture writes each named query's .explain("formatted") to
+plans/<round>/<query>_<suffix>.txt (suffix: 'before' or 'after'; no
+names = the headline set; round dir r13 unless $SPARK_GRAFT_PLANS_ROUND
+names another), stamped with the git SHA of HEAD at capture time, so
+the provenance of a before/after pair is self-evident.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -85,15 +93,34 @@ def audit_merge_lanes(spark) -> list[dict]:
         # (b) the as-of read after a committed merge
         U.merge_into_parquet(spark, tdir, updates, key="k", set_exprs=set_exprs)
         out.append(("asof_read", U.read_merge_table_asof(spark, tdir, 0)))
-        rows = []
-        for name, df in out:
-            p = spark._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                df._jdf.queryExecution(), "formatted"
-            )
-            rows.append(_audit_row(f"__lane__{name}", p))
-        return rows
+        return [_audit_row(f"__lane__{name}", _explain(df)) for name, df in out]
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def capture(spark, sf_dir: str, suffix: str, names: list[str]) -> None:
+    """Write plans/<round>/<name>_<suffix>.txt for each name (default:
+    the headline set), each stamped with the git SHA of HEAD."""
+    names = names or sorted(n for n, s in REGISTRY.items() if s.headline)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out_dir = os.path.join(repo, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13"))
+    os.makedirs(out_dir, exist_ok=True)
+    sha = subprocess.run(
+        ["git", "-C", repo, "rev-parse", "HEAD"], capture_output=True, text=True
+    ).stdout.strip()
+    for name in names:
+        plan = _explain(REGISTRY[name].builder(spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"-- captured at git SHA {sha} ({suffix})\n")
+            fh.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
 
 
 def _audit_row(name: str, p: str) -> dict:
@@ -135,16 +162,17 @@ def main() -> None:
     exec_lanes = "--exec-lanes" in sys.argv[1:]
     out_path = args[0] if args else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if args[:1] == ["--capture"]:
+        suffix, names = args[1], args[2:]
+        capture(get_spark(app_name=f"plan_capture_{suffix}"), sf_dir, suffix, names)
+        return
     spark = get_spark(app_name="plan_audit")
     rows = []
     for name in sorted(REGISTRY):
         if name.startswith(SKIP_PREFIXES) or name in SKIP:
             continue
         try:
-            df = REGISTRY[name].builder(spark, sf_dir)
-            p = spark._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                df._jdf.queryExecution(), "formatted"
-            )
+            p = _explain(REGISTRY[name].builder(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             rows.append({"name": name, "error": str(e)[:200]})
             continue
